@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from vspace_spark.io.tables import load_table
@@ -329,3 +330,95 @@ def test_refine_codebook_improves_centers_and_keeps_contract(spark):
         inertia(fine0),
         inertia(fine1),
     )
+
+
+def test_xxhash_hyperplanes_match_spark(spark):
+    """The driver-side default planes hold the same 64 bits as Spark's
+    xxhash64 table, at ``lsh_topk``'s default 64-d width and twice its
+    default 32 planes."""
+    from vspace_spark.operators.similarity import xxhash_hyperplanes
+
+    want = random_hyperplanes(64, 64, spark).orderBy("bit").collect()
+    assert xxhash_hyperplanes(64, 64) == [r.plane for r in want]
+
+
+@pytest.mark.parametrize("family", ["xxhash", "portable"])
+@pytest.mark.parametrize("bpt,n_tables", [(4, 1), (4, 8), (15, 1), (15, 8)])
+def test_lsh_buckets_match_literal_signature(spark, family, bpt, n_tables):
+    """The folded-literal bucket fold must equal the literal-planes
+    ``lsh_signature`` bit for bit, for both plane families, at one and
+    several tables, and at the 4- and 15-bit widths the incremental
+    leg's auto layout produces."""
+    import numpy as np
+
+    from vspace_spark.operators.similarity import (
+        lsh_buckets,
+        lsh_signature,
+        portable_hyperplanes,
+        xxhash_hyperplanes,
+    )
+
+    dim, bits = 16, bpt * n_tables
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(0, 1, dim)]) for i in range(60)],
+        "vec_id long, embedding array<float>",
+    )
+    if family == "portable":
+        planes = literal = portable_hyperplanes(dim, bits)
+    else:
+        planes = xxhash_hyperplanes(dim, bits)
+        literal = [
+            r.plane
+            for r in random_hyperplanes(dim, bits, spark)
+            .orderBy("bit")
+            .collect()
+        ]
+    rows = emb.select(
+        "vec_id",
+        lsh_buckets(F.col("embedding"), planes, bpt, n_tables).alias("got"),
+        F.array(
+            *[
+                lsh_signature(
+                    F.col("embedding"), literal[t * bpt : (t + 1) * bpt]
+                )
+                for t in range(n_tables)
+            ]
+        ).alias("want"),
+    ).collect()
+    for r in rows:
+        assert [s.tbl for s in r.got] == list(range(n_tables))
+        assert [s.bucket for s in r.got] == r.want, r.vec_id
+
+
+def test_lsh_topk_builds_without_a_job(spark, sf_dir):
+    """Building the query must launch no Spark job: the default planes
+    are aggregated inside the plan, not collected to the driver."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    sc = spark.sparkContext
+    # setJobGroup sets all three; restore them for later tests
+    props = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    prior = {p: sc.getLocalProperty(p) for p in props}
+    sc.setJobGroup("lsh_topk_build", "building lsh_topk")
+    try:
+        lsh_topk(emb.filter(F.col("vec_id") < 10), emb, spark, k=5)
+        jobs = sc.statusTracker().getJobIdsForGroup("lsh_topk_build")
+    finally:
+        for p, v in prior.items():
+            sc.setLocalProperty(p, v)
+    assert jobs == []
+
+
+def test_lsh_topk_wrong_dim_fails(spark, sf_dir):
+    """A ``dim`` that does not match the vectors fails the query
+    instead of padding every dot with nulls (which put every vector in
+    bucket 0 and turned the search into brute force)."""
+    emb = load_table(spark, sf_dir, "embeddings")  # 64-d
+    with pytest.raises(Exception, match="vector size 64 != dim 32"):
+        lsh_topk(
+            emb.filter(F.col("vec_id") < 3), emb, spark, k=5, dim=32
+        ).collect()

@@ -521,6 +521,43 @@ class TestIncrementalPassjoin:
         assert {(r.a, r.b, r.dist) for r in again.collect()} == want
 
 
+def test_has_earlier_needs_every_probe_dir(tmp_path):
+    """The probe runs only when an earlier batch was attempted and
+    EVERY directory it reads exists — a missing sibling (keys, vecs)
+    must not reach the reader as PATH_NOT_FOUND."""
+    from vspace_spark.streaming.incremental import _has_earlier
+
+    idx, vecs = tmp_path / "idx", tmp_path / "vecs"
+    idx.mkdir()
+    assert _has_earlier({0}, 1, (str(idx),))
+    assert not _has_earlier({0}, 1, (str(idx), str(vecs)))
+    assert not _has_earlier({1}, 1, (str(idx),))  # replay of itself
+    assert _has_earlier({0}, 1, ())  # catalog table: ledger only
+
+
+def test_thread_target_falls_back_outside_pinned_mode(spark, monkeypatch):
+    """Outside PySpark's pinned-thread mode ``inheritable_thread_target
+    (spark)`` returns the session itself, and calling that with a
+    target raised TypeError in every driver-thread pool; the helper
+    then runs the target unwrapped."""
+    import py4j.clientserver
+    from pyspark import inheritable_thread_target
+
+    from vspace_spark.streaming.incremental import _thread_target
+
+    def fn():
+        return 7
+
+    assert _thread_target(spark, fn)() == 7  # pinned: wrapped
+
+    class NotPinned:
+        pass
+
+    monkeypatch.setattr(py4j.clientserver, "ClientServer", NotPinned)
+    assert inheritable_thread_target(spark) is spark
+    assert _thread_target(spark, fn) is fn
+
+
 class TestIncrementalEmbedding:
     @pytest.mark.slow  # >20 s (measured r14): driver verify-window budget
     def test_matches_batch_lsh_pairs(self, spark, sf_dir, tmp_path):
@@ -605,15 +642,16 @@ class TestIncrementalEmbedding:
         assert {(r.a, r.b, r.cos) for r in again.collect()} == want
 
     def test_incremental_fold_planes_as_data(self, spark, tmp_path):
-        """The fold lane ships its hyperplanes as DATA (one broadcast
-        row, planes picked with element_at) instead of 2048-node
-        literal trees (r13: Catalyst re-analysis of the literal tree
-        per micro-batch was the dominant per-batch driver cost). The
-        pin: every POSTING the replay persisted — the actual bucket
-        bits the data-path fold computed — must equal the literal-
-        planes ``lsh_signature`` value exactly; element_at yields the
-        same IEEE doubles the literals held and dot()'s sequential
-        fold is the same expression, so any drift is a bug."""
+        """The fold lane ships its hyperplanes as DATA (one json
+        string the optimizer folds into a literal array, via
+        ``lsh_buckets``) instead of 2048-node literal trees (r13:
+        Catalyst re-analysis of the literal tree per micro-batch was
+        the dominant per-batch driver cost). The pin: every POSTING
+        the replay persisted — the actual bucket bits the fold
+        computed — must equal the literal-planes ``lsh_signature``
+        value exactly; the json round trip yields the same IEEE
+        doubles the literals held and dot()'s sequential fold is the
+        same expression, so any drift is a bug."""
         import numpy as np
 
         from vspace_spark.operators.similarity import (

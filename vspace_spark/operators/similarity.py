@@ -77,9 +77,9 @@ def brute_force_topk(
 
 def random_hyperplanes(dim: int, bits: int, spark) -> DataFrame:
     """Deterministic pseudo-random hyperplanes: component (b, i) is
-    derived from xxhash64(b, i) scaled to [-1, 1]. Computed ONCE as a
-    tiny broadcastable table — reproducible across runs and engines
-    (no RNG state)."""
+    derived from xxhash64(b, i) scaled to [-1, 1]. A lazy ``bits``-row
+    table — reproducible across runs (no RNG state); LSH uses its
+    driver-side twin :func:`xxhash_hyperplanes`."""
     rows = spark.range(bits).select(
         F.col("id").cast("int").alias("bit"),
         F.transform(
@@ -92,6 +92,34 @@ def random_hyperplanes(dim: int, bits: int, spark) -> DataFrame:
     return rows
 
 
+def xxhash_hyperplanes(dim: int, bits: int) -> list[list[float]]:
+    """:func:`random_hyperplanes` computed on the driver with no Spark
+    job: Spark's XXH64 of (bigint b, int i), seed 42, as a signed long
+    cast to double / 2^63 — the same 64 bits per component."""
+    m = 2**64 - 1
+    p1, p2, p3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (64 - r))) & m
+
+    def xxh(h: int, v: int, width: int) -> int:  # hashLong 8 / hashInt 4
+        h = (h + 0x27D4EB2F165667C5 + width) & m
+        if width == 8:
+            h ^= rotl(v * p2 & m, 31) * p1 & m
+            h = (rotl(h, 27) * p1 + 0x85EBCA77C2B2AE63) & m
+        else:
+            h = (rotl(h ^ v * p1 & m, 23) * p2 + p3) & m
+        h = (h ^ h >> 33) * p2 & m
+        h = (h ^ h >> 29) * p3 & m
+        h ^= h >> 32
+        return h - (h >> 63 << 64)
+
+    return [
+        [float(xxh(xxh(42, b, 8), i, 4)) / 2**63 for i in range(dim)]
+        for b in range(bits)
+    ]
+
+
 def portable_hyperplanes(
     dim: int, bits: int, salt: str = ""
 ) -> list[list[float]]:
@@ -101,9 +129,10 @@ def portable_hyperplanes(
     mantissa, division by 2^51 is an exponent shift, the final -1
     cannot round), so Python, the JVM, and DuckDB all hold the same
     64 bits — the whole LSH bucket assignment becomes oracle-checkable.
-    Tiny (bits × dim floats), computed driver-side, embedded as
-    literals. ``salt`` draws an independent set from the same scheme
-    (e.g. "c" for the fixed-codebook IVF centroids)."""
+    Tiny (bits × dim floats), computed driver-side; LSH ships them as
+    one folded literal (:func:`lsh_buckets`). ``salt`` draws an
+    independent set from the same scheme (e.g. "c" for the
+    fixed-codebook IVF centroids)."""
     import hashlib
 
     return [
@@ -121,12 +150,51 @@ def portable_hyperplanes(
 
 
 def lsh_signature(vec: F.Column, planes: list[list[float]]) -> F.Column:
-    """Sign-of-dot-product signature as a bigint bucket id (≤ 63 bits)."""
+    """Sign-of-dot-product bigint bucket id (≤ 63 bits) over literal
+    planes: the reference :func:`lsh_buckets` is pinned to."""
     sig = F.lit(0).cast("bigint")
     for j, plane in enumerate(planes):
         d = dot(vec, F.array(*[F.lit(v) for v in plane]))
         sig = sig + F.when(d > 0, F.lit(2**j).cast("bigint")).otherwise(F.lit(0))
     return sig
+
+
+def lsh_buckets(
+    vec: F.Column, planes: list, bits_per_table: int, n_tables: int
+) -> F.Column:
+    """``array<struct<tbl, bucket>>``, one constant-size expression for
+    any layout. The planes ride as ONE json string that the optimizer
+    folds into a literal once: no ``bits × dim``-node literal tree to
+    build, and no cross-joined planes row (copying it per vector nearly
+    doubled the per-row cost, PERF.md).
+    Table ``t`` folds its own slice, highest bit first, with
+    ``acc*2 + (dot(v, p) > 0)``: ``lsh_signature``'s Σ 2^j·bit_j with
+    the same ``dot()``, bit-identical. (Slicing one shared bit array
+    instead recomputes it per table: Catalyst does not share values
+    across lambda bodies.) A vector whose size is not the planes' dim
+    raises — padded null dots would put every vector in bucket 0."""
+    import json
+
+    bpt, dim = bits_per_table, len(planes[0])
+    lit = F.from_json(
+        F.lit(json.dumps([[float(x) for x in p] for p in planes])),
+        "array<array<double>>",
+    )
+    buckets = F.transform(
+        F.sequence(F.lit(0), F.lit(n_tables - 1)),
+        lambda t: F.struct(
+            t.alias("tbl"),
+            F.aggregate(
+                F.reverse(F.slice(lit, t * bpt + 1, F.lit(bpt))),
+                F.lit(0).cast("bigint"),
+                lambda acc, p: acc * 2
+                + F.when(dot(vec, p) > 0, F.lit(1)).otherwise(F.lit(0)),
+            ).alias("bucket"),
+        ),
+    )
+    n = F.array_size(vec)  # null for a null vector, which stays legal
+    bad = F.format_string(f"lsh: vector size %d != dim {dim}", n)
+    return F.when(n != dim, F.raise_error(bad)).otherwise(buckets)
 
 
 def _cell_dist_structs(
@@ -609,7 +677,10 @@ def lsh_topk(
 
     ``planes`` overrides the hyperplane source (pass
     :func:`portable_hyperplanes` for the md5-derived oracle-checkable
-    set); the default stays the xxhash64-derived table.
+    set, whose width is then the dim); the default is the
+    xxhash64-derived set at ``dim`` (:func:`xxhash_hyperplanes`). Both
+    sides share one :func:`lsh_buckets` column, so building the query
+    runs no job; vectors of another size fail.
 
     At 100 TB the corpus side is hashed once (narrow projection) and the
     exploded (table, bucket) index can be persisted/partitioned; only
@@ -618,25 +689,10 @@ def lsh_topk(
     Returns ``[query_id, neighbor_id, rank]`` (rank within candidates).
     """
     if planes is None:
-        planes = [
-            r["plane"]
-            for r in random_hyperplanes(dim, bits * tables, spark)
-            .orderBy("bit")
-            .collect()  # bounded-collect: bits*tables hyperplane rows
-        ]
-
-    def signatures(vec: F.Column) -> F.Column:
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("table"),
-                    lsh_signature(
-                        vec, planes[t * bits : (t + 1) * bits]
-                    ).alias("bucket"),
-                )
-                for t in range(tables)
-            ]
-        )
+        planes = xxhash_hyperplanes(dim, bits * tables)
+    buckets = F.explode(
+        lsh_buckets(F.col(vec_col), planes, bits, tables)
+    ).alias("sig")
 
     # norms hoisted out of the candidate loop (r14, same bit-identical
     # move as brute_force_topk) — computed BEFORE the table explode,
@@ -649,16 +705,16 @@ def lsh_topk(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
         l2_norm(F.col(vec_col)).alias("_cn"),
-        F.explode(signatures(F.col(vec_col))).alias("sig"),
-    ).select("neighbor_id", "_cv", "_cn", "sig.table", "sig.bucket")
+        buckets,
+    ).select("neighbor_id", "_cv", "_cn", "sig.tbl", "sig.bucket")
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
         l2_norm(F.col(vec_col)).alias("_qn"),
-        F.explode(signatures(F.col(vec_col))).alias("sig"),
-    ).select("query_id", "_qv", "_qn", "sig.table", "sig.bucket")
+        buckets,
+    ).select("query_id", "_qv", "_qn", "sig.tbl", "sig.bucket")
     candidates = (
-        c.join(F.broadcast(q), ["table", "bucket"])
+        c.join(F.broadcast(q), ["tbl", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "_qv", "_cv", "_qn", "_cn")
         .dropDuplicates(["query_id", "neighbor_id"])

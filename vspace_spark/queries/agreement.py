@@ -259,7 +259,7 @@ def agree_dedup_semantic_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same shape as agree_incr_embedding_arrow's replay overlap).
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    from vspace_spark.streaming.incremental import _thread_target
 
     def _lane(engine: str) -> DataFrame:
         out = persist_shared(
@@ -273,10 +273,10 @@ def agree_dedup_semantic_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_fold = pool.submit(
-            inheritable_thread_target(spark)(lambda: _lane("fold"))
+            _thread_target(spark, lambda: _lane("fold"))
         )
         f_arrow = pool.submit(
-            inheritable_thread_target(spark)(lambda: _lane("arrow"))
+            _thread_target(spark, lambda: _lane("arrow"))
         )
         fold_out, arrow_out = f_fold.result(), f_arrow.result()
     diff = persist_shared(_bag_diff(fold_out, arrow_out), KNOWN_SMALL)
@@ -460,7 +460,7 @@ def agree_incr_embedding_arrow(
     # descriptions/groups are thread-local, so the UI stays legible.
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    from vspace_spark.streaming.incremental import _thread_target
 
     def _lane(tag: str, engine: str) -> DataFrame:
         return incremental_embedding_dedup(
@@ -471,10 +471,10 @@ def agree_incr_embedding_arrow(
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_fold = pool.submit(
-            inheritable_thread_target(spark)(lambda: _lane("f", "fold"))
+            _thread_target(spark, lambda: _lane("f", "fold"))
         )
         f_arrow = pool.submit(
-            inheritable_thread_target(spark)(lambda: _lane("a", "arrow"))
+            _thread_target(spark, lambda: _lane("a", "arrow"))
         )
         fold, arrow = f_fold.result(), f_arrow.result()
     # persisted like the semantic gate's diff (ADVICE r13): without it

@@ -171,34 +171,22 @@ def stream_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import types as T
 
-    from vspace_spark.functions.vectors import cosine_similarity
     from vspace_spark.operators.similarity import (
-        lsh_signature,
+        lsh_buckets,
         portable_hyperplanes,
     )
     from vspace_spark.streaming.events import run_stream_to_memory
 
-    planes = portable_hyperplanes(64, 32)
-    bits, tables = 4, 8
+    # one bucket column for both sides
+    sigs = F.explode(
+        lsh_buckets(F.col("embedding"), portable_hyperplanes(64, 32), 4, 8)
+    )
 
     def with_sigs(df, id_alias, vec_alias):
         return df.select(
             F.col("vec_id").alias(id_alias),
             F.col("embedding").alias(vec_alias),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("tbl"),
-                            lsh_signature(
-                                F.col("embedding"),
-                                planes[t * bits : (t + 1) * bits],
-                            ).alias("bucket"),
-                        )
-                        for t in range(tables)
-                    ]
-                )
-            ).alias("s"),
+            sigs.alias("s"),
         ).select(id_alias, vec_alias, "s.tbl", "s.bucket")
 
     # Static-side rebalance (guide §2 — r13): the single-file scan is

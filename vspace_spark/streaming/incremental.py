@@ -75,6 +75,35 @@ def _auto_lsh_layout(n: int, bits: int) -> tuple[int, int]:
     return bpt * n_tables, bpt
 
 
+def _thread_target(spark: SparkSession, fn):
+    """``fn`` for a driver pool thread, inheriting the caller's job
+    properties in PySpark's pinned-thread mode. Outside that mode
+    ``inheritable_thread_target(spark)`` returns the (uncallable)
+    session and no wrapping is needed, so ``fn`` runs as is."""
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)
+
+
+def _submit_append(pool, spark: SparkSession, df, path: str, batch_id):
+    """Future of one contract write run on a driver pool thread, so
+    a micro-batch's independent writes overlap."""
+
+    def write():
+        return append_index_batch(spark, df, path, batch_id, fmt="parquet")
+
+    return pool.submit(_thread_target(spark, write))
+
+
+def _has_earlier(attempted: set, batch_id: int, dirs) -> bool:
+    """Probe the index only if an earlier batch was attempted AND every
+    directory the probe reads exists (empty batches write no files)."""
+    return any(i < batch_id for i in attempted) and all(
+        os.path.isdir(d) for d in dirs
+    )
+
+
 def _minhash_sig_plan(
     id_col: str,
     text_col: str,
@@ -419,8 +448,6 @@ def incremental_minhash_dedup(
     # starts batch N+1 only after process(N) returns.
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
-
     pool = ThreadPoolExecutor(max_workers=1)
 
     def process(batch: DataFrame, batch_id: int) -> None:
@@ -477,12 +504,11 @@ def incremental_minhash_dedup(
         # list produced.
         # the per-run ledger answers "are there earlier partitions?"
         # for BOTH layouts (r14 — the run starts from an empty
-        # index/table, so within-run state is authoritative); the
-        # isdir guard covers the all-earlier-batches-empty edge where
-        # no partition was ever written (an empty batch's dynamic
-        # overwrite emits no files, so the directory may not exist)
-        has_earlier = any(i < batch_id for i in attempted) and (
-            index_layout == "bucketed" or os.path.isdir(index_dir)
+        # index/table, so within-run state is authoritative)
+        has_earlier = _has_earlier(
+            attempted,
+            batch_id,
+            () if index_layout == "bucketed" else (index_dir,),
         )
         if has_earlier:
             if index_layout == "bucketed":
@@ -541,13 +567,7 @@ def incremental_minhash_dedup(
         # listing. bb is persisted: whichever job touches a partition
         # first computes it, the other blocks on the cache lock and
         # reads it.
-        f_pairs = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: append_index_batch(
-                    spark, flagged, out_dir, batch_id, fmt="parquet"
-                )
-            )
-        )
+        f_pairs = _submit_append(pool, spark, flagged, out_dir, batch_id)
         try:
             if index_layout == "bucketed":
                 # only an engine-level replay of an id this run already
@@ -706,7 +726,6 @@ def incremental_passjoin_dedup(
     # pool (r14, same rationale as the minhash leg)
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
     from pyspark.sql import types as T
 
     _idt = schema["doc_id"].dataType
@@ -733,9 +752,7 @@ def incremental_passjoin_dedup(
         keyed = batch.select(F.col("doc_id").alias("_id"), "_k").persist()
         keyed.count()  # bounded work: one micro-batch
         intra = _hot_pairs_segment(keyed, [], k)
-        has_earlier = any(
-            i < batch_id for i in attempted
-        ) and os.path.isdir(seg_dir)
+        has_earlier = _has_earlier(attempted, batch_id, (seg_dir, keys_dir))
         pairs = intra
         if has_earlier:
             seg_old = (
@@ -812,23 +829,9 @@ def incremental_passjoin_dedup(
         # partitions of seg/keys — overlap them from driver threads
         # (guide §2.6 — r14, see the minhash leg)
         attempted.add(batch_id)
-        f_pairs = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: append_index_batch(
-                    spark, flagged, out_dir, batch_id, fmt="parquet"
-                )
-            )
-        )
-        f_keys = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: append_index_batch(
-                    spark,
-                    keyed.select("_id", "_k"),
-                    keys_dir,
-                    batch_id,
-                    fmt="parquet",
-                )
-            )
+        f_pairs = _submit_append(pool, spark, flagged, out_dir, batch_id)
+        f_keys = _submit_append(
+            pool, spark, keyed.select("_id", "_k"), keys_dir, batch_id
         )
         try:
             append_index_batch(
@@ -958,9 +961,12 @@ def incremental_embedding_dedup(
             f"bits_per_table ({bits_per_table}) exceeds bits ({bits}): "
             "n_tables would be 0 and every pair would be silently missed"
         )
-    from vspace_spark.functions.vectors import cosine_similarity, dot
+    from vspace_spark.functions.vectors import cosine_similarity
     from vspace_spark.operators.scale import footer_row_count
-    from vspace_spark.operators.similarity import portable_hyperplanes
+    from vspace_spark.operators.similarity import (
+        lsh_buckets,
+        portable_hyperplanes,
+    )
 
     if work_dir is None:
         work_dir = os.path.join(
@@ -999,56 +1005,17 @@ def incremental_embedding_dedup(
         )
     planes = portable_hyperplanes(dim, bits)
 
-    # The planes ride as DATA (a one-row broadcast frame cross-joined
-    # in, planes picked with element_at), not as per-plane literal
-    # arrays: bucketed_fold runs once per MICRO-BATCH, and Catalyst
-    # analysis of the 32×64-literal tree cost ~3 s of driver time per
-    # batch — the dominant share of the replay's per-batch fixed cost
-    # (r13 event-log decomposition: job exec 14.5 s vs 21.6 s of
-    # driver gaps). The float path is unchanged: element_at yields
-    # the same doubles the literals held, and dot()'s sequential
-    # aggregate fold is the same expression, so every sign bit is
-    # bit-identical (pinned by test_incremental_fold_planes_as_data
-    # and the unchanged oracle parity).
-    planes_rows = [[float(x) for x in p] for p in planes]
-
-    # The bucketing COLUMN EXPRESSION is built ONCE per operator call,
-    # not once per MICRO-BATCH (guide §7.3's loop-generated-trees rule
-    # applied to construction, not just analysis — r13): Column
-    # objects are immutable, session-independent parse trees, but each
-    # dot() converts two Python lambdas (zip_with + aggregate) through
-    # py4j, and rebuilding the 32-dot tree measured 1.6–2.7 s of pure
-    # DRIVER time per batch — the largest single share of the replay's
-    # per-batch fixed cost (probe in OPTIMIZATION_r13.md). Only the
-    # tiny one-row planes frame is (necessarily) created per batch —
-    # it must belong to the micro-batch's session.
-    # Built only on the fold lane (ADVICE r13): the arrow lane never
-    # calls bucketed_fold, and constructing the 32-dot tree here made
-    # it pay the very 1.6–2.7 s of py4j/driver construction cost the
-    # hoist was meant to eliminate, once per operator call.
-    if sig_engine == "fold":
-        _fold_tables = []
-        for t in range(n_tables):
-            bucket = F.lit(0).cast("bigint")
-            for j in range(bits_per_table):
-                bit = t * bits_per_table + j
-                plane = F.element_at("_planes", bit + 1)
-                bucket = bucket + F.when(
-                    dot(F.col("_v"), plane) > 0,
-                    F.lit(2**j).cast("bigint"),
-                ).otherwise(F.lit(0).cast("bigint"))
-            _fold_tables.append(
-                F.struct(F.lit(t).alias("tbl"), bucket.alias("bucket"))
-            )
-        _fold_tb = F.explode(F.array(*_fold_tables)).alias("_tb")
+    # bucketed_fold runs once per MICRO-BATCH: its constant-size
+    # bucket column is built once, not a literal tree per batch (r13:
+    # seconds of driver time each)
+    _fold_tb = F.explode(
+        lsh_buckets(F.col("_v"), planes, bits_per_table, n_tables)
+    ).alias("_tb")
 
     def bucketed_fold(df: DataFrame) -> DataFrame:
-        pl = df.sparkSession.createDataFrame(
-            [(planes_rows,)], "_planes array<array<double>>"
+        return df.select("_id", "_v", _fold_tb).select(
+            "_id", "_v", F.col("_tb.tbl"), F.col("_tb.bucket")
         )
-        return df.crossJoin(F.broadcast(pl)).select(
-            "_id", "_v", _fold_tb
-        ).select("_id", "_v", F.col("_tb.tbl"), F.col("_tb.bucket"))
 
     # plain literals so the closure is self-contained (executors
     # cannot import this repo when the driver runs elsewhere —
@@ -1115,7 +1082,6 @@ def incremental_embedding_dedup(
     # independent contract writes from two driver threads)
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
     from pyspark.sql import types as T
 
     _idt = schema["_id"].dataType
@@ -1168,9 +1134,11 @@ def incremental_embedding_dedup(
             .filter(F.col("a") < F.col("b"))
             .select("a", "b", "_va", "_vb")
         )
-        has_earlier = any(
-            i < batch_id for i in attempted
-        ) and os.path.isdir(idx_dir)
+        has_earlier = _has_earlier(
+            attempted,
+            batch_id,
+            (idx_dir,) if carry_vectors else (idx_dir, vecs_dir),
+        )
         if has_earlier:
             idx = (
                 read_index(
@@ -1234,13 +1202,7 @@ def incremental_embedding_dedup(
         # MATERIALIZED bb (counted above) and touch different
         # directories; the probe reads only batch < current partitions
         attempted.add(batch_id)
-        f_pairs = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: append_index_batch(
-                    spark, flagged, out_dir, batch_id, fmt="parquet"
-                )
-            )
-        )
+        f_pairs = _submit_append(pool, spark, flagged, out_dir, batch_id)
         try:
             if carry_vectors:
                 append_index_batch(
@@ -1251,16 +1213,9 @@ def incremental_embedding_dedup(
                     fmt="parquet",
                 )
             else:
-                f_vecs = pool.submit(
-                    inheritable_thread_target(spark)(
-                        lambda: append_index_batch(
-                            spark,
-                            bb.select("_id", "_v").distinct(),
-                            vecs_dir,
-                            batch_id,
-                            fmt="parquet",
-                        )
-                    )
+                f_vecs = _submit_append(
+                    pool, spark, bb.select("_id", "_v").distinct(),
+                    vecs_dir, batch_id,
                 )
                 try:
                     append_index_batch(
