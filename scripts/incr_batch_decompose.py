@@ -31,14 +31,7 @@ def main() -> None:
     leg = sys.argv[1] if len(sys.argv) > 1 else "embedding"
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    spark = get_spark(
-        "incr-batch-decompose",
-        extra_conf={
-            "spark.sql.streaming.numRecentProgressUpdates": str(
-                max(1000, 2 * n_batches)
-            )
-        },
-    )
+    spark = get_spark("incr-batch-decompose")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from vspace_spark.streaming.incremental import (
@@ -53,7 +46,6 @@ def main() -> None:
 
         shutil.rmtree(work, ignore_errors=True)
         progress: list = []
-        raw_progress: list = []
         t0 = time.perf_counter()
         if leg == "embedding" or leg == "embedding_arrow":
             emb = load_table(spark, sf_dir, "embeddings")
@@ -69,7 +61,6 @@ def main() -> None:
                 sig_engine=(
                     "arrow" if leg == "embedding_arrow" else "fold"
                 ),
-                _raw_progress_out=raw_progress,
             )
         elif leg in ("minhash", "minhash_xxhash64"):
             docs = load_table(spark, sf_dir, "documents").select(
@@ -84,7 +75,6 @@ def main() -> None:
                 hash_engine=(
                     "xxhash64" if leg == "minhash_xxhash64" else "portable"
                 ),
-                _raw_progress_out=raw_progress,
             )
         elif leg == "passjoin":
             docs = load_table(spark, sf_dir, "documents")
@@ -94,7 +84,6 @@ def main() -> None:
                 work_dir=work,
                 n_input_files=n_batches,
                 progress_out=progress,
-                _raw_progress_out=raw_progress,
             )
         else:
             raise SystemExit(f"unknown leg {leg}")
@@ -117,14 +106,11 @@ def main() -> None:
             "walCommit",
             "triggerExecution",
         ]
-        sums = {k: 0 for k in keys}
-        n_data = 0
-        for p in raw_progress:
-            d = p.get("durationMs", {}) or {}
-            if p.get("numInputRows", 0) > 0:
-                n_data += 1
-                for k in keys:
-                    sums[k] += d.get(k, 0)
+        # progress_out holds one record per data batch
+        n_data = len(progress)
+        sums = {
+            k: sum(p["durationMs"].get(k, 0) for p in progress) for k in keys
+        }
         print(
             json.dumps(
                 {

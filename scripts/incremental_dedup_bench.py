@@ -9,20 +9,12 @@ durations straight from the engine's progress log. The probe join
 reads every earlier `batch=<id>` parquet append, so the SCAN side of
 the probe grows linearly in i — the question is whether the constant
 per-batch work (signature computation, intra-batch self-join, append)
-dominates at realistic index sizes, and what the slope is. The
-warehouse-scale mitigation when the slope matters (bucketed/Delta
-index so probes prune to their buckets — measured 478× in
-scripts/bucketed_probe_bench.py) is design, not this code path.
+dominates at realistic index sizes, and what the slope is.
 
 Reports first/last-quartile mean batch duration, the linear-fit slope
 (ms per batch of index growth), and total pairs. Results → PERF.md.
 
-Run: python scripts/incremental_dedup_bench.py [replicas] [n_batches] [layout] [buckets]
-
-layout = partitioned (default) | bucketed: the r9 landed bucketed
-signature table (io/connectors.py:append_index_batch_bucketed) —
-probes join the index side exchange-free, removing the index-sized
-per-probe shuffle term from the slope.
+Run: python scripts/incremental_dedup_bench.py [replicas] [n_batches] [hash_engine]
 """
 
 from __future__ import annotations
@@ -43,25 +35,8 @@ from vspace_spark.streaming.incremental import incremental_minhash_dedup
 def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 32
-    layout = sys.argv[3] if len(sys.argv) > 3 else "partitioned"
-    buckets = (
-        int(sys.argv[4])
-        if len(sys.argv) > 4 and sys.argv[4] != "-"
-        else None
-    )
-    hash_engine = sys.argv[5] if len(sys.argv) > 5 else "portable"
-    # recentProgress keeps only the last N updates (default 100) — a
-    # run past that cap would silently truncate the curve and mislabel
-    # the first-quartile stats, so raise the cap above any plausible
-    # batch count and assert completeness after the run
-    spark = get_spark(
-        "incremental-dedup-bench",
-        extra_conf={
-            "spark.sql.streaming.numRecentProgressUpdates": str(
-                max(1000, 2 * n_batches)
-            )
-        },
-    )
+    hash_engine = sys.argv[3] if len(sys.argv) > 3 else "portable"
+    spark = get_spark("incremental-dedup-bench")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     base = load_table(spark, sf_dir, "documents").select(
@@ -88,7 +63,7 @@ def main() -> None:
     n_docs = docs.count()
 
     progress: list = []
-    work = f"/tmp/vspace_incr_bench_x{replicas}_{n_batches}_{layout}"
+    work = f"/tmp/vspace_incr_bench_x{replicas}_{n_batches}"
     import shutil
 
     shutil.rmtree(work, ignore_errors=True)
@@ -99,8 +74,6 @@ def main() -> None:
         work_dir=work,
         n_input_files=n_batches,
         progress_out=progress,
-        index_layout=layout,
-        index_buckets=buckets,
         hash_engine=hash_engine,
     )
     n_pairs = pairs.count()
@@ -109,8 +82,7 @@ def main() -> None:
     progress.sort(key=lambda p: p["batch_id"])
     durs = [p["duration_ms"] for p in progress]
     assert len(durs) == n_batches, (
-        f"progress log truncated: {len(durs)} of {n_batches} batches "
-        f"captured — raise spark.sql.streaming.numRecentProgressUpdates"
+        f"progress log incomplete: {len(durs)} of {n_batches} batches"
     )
     q = max(1, len(durs) // 4)
     first_q = sum(durs[:q]) / q
@@ -125,7 +97,6 @@ def main() -> None:
 
     print(
         {
-            "layout": layout,
             "hash_engine": hash_engine,
             "n_docs": n_docs,
             "n_batches": n,

@@ -25,7 +25,7 @@ harness defaults to bits=64, bits_per_table=16 (65536 buckets/table,
 4 tables) at the 100x scale and takes both on the CLI.
 
 Run: python scripts/incremental_embedding_bench.py [replicas]
-     [n_batches] [bits] [bits_per_table]
+     [n_batches] [bits] [bits_per_table] [sig_engine]
 """
 
 from __future__ import annotations
@@ -72,16 +72,8 @@ def main() -> None:
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 32
     bits = int(sys.argv[3]) if len(sys.argv) > 3 else 64
     bits_per_table = int(sys.argv[4]) if len(sys.argv) > 4 else 16
-    carry = (sys.argv[5] if len(sys.argv) > 5 else "carry") == "carry"
-    sig_engine = sys.argv[6] if len(sys.argv) > 6 else "fold"
-    spark = get_spark(
-        "incremental-embedding-bench",
-        extra_conf={
-            "spark.sql.streaming.numRecentProgressUpdates": str(
-                max(1000, 2 * n_batches)
-            )
-        },
-    )
+    sig_engine = sys.argv[5] if len(sys.argv) > 5 else "fold"
+    spark = get_spark("incremental-embedding-bench")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     emb = replicated_embeddings(spark, sf_dir, replicas)
     n_vecs = emb.count()
@@ -97,7 +89,6 @@ def main() -> None:
         emb,
         bits=bits,
         bits_per_table=bits_per_table,
-        carry_vectors=carry,
         sig_engine=sig_engine,
         work_dir=work,
         n_input_files=n_batches,
@@ -122,7 +113,6 @@ def main() -> None:
         {
             "bits": bits,
             "bits_per_table": bits_per_table,
-            "carry_vectors": carry,
             "sig_engine": sig_engine,
             "n_vecs": n_vecs,
             "n_batches": n,

@@ -293,49 +293,100 @@ class TestIncrementalIndexDedup:
         assert second.count() == 1
         assert first.count() == n_first  # held frame unaffected
 
-    def test_bucketed_layout_matches_partitioned(self, spark, tmp_path):
-        """index_layout='bucketed' (VERDICT r8 #7: the 478x probe-wire
-        design landed as a metastore table bucketed by (band, bucket))
-        must emit the exact pair set the parquet-partitioned layout
-        does, including cross-batch index-probe pairs, and must be
-        replay-idempotent over the same work_dir (the bucketed append
-        drops+rewrites only its own batch partition)."""
+    def test_progress_keeps_every_batch_past_the_engine_cap(
+        self, spark, tmp_path
+    ):
+        """progress_out holds one record per data batch even when the
+        engine's recentProgress ring keeps fewer updates than the run
+        has batches."""
         from vspace_spark.streaming.incremental import (
             incremental_minhash_dedup,
         )
 
+        conf = "spark.sql.streaming.numRecentProgressUpdates"
+        prev = spark.conf.get(conf)
+        spark.conf.set(conf, "2")
+        progress: list = []
+        try:
+            incremental_minhash_dedup(
+                spark, self._clones(spark), work_dir=str(tmp_path / "p"),
+                n_input_files=5, progress_out=progress,
+            )
+        finally:
+            spark.conf.set(conf, prev)
+        assert [p["batch_id"] for p in progress] == [0, 1, 2, 3, 4]
+        assert sum(p["rows"] for p in progress) == 10
+        for p in progress:
+            assert p["duration_ms"] > 0 and "addBatch" in p["durationMs"]
+
+    def test_failed_batch_surfaces_and_rerun_is_clean(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A contract write that fails mid-run fails the operator, stops
+        its stream, and a rerun over the same work_dir returns exactly
+        the clean run's pairs."""
+        import vspace_spark.streaming.incremental as inc
+
         docs = self._clones(spark)
-        plain = {
-            (r.a, r.b, r.agree)
-            for r in incremental_minhash_dedup(
-                spark, docs, work_dir=str(tmp_path / "wp"), n_input_files=5
+
+        def pairs(work):
+            return {
+                (r.a, r.b, r.agree)
+                for r in inc.incremental_minhash_dedup(
+                    spark, docs, work_dir=work, n_input_files=5
+                ).collect()
+            }
+
+        clean = pairs(str(tmp_path / "clean"))
+        real = inc.append_index_batch
+
+        def failing(spark_, df, path, batch_id, fmt="delta"):
+            if batch_id == 2:
+                raise RuntimeError("injected write failure")
+            return real(spark_, df, path, batch_id, fmt=fmt)
+
+        work = str(tmp_path / "w")
+        monkeypatch.setattr(inc, "append_index_batch", failing)
+        with pytest.raises(Exception, match="injected write failure"):
+            pairs(work)
+        assert spark.streams.active == []
+        monkeypatch.undo()
+        assert pairs(work) == clean
+
+    def test_batch_without_postings_is_not_probed(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The first range file holds only docs under 3 tokens, so its
+        batch writes no postings; the next batch must not read an index
+        directory that does not exist, and the pair set is unchanged."""
+        import os
+
+        import vspace_spark.streaming.incremental as inc
+
+        dup = "alpha beta gamma delta epsilon zeta eta theta"
+        rows = [(0, "tiny"), (1, "two words")] + [
+            (i, dup if i % 2 == 0 else f"unique {i} " * 6)
+            for i in range(2, 10)
+        ]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        real = inc.read_index
+        missing: list = []
+
+        def checked(spark_, path, *args, **kwargs):
+            if not os.path.isdir(path):
+                missing.append(path)
+            return real(spark_, path, *args, **kwargs)
+
+        monkeypatch.setattr(inc, "read_index", checked)
+        got = {
+            (r.a, r.b)
+            for r in inc.incremental_minhash_dedup(
+                spark, docs, work_dir=str(tmp_path / "e"), n_input_files=5
             ).collect()
         }
-        work = str(tmp_path / "wb")
-        bucketed = {
-            (r.a, r.b, r.agree)
-            for r in incremental_minhash_dedup(
-                spark,
-                docs,
-                work_dir=work,
-                n_input_files=5,
-                index_layout="bucketed",
-            ).collect()
-        }
-        assert bucketed == plain
-        assert any(b - a > 2 for a, b, _ in bucketed)  # index-probe pairs
-        # replay over the same work_dir: no duplicate pairs
-        again = {
-            (r.a, r.b, r.agree)
-            for r in incremental_minhash_dedup(
-                spark,
-                docs,
-                work_dir=work,
-                n_input_files=5,
-                index_layout="bucketed",
-            ).collect()
-        }
-        assert again == plain
+        assert missing == []
+        clones = [2, 4, 6, 8]
+        assert got == {(a, b) for a in clones for b in clones if a < b}
 
 
 def test_stateful_transition_counts_spanning_arrow_chunks(
@@ -523,16 +574,15 @@ class TestIncrementalPassjoin:
 
 def test_has_earlier_needs_every_probe_dir(tmp_path):
     """The probe runs only when an earlier batch was attempted and
-    EVERY directory it reads exists — a missing sibling (keys, vecs)
-    must not reach the reader as PATH_NOT_FOUND."""
+    EVERY directory it reads exists — a missing sibling (PassJoin's
+    seg beside keys) must not reach the reader as PATH_NOT_FOUND."""
     from vspace_spark.streaming.incremental import _has_earlier
 
-    idx, vecs = tmp_path / "idx", tmp_path / "vecs"
-    idx.mkdir()
-    assert _has_earlier({0}, 1, (str(idx),))
-    assert not _has_earlier({0}, 1, (str(idx), str(vecs)))
-    assert not _has_earlier({1}, 1, (str(idx),))  # replay of itself
-    assert _has_earlier({0}, 1, ())  # catalog table: ledger only
+    keys, seg = tmp_path / "keys", tmp_path / "seg"
+    keys.mkdir()
+    assert _has_earlier({0}, 1, (str(keys),))
+    assert not _has_earlier({0}, 1, (str(keys), str(seg)))
+    assert not _has_earlier({1}, 1, (str(keys),))  # replay of itself
 
 
 def test_thread_target_falls_back_outside_pinned_mode(spark, monkeypatch):
@@ -786,31 +836,6 @@ class TestAutoBucketWidth:
         want = {(r.a, r.b, r.cos) for r in explicit.collect()}
         assert got == want, (len(got), len(want))
         assert len(got) >= 4
-
-    def test_carry_vectors_layouts_identical(self, spark, tmp_path):
-        """carry_vectors=True (vector-carrying postings, one probe
-        join) and False (id-only postings + vecs relation, two joins)
-        must emit the identical pair set — the layouts trade storage
-        vs per-batch shuffle, never semantics."""
-        from vspace_spark.io.tables import load_table
-        from vspace_spark.streaming.incremental import (
-            incremental_embedding_dedup,
-        )
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        a = incremental_embedding_dedup(
-            spark, emb, bits=32, bits_per_table=4, threshold=0.4,
-            work_dir=str(tmp_path / "carry"), n_input_files=4,
-            carry_vectors=True,
-        )
-        b = incremental_embedding_dedup(
-            spark, emb, bits=32, bits_per_table=4, threshold=0.4,
-            work_dir=str(tmp_path / "twored"), n_input_files=4,
-            carry_vectors=False,
-        )
-        got = {(r.a, r.b, r.cos) for r in a.collect()}
-        want = {(r.a, r.b, r.cos) for r in b.collect()}
-        assert got == want and len(got) > 0, (len(got), len(want))
 
     def test_sig_engines_identical_on_fixture(self, spark, tmp_path):
         """sig_engine='arrow' (one matmul per Arrow batch) must emit

@@ -69,10 +69,8 @@ def append_index_batch(
 
     ``fmt='delta'``: partition-scoped ``replaceWhere`` overwrite — an
     ACID commit, safe under concurrent readers, with OPTIMIZE/VACUUM
-    compaction upstream; this is the warehouse-scale form (bucket the
-    table by the probe key so probes prune — measured 478× in
-    scripts/bucketed_probe_bench.py). Requires the Delta jars
-    (:func:`delta_available`).
+    compaction upstream; this is the warehouse-scale form. Requires
+    the Delta jars (:func:`delta_available`).
 
     ``fmt='parquet'``: the same layout contract on bare parquet via
     dynamic partition overwrite — what this container can run; no
@@ -111,65 +109,6 @@ def append_index_batch(
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch")
         .parquet(path)
-    )
-
-
-def append_index_batch_bucketed(
-    spark: SparkSession,
-    batch: DataFrame,
-    table: str,
-    batch_id: int,
-    bucket_cols: list[str] | tuple,
-    n_buckets: int = 32,
-    drop_existing: bool | None = None,
-) -> None:
-    """The accreting-index contract (:func:`append_index_batch`) over
-    a BUCKETED metastore table — the warehouse-scale layout the
-    parquet form only documents: partitioned by ``batch`` (idempotent
-    replay) AND bucketed+sorted by the probe key, so every ingest
-    probe joins the index side EXCHANGE-FREE — only the arriving
-    batch shuffles, turning the per-probe wire cost from index-sized
-    to batch-sized (measured 478× less shuffle at a 16M-row index,
-    scripts/bucketed_probe_bench.py; the linear-in-history term this
-    removes is what bends the incremental-dedup marginal-cost curve,
-    scripts/incremental_dedup_bench.py --layout bucketed).
-
-    Idempotency: a replayed batch DROPs its own partition first
-    (managed table ⇒ the partition's files are deleted with it), then
-    appends with the same bucket spec — a replay replaces its own
-    partition only, like the parquet contract's dynamic overwrite.
-
-    File-count discipline (VERDICT r9 #5): a bucketed write emits one
-    file PER (writer task × bucket it holds rows for) — appending a
-    32-shuffle-partition batch into 32 buckets can emit ~1000 files
-    per batch, and the accreting probe re-lists every history file
-    each round (the measured 888.8 s vs 329.3 s small-batch
-    regression). Repartitioning the batch to ``n_buckets`` on the
-    bucket columns first aligns writer tasks 1:1 with buckets (both
-    sides are pmod(Murmur3, n)) so each append emits EXACTLY
-    ``n_buckets`` files per partition.
-    """
-    out = batch.withColumn("batch", F.lit(int(batch_id))).repartition(
-        n_buckets, *bucket_cols
-    )
-    # drop_existing=None (auto) checks the catalog; callers that KNOW
-    # whether this batch id was already appended (e.g. the incremental
-    # operator's per-run ledger) pass a bool and skip the per-batch
-    # tableExists + DROP round-trip — metastore DDL is a measurable
-    # share of small-batch ingest cost (PERF.md round 10)
-    if drop_existing is None:
-        drop_existing = spark.catalog.tableExists(table)
-    if drop_existing:
-        spark.sql(
-            f"ALTER TABLE {table} DROP IF EXISTS PARTITION "
-            f"(batch={int(batch_id)})"
-        )
-    (
-        out.write.mode("append")
-        .partitionBy("batch")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(table)
     )
 
 

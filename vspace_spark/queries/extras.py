@@ -630,9 +630,8 @@ def stream_dedup_docs_incremental(
     probe or intra-batch self-join; ``streaming/incremental.py``), and
     the signatures are the portable md5 60-bit family shared with
     ``dedup_minhash_lsh``. The per-batch parquet index keyed by batch
-    id gives idempotent replay; at warehouse scale it becomes a
-    Delta/Iceberg table bucketed by (band, bucket) so probes prune to
-    their buckets (module docstring has the full design).
+    id gives idempotent replay, and each probe reads only the earlier
+    batches' partitions (the module docstring has the full design).
     """
     from vspace_spark.functions.text import tokenize_col
     from vspace_spark.io.sinks import keyed_tmp_dir

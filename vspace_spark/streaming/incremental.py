@@ -4,48 +4,49 @@ The stream-static dedup queries (``stream_dedup_docs_minhash``,
 ``stream_dedup_embeddings``) bucket arriving documents against an
 index built ONCE from the already-ingested corpus. This module closes
 the remaining gap (NOTES.md round-4 candidate #4): the index ACCRETES
-— every micro-batch first probes the signatures of all earlier
-batches, then appends its own signatures, so a document arriving at
-hour N is matched against everything ingested in hours 0..N without
-ever rebuilding the index.
+— every micro-batch first probes the postings of all earlier batches,
+then appends its own, so a document arriving at hour N is matched
+against everything ingested in hours 0..N without ever rebuilding the
+index.
 
-Engine mapping: ``foreachBatch`` + an append-only signature index
-partitioned by batch id — the standard Spark recipe for a sink/state
-store without native streaming support. Index appends, result-batch
-writes, and probe reads all route through the shared accreting-index
-contract (``io/connectors.py:append_index_batch``/``read_index``):
-each batch replaces only its own ``batch=<id>`` partition, so replays
-after failure are idempotent (exactly-once effect, matching
+Three legs — MinHash text signatures, PassJoin edit-distance segments
+and hyperplane-LSH cosine — run on one replay skeleton,
+:func:`_accreting_replay`. Engine mapping: ``foreachBatch`` +
+append-only index relations partitioned by batch id — the standard
+Spark recipe for a sink/state store without native streaming support.
+Index appends, result-batch writes and probe reads all route through
+the shared accreting-index contract
+(``io/connectors.py:append_index_batch``/``read_index``): each batch
+replaces only its own ``batch=<id>`` partition, so replays after
+failure are idempotent (exactly-once effect, matching
 ``run_stream_foreach_batch_parquet``), and the probe's ``batch <
 current`` filter statically prunes to the earlier partitions. The
 same calls with ``fmt='delta'`` write an ACID ``replaceWhere`` table;
-at warehouse scale that table is additionally bucketed by
-(band, bucket) so each probe prunes to its buckets instead of
-scanning the whole signature history. The parquet form keeps this
-harness dependency-free while exercising the identical dataflow.
+the parquet form keeps this harness dependency-free while exercising
+the identical dataflow.
 
 Correctness is batch-boundary-INDEPENDENT, which is what makes the
-operator exactly oracle-checkable: a qualifying pair (a < b) is
-found exactly once — in b's batch via the index probe when a was
-ingested earlier, or via the intra-batch self-join when they arrive
-together — so the union over batches equals the batch LSH pair set
-regardless of how the file source slices the replay.
+operators exactly oracle-checkable: a qualifying pair (a < b) is
+found exactly once — in the later endpoint's batch via the index probe
+when the two arrive apart, or via the intra-batch self-join when they
+arrive together — so the union over batches equals the batch pair
+set regardless of how the file source slices the replay.
 """
 
 from __future__ import annotations
 
+import concurrent.futures
 import os
+import shutil
 import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vspace_spark.functions.text import ngrams_col, tokenize_col
-from vspace_spark.io.connectors import (
-    append_index_batch,
-    append_index_batch_bucketed,
-    read_index,
-)
+from vspace_spark.io.connectors import append_index_batch, read_index
 
 
 def _auto_lsh_layout(n: int, bits: int) -> tuple[int, int]:
@@ -96,12 +97,230 @@ def _submit_append(pool, spark: SparkSession, df, path: str, batch_id):
     return pool.submit(_thread_target(spark, write))
 
 
-def _has_earlier(attempted: set, batch_id: int, dirs) -> bool:
+def _has_earlier(
+    attempted: Iterable[int], batch_id: int, dirs: Iterable[str]
+) -> bool:
     """Probe the index only if an earlier batch was attempted AND every
     directory the probe reads exists (empty batches write no files)."""
     return any(i < batch_id for i in attempted) and all(
         os.path.isdir(d) for d in dirs
     )
+
+
+def _accreting_replay(
+    spark: SparkSession,
+    replay: DataFrame,
+    key: str,
+    work_dir: str | None,
+    tag: str,
+    n_input_files: int,
+    setup,
+    result_schema: str,
+    progress_out: list | None,
+) -> DataFrame:
+    """The micro-batch loop every incremental leg runs: replay
+    ``replay`` as a multi-batch file stream, accrete the leg's index
+    under ``work_dir`` and return the flagged pairs read back from
+    ``<work_dir>/out`` (typed by ``result_schema`` when none exist).
+
+    The replay is materialized as ``n_input_files`` parquet files,
+    range-partitioned on ``key`` (disjoint contents), and consumed one
+    per trigger (``maxFilesPerTrigger=1``), so the index genuinely
+    accretes across ≥ ``n_input_files`` probe rounds — a single-batch
+    replay would degenerate to the intra-batch self-join and never
+    exercise the index path.
+
+    ``setup(in_dir, schema)`` runs once per run, after the replay is
+    written, and returns ``(indexes, step)``. ``indexes`` maps each
+    index directory name to its probe-read schema (``batch``
+    included): an explicit schema skips parquet footer inference over
+    the growing history on every probe. ``step(batch, earlier)``
+    builds one micro-batch's work; ``earlier`` maps each index name to
+    the postings of the batches STRICTLY before this one — a replayed
+    batch must not see its own or later appends, or the rerun emits
+    pairs twice — or is None when there are none. ``step`` returns
+    ``(cached, flagged, appends)``: the frame it persisted, the pairs
+    to write and the ``{index name: frame}`` postings to append.
+
+    ``progress_out`` receives one record per data batch — ``batch_id``,
+    ``duration_ms``, ``rows`` and the engine's ``durationMs`` phase
+    map. Each batch's progress is read as the next batch starts, so a
+    run longer than ``spark.sql.streaming.numRecentProgressUpdates``
+    still reports every batch.
+    """
+    if work_dir is None:
+        work_dir = os.path.join(
+            "/tmp", f"vspace_incr_{tag}_{uuid.uuid4().hex[:12]}"
+        )
+    in_dir = os.path.join(work_dir, "in")
+    out_dir = os.path.join(work_dir, "out")
+    # Spark writers, no driver collect; range partitioning on the id
+    # keeps file contents disjoint
+    replay.repartitionByRange(n_input_files, key).write.mode(
+        "overwrite"
+    ).parquet(in_dir)
+    schema = spark.read.parquet(in_dir).schema
+    indexes, step = setup(in_dir, schema)
+    paths = {name: os.path.join(work_dir, name) for name in indexes}
+    # A NEW run starts from an empty index/result. An EMPTY batch
+    # writes no partition, so a stale batch=<id> partition from an
+    # EARLIER run over the same work_dir would silently survive into
+    # this run's probe and final read (caught live by the sf0.01
+    # window sweep: range-partition boundaries shifted between runs
+    # and a pair surfaced from both runs' batch layouts). WITHIN-run
+    # replays of a micro-batch still overwrite their own partition.
+    for path in (*paths.values(), out_dir):
+        shutil.rmtree(path, ignore_errors=True)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+
+    # Per-run ledger of ATTEMPTED batch ids: the run starts from an
+    # empty index, so within-run state answers "are there earlier
+    # partitions?" without a listing per batch. The id is recorded
+    # BEFORE the writes run, so an engine retry of a partially
+    # committed batch still counts as a replay (ADVICE r10). An id
+    # strictly earlier than the current batch always denotes a
+    # COMPLETED batch: a failed foreachBatch fails the query, so the
+    # stream never advances past it within a run.
+    attempted: set[int] = set()
+    # The batch's contract writes are independent given the persisted
+    # postings and touch different directories; the pairs job probes
+    # only batch < current partitions, committed before this batch
+    # started. So all but the last append overlap from driver threads
+    # (guide §2.6; VERDICT r13 #2: they were the largest serial terms
+    # of the per-batch fixed cost). The pool outlives the stream, and
+    # process() joins every write before returning, so the engine
+    # starts batch N+1 only after batch N is committed.
+    pool = concurrent.futures.ThreadPoolExecutor(max_workers=len(paths))
+    progress: dict[int, dict] = {}
+    query: list = []  # the running query, for process() to read
+
+    def record(p) -> None:
+        if p is not None and p.numInputRows > 0:
+            progress.setdefault(
+                p.batchId,
+                {
+                    "batch_id": p.batchId,
+                    "duration_ms": p.batchDuration,
+                    "rows": p.numInputRows,
+                    "durationMs": dict(p.durationMs),
+                },
+            )
+
+    def process(batch: DataFrame, batch_id: int) -> None:
+        if progress_out is not None and query:
+            record(query[0].lastProgress)  # the batch that just ended
+        earlier = None
+        if _has_earlier(attempted, batch_id, paths.values()):
+            earlier = {
+                name: read_index(
+                    spark, paths[name], fmt="parquet", schema=idx_schema
+                )
+                .filter(F.col("batch") < batch_id)
+                .drop("batch")
+                for name, idx_schema in indexes.items()
+            }
+        cached, flagged, appends = step(batch, earlier)
+        attempted.add(batch_id)
+        *pooled, (last, df) = appends.items()
+        writes = [_submit_append(pool, spark, flagged, out_dir, batch_id)]
+        writes += [
+            _submit_append(pool, spark, f, paths[name], batch_id)
+            for name, f in pooled
+        ]
+        try:
+            append_index_batch(
+                spark, df, paths[last], batch_id, fmt="parquet"
+            )
+        finally:
+            for w in writes:
+                w.result()
+        cached.unpersist()
+
+    q = stream.writeStream.foreachBatch(process).start()
+    query.append(q)
+    try:
+        q.processAllAvailable()
+        if progress_out is not None:
+            for p in q.recentProgress:  # the last batch's, at least
+                record(p)
+            progress_out.extend(progress[b] for b in sorted(progress))
+    finally:
+        q.stop()
+        pool.shutdown(wait=True)
+    # zero-pairs corpus: partitioned writes of all-empty batches emit
+    # NO files, so the read would fail on schema inference — return a
+    # typed empty result instead
+    if not os.path.isdir(out_dir) or not any(
+        e.startswith("batch=") for e in os.listdir(out_dir)
+    ):
+        return spark.createDataFrame([], result_schema)
+    # EAGER materialization, lineage truncated: the next run over the
+    # same work_dir rmtree's out_dir first, so a lazy read returned
+    # here would be silently invalidated the moment the caller
+    # re-invokes. The pairs are computed NOW into block storage, and
+    # the returned frame no longer references the files at all.
+    return (
+        read_index(spark, out_dir, fmt="parquet")
+        .drop("batch")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _posting_pairs(
+    posted: DataFrame,
+    earlier: DataFrame | None,
+    keys: list,
+    payload: str,
+    score: F.Column,
+    keep: F.Column,
+) -> DataFrame:
+    """One micro-batch's flagged pairs over postings ``(_id, payload,
+    *keys)``: candidates from the intra-batch self-join on ``keys``
+    (a < b) and, when ``earlier`` postings exist, from the probe of
+    that index, min/max-normalized so the pair key is orientation-free
+    even if the replay delivers files out of id order. ``score`` is
+    computed over the oriented payloads (``_pa`` of ``a``, ``_pb`` of
+    ``b``) and kept where ``keep`` holds, one row per pair however
+    many keys matched.
+
+    Join-probe spread (guide §2 — r13): the postings are cached in the
+    batch's IO partitioning (ONE partition for a one-file trigger), so
+    without it the confirm ran single-task over every candidate —
+    2–3.6 s/batch at 244k candidates (OPTIMIZATION_r13.md). Spreading
+    batch-sized posting rows is a KB-scale shuffle; the index append
+    still writes the unspread postings, one file per batch."""
+    new = posted.repartition(
+        posted.sparkSession.sparkContext.defaultParallelism
+    ).select(F.col("_id").alias("nid"), F.col(payload).alias("np"), *keys)
+    left = new.select(F.col("nid").alias("a"), F.col("np").alias("_pa"), *keys)
+    right = new.select(
+        F.col("nid").alias("b"), F.col("np").alias("_pb"), *keys
+    )
+    cands = (
+        left.join(right, keys)
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b", "_pa", "_pb")
+    )
+    if earlier is not None:
+        probe = new.join(earlier, keys).filter(F.col("nid") != F.col("_id"))
+        new_first = F.col("nid") < F.col("_id")
+        cands = cands.unionByName(
+            probe.select(
+                F.least("nid", "_id").alias("a"),
+                F.greatest("nid", "_id").alias("b"),
+                F.when(new_first, F.col("np"))
+                .otherwise(F.col(payload))
+                .alias("_pa"),
+                F.when(new_first, F.col(payload))
+                .otherwise(F.col("np"))
+                .alias("_pb"),
+            )
+        )
+    return cands.select("a", "b", score).filter(keep).distinct()
 
 
 def _minhash_sig_plan(
@@ -251,22 +470,16 @@ def incremental_minhash_dedup(
     min_agree: int = 16,
     n_input_files: int = 8,
     progress_out: list | None = None,
-    index_layout: str = "partitioned",
-    index_buckets: int | None = None,
     hash_engine: str = "portable",
-    _raw_progress_out: list | None = None,
 ) -> DataFrame:
-    """Replay ``docs`` as a multi-batch file stream and dedup each
-    micro-batch against the accreting signature index. Returns the
-    flagged PAIRS ``[a, b, agree]`` (a < b, signature agreement ≥
-    ``min_agree`` of ``num_hashes``) as a batch DataFrame read back
-    from the run's output directory.
-
-    The replay is materialized as ``n_input_files`` range-partitioned
-    parquet files consumed one per trigger (``maxFilesPerTrigger=1``),
-    so the index genuinely accretes across ≥ ``n_input_files`` probe
-    rounds — a single-batch replay would degenerate to the intra-batch
-    self-join and never exercise the index path.
+    """Replay ``docs`` as a multi-batch file stream (``n_input_files``
+    micro-batches, :func:`_accreting_replay`) and dedup each
+    micro-batch against the accreting signature index, the
+    batch-partitioned parquet postings ``(id, sig, band, bucket)``
+    under ``<work_dir>/index``. Returns the flagged PAIRS ``[a, b,
+    agree]`` (a < b, signature agreement ≥ ``min_agree`` of
+    ``num_hashes``) as a batch DataFrame read back from
+    ``<work_dir>/out``.
 
     ``hash_engine``: ``"portable"`` (default) keeps the md5 signature
     the oracle reproduces; ``"xxhash64"`` swaps in the batch fast
@@ -274,374 +487,69 @@ def incremental_minhash_dedup(
     :func:`_portable_minhash_sigs`) — the production ingest lane,
     measured in PERF.md round 11; pair-set-vs-expected equality and
     replay idempotency are test-pinned for both.
-
-    ``index_layout``: ``"partitioned"`` (default) keeps the signature
-    index as batch-partitioned bare parquet. ``"bucketed"`` stores it
-    as a metastore table additionally BUCKETED+SORTED by
-    (band, bucket) — VERDICT r8 #7, the r5-measured 478× probe-wire
-    design landed: each micro-batch probe then joins the index side
-    exchange-free (only the arriving batch's signatures shuffle), so
-    the per-batch probe cost that grows with INDEX SIZE — the linear
-    term that bends the marginal-cost curve as the corpus accretes —
-    drops to batch-sized. Same pair output (oracle-equality-tested),
-    same per-batch replay idempotency
-    (io/connectors.py:append_index_batch_bucketed drops+rewrites the
-    replayed batch's own partition).
     """
-    if index_layout not in ("partitioned", "bucketed"):
-        raise ValueError(f"unknown index_layout: {index_layout}")
     if hash_engine not in ("portable", "xxhash64"):
         raise ValueError(f"unknown hash_engine: {hash_engine}")
     rows = num_hashes // bands
-    if work_dir is None:
-        work_dir = os.path.join(
-            "/tmp", f"vspace_incr_dedup_{uuid.uuid4().hex[:12]}"
-        )
-    in_dir = os.path.join(work_dir, "in")
-    index_dir = os.path.join(work_dir, "index")
-    out_dir = os.path.join(work_dir, "out")
-    # bucketed lane: the index is a managed table, named by the same
-    # work_dir key that names the directories (identifier-safe hash)
-    import hashlib
-
-    index_table = "incr_sig_idx_" + hashlib.md5(
-        work_dir.encode()
-    ).hexdigest()[:10]
-
-    # A NEW run starts from an empty index/result. Under the
-    # partitioned contract an EMPTY batch writes no partition, so a
-    # stale batch=<id> partition from an EARLIER run over the same
-    # work_dir would silently survive into this run's probe and final
-    # read (caught live by the sf0.01 window sweep: range-partition
-    # boundaries shifted between runs and a pair surfaced from both
-    # runs' batch layouts). WITHIN-run replays of a micro-batch — the
-    # idempotency the contract exists for — still overwrite their own
-    # partition.
-    import shutil
-
-    shutil.rmtree(index_dir, ignore_errors=True)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    if index_layout == "bucketed":
-        spark.sql(f"DROP TABLE IF EXISTS {index_table}")
-        # the table's warehouse DIRECTORY can outlive the catalog
-        # entry — a killed earlier SESSION leaves files while the new
-        # session's catalog has nothing to drop, and the first
-        # saveAsTable then fails with LOCATION_ALREADY_EXISTS (caught
-        # live by the r9 bench rerun). Clear the orphan dir too; the
-        # work_dir-keyed table name scopes this to our own leftovers.
-        # The managed location is <database location>/<table>, which
-        # equals <warehouse.dir>/<table> ONLY in the default database
-        # (non-default dbs live under <db>.db/ — ADVICE r9), so
-        # resolve the CURRENT database's locationUri via the catalog
-        # instead of joining warehouse.dir with the bare table name.
-        db_loc = spark.catalog.getDatabase(
-            spark.catalog.currentDatabase()
-        ).locationUri
-        if db_loc.startswith("file:"):
-            db_loc = db_loc[len("file:"):]
-        shutil.rmtree(os.path.join(db_loc, index_table), ignore_errors=True)
-
-    # materialize the replay with Spark writers (no driver collect);
-    # range partitioning by id keeps file contents disjoint
-    docs.repartitionByRange(n_input_files, "doc_id").write.mode(
-        "overwrite"
-    ).parquet(in_dir)
-
-    if index_layout == "bucketed" and index_buckets is None:
-        # Adaptive bucket count (VERDICT r9 #5, measured round 10):
-        # the count is fixed for the TABLE's lifetime and trades
-        # per-batch FILE COUNT (exactly index_buckets files/batch
-        # after the connector's repartition fix) against PROBE
-        # PARALLELISM (a bucketed-scan join runs one task per
-        # bucket). Both regimes measured at 48 batches (PERF.md
-        # round 10): 8.3k index rows/batch → 4 buckets beats
-        # partitioned (129.0 vs 144.3 s); 83k rows/batch → 4 buckets
-        # LOSES 1.9× to 32 (557.6 vs 348.1 s — four probe tasks on a
-        # 32-core box). Rule: small batches (< 32k rows) take 4,
-        # everything else takes full parallelism capped at 32. Sized
-        # from the replay's own footer row counts (free — the files
-        # were just written).
-        from vspace_spark.operators.scale import footer_row_count
-
-        total_rows = footer_row_count(spark.read.parquet(in_dir))
-        if total_rows:
-            batch_index_rows = (total_rows / max(n_input_files, 1)) * bands
-            index_buckets = (
-                4
-                if batch_index_rows < 32768
-                else min(32, spark.sparkContext.defaultParallelism)
-            )
-        else:
-            index_buckets = 32
-    elif index_buckets is None:
-        index_buckets = 32
-
-    schema = spark.read.parquet(in_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-
     agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-        )
+        F.filter(F.zip_with("_pa", "_pb", lambda x, y: x == y), lambda v: v)
     )
 
-    # Per-batch fixed cost, attacked once per RUN instead of once per
-    # micro-batch (VERDICT r13 #2, guide §7.3/§5):
-    # - the signature/banding Column trees are built here and reused by
-    #   every batch (32 md5 trees + the band structs were re-converted
-    #   through py4j per batch);
-    # - the rebalance decision is made from the materialized replay's
-    #   total decoded bytes (identical rule to rebalance_for_compute's
-    #   128 KB floor at one-file batches) instead of re-probing parquet
-    #   footers per batch;
-    # - the index-probe read gets an EXPLICIT schema, so the per-batch
-    #   read_index skips parquet footer schema inference over the
-    #   growing index history (the listing itself is one local dir).
-    sig_plan = _minhash_sig_plan(
-        "doc_id", "text", shingle_n, num_hashes, hash_engine
-    )
-    bb_col = _banded_col(bands, rows)
-    from vspace_spark.operators.scale import _uncompressed_input_bytes
+    def setup(in_dir: str, schema: T.StructType):
+        # Per-batch fixed cost, paid once per RUN (VERDICT r13 #2,
+        # guide §7.3/§5): the signature/banding Column trees are built
+        # here and reused by every batch, and the rebalance decision is
+        # made from the materialized replay's total decoded bytes (the
+        # rule of rebalance_for_compute's 128 KB floor at one-file
+        # batches) instead of re-probing parquet footers per batch.
+        from vspace_spark.operators.scale import _uncompressed_input_bytes
 
-    _total = _uncompressed_input_bytes(spark.read.parquet(in_dir))
-    do_rebalance = (
-        _total is None or _total / max(n_input_files, 1) >= 128 << 10
-    )
-    from pyspark.sql import types as T
-
-    idx_schema = T.StructType(
-        [
-            T.StructField("_id", schema["doc_id"].dataType),
-            T.StructField("sig", T.ArrayType(T.LongType())),
-            T.StructField("band", T.IntegerType()),
-            T.StructField("bucket", T.StringType()),
-            T.StructField("batch", T.IntegerType()),
-        ]
-    )
-
-    # per-run ledger of ATTEMPTED batch ids: a NEW run always starts
-    # from an empty index (DROP TABLE / rmtree above), so within-run
-    # closure state answers "are there earlier partitions?" and "was
-    # this id already attempted (= engine-level replay)?" without a
-    # SHOW PARTITIONS collect + DROP DDL per batch — metastore
-    # round-trips were a measurable share of the bucketed lane's
-    # small-batch cost (PERF.md round 10). The ledger records the id
-    # BEFORE the append runs: if the append partially commits and the
-    # foreachBatch fn then fails, the engine retry must still see the
-    # id and drop the half-written partition (ADVICE r10) — recording
-    # after the append would narrow idempotency to clean replays. An
-    # id strictly earlier than the current batch always denotes a
-    # COMPLETED append (a failed foreachBatch fails the query, so the
-    # stream never advances past it within a run).
-    attempted: set[int] = set()
-
-    # the two contract writes per batch (pairs + signatures) are
-    # independent given the persisted bb — overlap them from two
-    # driver threads (guide §2.6; VERDICT r13 #2: they were the two
-    # largest serial terms of the per-batch fixed cost). The pool
-    # outlives the stream so cross-batch ordering is still strict:
-    # process() joins both futures before returning, and the engine
-    # starts batch N+1 only after process(N) returns.
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        bb = _banded(
-            _portable_minhash_sigs(
-                batch, "doc_id", "text", shingle_n, num_hashes,
-                hash_engine=hash_engine,
-                _plan=sig_plan,
-                _rebalance=do_rebalance,
-            ),
-            bands,
-            rows,
-            _bb=bb_col,
-        ).persist()
-        # Join-probe spread (guide §2 — r13, same rationale as the
-        # embedding leg): the banded rows are cached in the batch's
-        # partitioning; spreading the probe side keeps the candidate
-        # agree-fold off a single task while the index APPEND below
-        # still writes from the unspread bb (one file per batch).
-        new = bb.repartition(
-            batch.sparkSession.sparkContext.defaultParallelism
-        ).select(
-            F.col("_id").alias("nid"),
-            F.col("sig").alias("nsig"),
-            "band",
-            "bucket",
+        sig_plan = _minhash_sig_plan(
+            "doc_id", "text", shingle_n, num_hashes, hash_engine
         )
-        # intra-batch candidates (both endpoints arrived together)
-        left = new.select(
-            F.col("nid").alias("a"),
-            F.col("nsig").alias("sig_a"),
-            "band",
-            "bucket",
+        bb_col = _banded_col(bands, rows)
+        total = _uncompressed_input_bytes(spark.read.parquet(in_dir))
+        rebalance = total is None or total / max(n_input_files, 1) >= 128 << 10
+        index_schema = T.StructType(
+            [
+                T.StructField("_id", schema["doc_id"].dataType),
+                T.StructField("sig", T.ArrayType(T.LongType())),
+                T.StructField("band", T.IntegerType()),
+                T.StructField("bucket", T.StringType()),
+                T.StructField("batch", T.IntegerType()),
+            ]
         )
-        right = new.select(
-            F.col("nid").alias("b"),
-            F.col("nsig").alias("sig_b"),
-            "band",
-            "bucket",
-        )
-        cands = left.join(right, ["band", "bucket"]).filter(
-            F.col("a") < F.col("b")
-        )
-        # index probe (one endpoint ingested in an earlier batch);
-        # min/max-normalize so the pair key is orientation-free even
-        # if the replay delivers files out of id order. Only batches
-        # STRICTLY EARLIER than this one are probed — a replayed batch
-        # (failure recovery, or a full reprocess over an existing
-        # work_dir) must not see its own or later appends, or the
-        # rerun emits pairs twice. The read routes through the shared
-        # accreting-index contract (io/connectors.py): `batch` is a
-        # partition column, so the < filter statically prunes to the
-        # earlier partitions — same file set the old hand-built path
-        # list produced.
-        # the per-run ledger answers "are there earlier partitions?"
-        # for BOTH layouts (r14 — the run starts from an empty
-        # index/table, so within-run state is authoritative)
-        has_earlier = _has_earlier(
-            attempted,
-            batch_id,
-            () if index_layout == "bucketed" else (index_dir,),
-        )
-        if has_earlier:
-            if index_layout == "bucketed":
-                idx = (
-                    spark.table(index_table)
-                    .filter(F.col("batch") < batch_id)
-                    .drop("batch")
-                )
-            else:
-                idx = (
-                    read_index(
-                        spark, index_dir, fmt="parquet",
-                        schema=idx_schema,
-                    )
-                    .filter(F.col("batch") < batch_id)
-                    .drop("batch")
-                )
-            probe = new.join(idx, ["band", "bucket"]).filter(
-                F.col("nid") != F.col("_id")
+
+        def step(batch: DataFrame, earlier: dict | None):
+            # persisted, not counted: whichever of the pairs job and the
+            # index append touches a partition first computes it, the
+            # other blocks on the cache lock and reads it
+            bb = _banded(
+                _portable_minhash_sigs(
+                    batch, "doc_id", "text", shingle_n, num_hashes,
+                    hash_engine=hash_engine,
+                    _plan=sig_plan,
+                    _rebalance=rebalance,
+                ),
+                bands,
+                rows,
+                _bb=bb_col,
+            ).persist()
+            flagged = _posting_pairs(
+                bb,
+                earlier and earlier["index"],
+                ["band", "bucket"],
+                "sig",
+                agree.alias("agree"),
+                F.col("agree") >= min_agree,
             )
-            cross = probe.select(
-                F.least("nid", "_id").alias("a"),
-                F.greatest("nid", "_id").alias("b"),
-                F.when(F.col("nid") < F.col("_id"), F.col("nsig"))
-                .otherwise(F.col("sig"))
-                .alias("sig_a"),
-                F.when(F.col("nid") < F.col("_id"), F.col("sig"))
-                .otherwise(F.col("nsig"))
-                .alias("sig_b"),
-            )
-            cands = cands.select("a", "b", "sig_a", "sig_b").unionByName(
-                cross
-            )
-        else:
-            cands = cands.select("a", "b", "sig_a", "sig_b")
-        flagged = (
-            cands.select("a", "b", agree.alias("agree"))
-            .filter(F.col("agree") >= min_agree)
-            .distinct()  # one row per pair, however many bands matched
-        )
-        # both sinks go through the shared contract: per-batch
-        # partition, dynamic-overwrite ⇒ a replayed batch replaces its
-        # own partition only, never doubles (idempotent). The ledger
-        # records the id BEFORE either write runs (see the ledger
-        # comment above) — with the writes now concurrent, a failure
-        # of either must leave the id marked attempted so the engine
-        # retry drops the half-written bucketed partition.
-        replayed = batch_id in attempted
-        attempted.add(batch_id)
-        # pairs write (triggers the candidate join + agree filter) on
-        # a pool thread; signature append on this thread. They touch
-        # different directories, and the pairs job's probe reads only
-        # batch < current partitions (committed before this batch
-        # started), so the concurrent batch=current append is never in
-        # its file set — hidden staging dirs are filtered by the
-        # listing. bb is persisted: whichever job touches a partition
-        # first computes it, the other blocks on the cache lock and
-        # reads it.
-        f_pairs = _submit_append(pool, spark, flagged, out_dir, batch_id)
-        try:
-            if index_layout == "bucketed":
-                # only an engine-level replay of an id this run already
-                # ATTEMPTED needs the idempotency DROP — and only when
-                # the prior attempt got far enough to create the table
-                # (the catalog round-trip is paid on retry paths only)
-                append_index_batch_bucketed(
-                    spark,
-                    bb.select("_id", "sig", "band", "bucket"),
-                    index_table,
-                    batch_id,
-                    bucket_cols=["band", "bucket"],
-                    n_buckets=index_buckets,
-                    drop_existing=replayed
-                    and spark.catalog.tableExists(index_table),
-                )
-            else:
-                append_index_batch(
-                    spark,
-                    bb.select("_id", "sig", "band", "bucket"),
-                    index_dir,
-                    batch_id,
-                    fmt="parquet",
-                )
-        finally:
-            f_pairs.result()
-        bb.unpersist()
+            return bb, flagged, {"index": bb}
 
-    q = stream.writeStream.foreachBatch(process).start()
-    try:
-        q.processAllAvailable()
-        if progress_out is not None:
-            # per-micro-batch durations for the marginal-cost curve
-            # (scripts/incremental_dedup_bench.py): batchId +
-            # batchDuration straight from the engine's progress log
-            progress_out.extend(
-                {
-                    "batch_id": p["batchId"],
-                    "duration_ms": p["batchDuration"],
-                    "rows": p["numInputRows"],
-                }
-                for p in q.recentProgress
-                if p["numInputRows"] > 0
-            )
-        if _raw_progress_out is not None:
-            # full engine progress (durationMs breakdown) for the
-            # per-batch fixed-cost decomposition harness
-            import json as _json
+        return {"index": index_schema}, step
 
-            _raw_progress_out.extend(
-                _json.loads(p.json) for p in q.recentProgress
-            )
-    finally:
-        q.stop()
-        pool.shutdown(wait=True)
-    # zero-pairs corpus: partitioned writes of all-empty batches emit
-    # NO files (unlike the old per-batch explicit-dir layout, which
-    # left empty schema'd part files), so the read would fail on
-    # schema inference — return a typed empty result instead
-    if not os.path.isdir(out_dir) or not any(
-        e.startswith("batch=") for e in os.listdir(out_dir)
-    ):
-        return spark.createDataFrame([], "a long, b long, agree integer")
-    # EAGER materialization, lineage truncated: the fixed keyed
-    # work_dir means the NEXT run over the same corpus rmtree's
-    # out_dir first — a lazy read returned here would be silently
-    # invalidated the moment the caller re-invokes (the stale-lazy-
-    # read class the jsonl round-trip documents). localCheckpoint
-    # computes the pairs NOW into block storage, so the returned frame
-    # no longer references the files at all.
-    return (
-        read_index(spark, out_dir, fmt="parquet")
-        .select("a", "b", "agree")
-        .localCheckpoint(eager=True)
+    return _accreting_replay(
+        spark, docs, "doc_id", work_dir, "dedup", n_input_files, setup,
+        "a long, b long, agree integer", progress_out,
     )
 
 
@@ -654,7 +562,6 @@ def incremental_passjoin_dedup(
     work_dir: str | None = None,
     n_input_files: int = 8,
     progress_out: list | None = None,
-    _raw_progress_out: list | None = None,
 ) -> DataFrame:
     """:func:`incremental_minhash_dedup`'s TEXT analog — the PassJoin
     SEGMENT index as a PERSISTED build-once/probe-many artifact
@@ -694,188 +601,96 @@ def incremental_passjoin_dedup(
     )
 
     k = max_dist
-    if work_dir is None:
-        work_dir = os.path.join(
-            "/tmp", f"vspace_incr_pj_{uuid.uuid4().hex[:12]}"
+    dist = F.levenshtein("_kn", "_ko", k)
+
+    def setup(in_dir: str, schema: T.StructType):
+        idt = schema["doc_id"].dataType
+        seg_schema = T.StructType(
+            [
+                T.StructField("_rid", idt),
+                T.StructField("_rlen", T.IntegerType()),
+                T.StructField("_i", T.IntegerType()),
+                T.StructField("_seg", T.StringType()),
+                T.StructField("batch", T.IntegerType()),
+            ]
         )
-    in_dir = os.path.join(work_dir, "in")
-    seg_dir = os.path.join(work_dir, "seg")
-    keys_dir = os.path.join(work_dir, "keys")
-    out_dir = os.path.join(work_dir, "out")
-    import shutil
+        keys_schema = T.StructType(
+            [
+                T.StructField("_id", idt),
+                T.StructField("_k", T.StringType()),
+                T.StructField("batch", T.IntegerType()),
+            ]
+        )
 
-    # new run starts clean (same stale-partition hazard as the
-    # signature index — see incremental_minhash_dedup)
-    for d in (seg_dir, keys_dir, out_dir):
-        shutil.rmtree(d, ignore_errors=True)
+        def step(batch: DataFrame, earlier: dict | None):
+            keyed = batch.select(
+                F.col("doc_id").alias("_id"), "_k"
+            ).persist()
+            keyed.count()  # bounded work: one micro-batch
+            pairs = _hot_pairs_segment(keyed, [], k)
+            if earlier is not None:
+                seg_old, keys_old = earlier["seg"], earlier["keys"]
+                probe_new = _segment_probe_rows(keyed, [], k)
+                cand = (
+                    probe_new.join(
+                        seg_old,
+                        (F.col("_Lr") == F.col("_rlen"))
+                        & (probe_new._i == seg_old._i)
+                        & (F.col("_sub") == F.col("_seg")),
+                    )
+                    .select(
+                        F.col("_pid").alias("_nid"),
+                        F.col("_rid").alias("_oid"),
+                    )
+                    .distinct()
+                )
+                kn = keyed.select(
+                    F.col("_id").alias("_nid"), F.col("_k").alias("_kn")
+                )
+                ko = keys_old.select(
+                    F.col("_id").alias("_oid"), F.col("_k").alias("_ko")
+                )
+                oriented = [
+                    F.least("_nid", "_oid").alias("a"),
+                    F.greatest("_nid", "_oid").alias("b"),
+                    dist.alias("dist"),
+                ]
+                cross_long = (
+                    cand.join(kn, "_nid")
+                    .join(ko, "_oid")
+                    .select(*oriented)
+                    .filter(F.col("dist") >= 0)
+                )
+                # residual: stored key shorter than k+1 (no segments in
+                # the index) — its partners are <= 2k chars by the
+                # length band, so this slice is k-bounded on both sides
+                short_old = ko.filter(F.length("_ko") < k + 1)
+                shortish_new = kn.filter(F.length("_kn") <= 2 * k)
+                cross_short = (
+                    shortish_new.join(
+                        short_old,
+                        F.abs(F.length("_kn") - F.length("_ko")) <= k,
+                    )
+                    .select(*oriented)
+                    .filter(F.col("dist") >= 0)
+                )
+                pairs = pairs.unionByName(cross_long).unionByName(
+                    cross_short
+                )
+            flagged = pairs.groupBy("a", "b").agg(F.min("dist").alias("dist"))
+            return keyed, flagged, {
+                "keys": keyed,
+                "seg": _segment_index_rows(keyed, [], k),
+            }
 
-    docs.select(
+        return {"seg": seg_schema, "keys": keys_schema}, step
+
+    replay = docs.select(
         F.col("doc_id"), F.substring(key_col, 1, key_len).alias("_k")
-    ).filter(F.col("_k").isNotNull()).repartitionByRange(
-        n_input_files, "doc_id"
-    ).write.mode("overwrite").parquet(in_dir)
-
-    schema = spark.read.parquet(in_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-
-    # per-run probe-read schemas + attempted-id ledger + write-overlap
-    # pool (r14, same rationale as the minhash leg)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import types as T
-
-    _idt = schema["doc_id"].dataType
-    seg_schema = T.StructType(
-        [
-            T.StructField("_rid", _idt),
-            T.StructField("_rlen", T.IntegerType()),
-            T.StructField("_i", T.IntegerType()),
-            T.StructField("_seg", T.StringType()),
-            T.StructField("batch", T.IntegerType()),
-        ]
-    )
-    keys_schema = T.StructType(
-        [
-            T.StructField("_id", _idt),
-            T.StructField("_k", T.StringType()),
-            T.StructField("batch", T.IntegerType()),
-        ]
-    )
-    attempted: set[int] = set()
-    pool = ThreadPoolExecutor(max_workers=2)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        keyed = batch.select(F.col("doc_id").alias("_id"), "_k").persist()
-        keyed.count()  # bounded work: one micro-batch
-        intra = _hot_pairs_segment(keyed, [], k)
-        has_earlier = _has_earlier(attempted, batch_id, (seg_dir, keys_dir))
-        pairs = intra
-        if has_earlier:
-            seg_old = (
-                read_index(
-                    spark, seg_dir, fmt="parquet", schema=seg_schema
-                )
-                .filter(F.col("batch") < batch_id)
-                .drop("batch")
-            )
-            keys_old = (
-                read_index(
-                    spark, keys_dir, fmt="parquet", schema=keys_schema
-                )
-                .filter(F.col("batch") < batch_id)
-                .drop("batch")
-            )
-            probe_new = _segment_probe_rows(keyed, [], k)
-            cand = (
-                probe_new.join(
-                    seg_old,
-                    (F.col("_Lr") == F.col("_rlen"))
-                    & (probe_new._i == seg_old._i)
-                    & (F.col("_sub") == F.col("_seg")),
-                )
-                .select(
-                    F.col("_pid").alias("_nid"),
-                    F.col("_rid").alias("_oid"),
-                )
-                .distinct()
-            )
-            kn = keyed.select(
-                F.col("_id").alias("_nid"), F.col("_k").alias("_kn")
-            )
-            ko = keys_old.select(
-                F.col("_id").alias("_oid"), F.col("_k").alias("_ko")
-            )
-            dist = F.levenshtein("_kn", "_ko", k)
-            cross_long = (
-                cand.join(kn, "_nid")
-                .join(ko, "_oid")
-                .select(
-                    F.least("_nid", "_oid").alias("a"),
-                    F.greatest("_nid", "_oid").alias("b"),
-                    dist.alias("dist"),
-                )
-                .filter(F.col("dist") >= 0)
-            )
-            # residual: stored key shorter than k+1 (no segments in
-            # the index) — its partners are <= 2k chars by the length
-            # band, so this slice is k-bounded on both sides
-            short_old = keys_old.filter(F.length("_k") < k + 1).select(
-                F.col("_id").alias("_oid"), F.col("_k").alias("_ko")
-            )
-            shortish_new = keyed.filter(F.length("_k") <= 2 * k).select(
-                F.col("_id").alias("_nid"), F.col("_k").alias("_kn")
-            )
-            cross_short = (
-                shortish_new.join(
-                    short_old,
-                    F.abs(F.length("_kn") - F.length("_ko")) <= k,
-                )
-                .select(
-                    F.least("_nid", "_oid").alias("a"),
-                    F.greatest("_nid", "_oid").alias("b"),
-                    dist.alias("dist"),
-                )
-                .filter(F.col("dist") >= 0)
-            )
-            pairs = intra.unionByName(cross_long).unionByName(cross_short)
-        flagged = pairs.groupBy("a", "b").agg(F.min("dist").alias("dist"))
-        # the three contract writes are independent given the
-        # MATERIALIZED keyed (counted above) and touch different
-        # directories; the pairs job probes only batch < current
-        # partitions of seg/keys — overlap them from driver threads
-        # (guide §2.6 — r14, see the minhash leg)
-        attempted.add(batch_id)
-        f_pairs = _submit_append(pool, spark, flagged, out_dir, batch_id)
-        f_keys = _submit_append(
-            pool, spark, keyed.select("_id", "_k"), keys_dir, batch_id
-        )
-        try:
-            append_index_batch(
-                spark,
-                _segment_index_rows(keyed, [], k),
-                seg_dir,
-                batch_id,
-                fmt="parquet",
-            )
-        finally:
-            f_keys.result()
-            f_pairs.result()
-        keyed.unpersist()
-
-    q = stream.writeStream.foreachBatch(process).start()
-    try:
-        q.processAllAvailable()
-        if progress_out is not None:
-            progress_out.extend(
-                {
-                    "batch_id": p["batchId"],
-                    "duration_ms": p["batchDuration"],
-                    "rows": p["numInputRows"],
-                }
-                for p in q.recentProgress
-                if p["numInputRows"] > 0
-            )
-        if _raw_progress_out is not None:
-            import json as _json
-
-            _raw_progress_out.extend(
-                _json.loads(p.json) for p in q.recentProgress
-            )
-    finally:
-        q.stop()
-        pool.shutdown(wait=True)
-    if not os.path.isdir(out_dir) or not any(
-        e.startswith("batch=") for e in os.listdir(out_dir)
-    ):
-        return spark.createDataFrame([], "a long, b long, dist integer")
-    return (
-        read_index(spark, out_dir, fmt="parquet")
-        .select("a", "b", "dist")
-        .localCheckpoint(eager=True)
+    ).filter(F.col("_k").isNotNull())
+    return _accreting_replay(
+        spark, replay, "doc_id", work_dir, "pj", n_input_files, setup,
+        "a long, b long, dist integer", progress_out,
     )
 
 
@@ -890,40 +705,27 @@ def incremental_embedding_dedup(
     work_dir: str | None = None,
     n_input_files: int = 8,
     progress_out: list | None = None,
-    carry_vectors: bool = True,
     sig_engine: str = "fold",
-    _raw_progress_out: list | None = None,
 ) -> DataFrame:
     """The EMBEDDING leg of the incremental-dedup trilogy (MinHash
-    text signatures, PassJoin edit-distance segments, and now
+    text signatures, PassJoin edit-distance segments, and
     hyperplane-LSH cosine): replay ``embeddings`` as a multi-batch
     file stream and near-dup each micro-batch against the accreting
     bucket index. Returns PAIRS ``[a, b, cos]`` (a < b, exact cosine
     ≥ ``threshold``, rounded to 6 — the float discipline).
 
     The index accretes through the shared per-batch-partition
-    contract. ``carry_vectors=True`` (default) stores the vector IN
-    each LSH posting (id, vector, table, bucket), so a probe is ONE
-    equi-join on (table, bucket) and the cosine confirm reads the
-    matched rows directly. The r11 100× measurement motivated this:
-    the original two-relation layout (id-only postings + a separate
-    ``vecs`` relation) re-shuffled the ENTIRE vector history through
-    the candidate→vector join every micro-batch — a per-batch cost
-    linear in corpus history (slope +292 ms/batch at 200k vectors),
-    which is quadratic total ingest work. Carrying the vector costs
-    ``n_tables``× vector storage in the postings; for high-dim
-    embeddings where that dominates, ``carry_vectors=False`` keeps
-    the two-relation layout (same output, equality-tested) — at
-    warehouse scale its ``vecs`` relation would be bucketed by id so
-    the candidate join co-locates instead of re-shuffling history.
+    contract as vector-carrying LSH postings ``(id, vector, table,
+    bucket)`` under ``<work_dir>/idx``, so a probe is ONE equi-join on
+    (table, bucket) and the cosine confirm reads the matched rows
+    directly — no history-sized second shuffle to fetch the old
+    vectors (the r11 100× measurement: slope −8 ms/batch, against
+    +292 ms/batch for id-only postings joined to a vector relation).
     Buckets use the PORTABLE md5 hyperplanes (every sign bit exact in
     IEEE double on any engine), so the union over batches equals the
     batch LSH pair set and the operator is fully oracle-checkable
     with the same SQL as ``stream_dedup_docs``'s embedding twin — the
-    batch-boundary-independence argument is the module docstring's:
-    each qualifying pair surfaces exactly once, via the index probe
-    when its endpoints arrive apart or the intra-batch self-join when
-    together.
+    batch-boundary-independence argument is the module docstring's.
 
     ``bits_per_table=None`` (default) AUTO-SIZES the bucket width to
     the corpus: a fixed fixture-sized width is the one knob here that
@@ -968,297 +770,115 @@ def incremental_embedding_dedup(
         portable_hyperplanes,
     )
 
-    if work_dir is None:
-        work_dir = os.path.join(
-            "/tmp", f"vspace_incr_emb_{uuid.uuid4().hex[:12]}"
-        )
-    in_dir = os.path.join(work_dir, "in")
-    idx_dir = os.path.join(work_dir, "idx")
-    vecs_dir = os.path.join(work_dir, "vecs")
-    out_dir = os.path.join(work_dir, "out")
-    import shutil
-
-    for d in (idx_dir, vecs_dir, out_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    embeddings.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    ).repartitionByRange(n_input_files, "_id").write.mode(
-        "overwrite"
-    ).parquet(in_dir)
-
-    # dim from the materialized replay's first row — bounded-collect:
-    # one scalar (the hyperplanes are a driver-side literal table)
-    dim = spark.read.parquet(in_dir).select(F.size("_v")).first()[0]
-    if bits_per_table is None:
-        # auto-size from the replay's parquet footers (a metadata
-        # read; count() only as fallback) — see docstring for the rule
-        n_est = footer_row_count(spark.read.parquet(in_dir))
-        if n_est is None:
-            n_est = spark.read.parquet(in_dir).count()
-        bits, bits_per_table = _auto_lsh_layout(n_est, bits)
-    n_tables = bits // bits_per_table
-    if n_tables < 1:
-        raise ValueError(
-            f"bits_per_table ({bits_per_table}) exceeds bits ({bits}): "
-            "n_tables would be 0 and every pair would be silently missed"
-        )
-    planes = portable_hyperplanes(dim, bits)
-
-    # bucketed_fold runs once per MICRO-BATCH: its constant-size
-    # bucket column is built once, not a literal tree per batch (r13:
-    # seconds of driver time each)
-    _fold_tb = F.explode(
-        lsh_buckets(F.col("_v"), planes, bits_per_table, n_tables)
-    ).alias("_tb")
-
-    def bucketed_fold(df: DataFrame) -> DataFrame:
-        return df.select("_id", "_v", _fold_tb).select(
-            "_id", "_v", F.col("_tb.tbl"), F.col("_tb.bucket")
-        )
-
-    # plain literals so the closure is self-contained (executors
-    # cannot import this repo when the driver runs elsewhere —
-    # NOTES.md seam #2, same as brute_force_topk_arrow)
-    planes_lit = [[float(x) for x in p] for p in planes[: bits]]
-    n_tables_lit, bpt_lit = n_tables, bits_per_table
-
-    def bucketed_arrow(df: DataFrame) -> DataFrame:
-        def sigs(batches):
-            import numpy as np
-            import pandas as pd
-
-            P = np.asarray(planes_lit, dtype=np.float64)  # bits × dim
-            weights = (
-                2 ** np.arange(bpt_lit, dtype=np.int64)
-            )  # bit j → 2^j within its table
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-                )
-                bits_on = (V @ P.T) > 0  # rows × bits, one matmul
-                out_frames = []
-                for t in range(n_tables_lit):
-                    chunk = bits_on[:, t * bpt_lit : (t + 1) * bpt_lit]
-                    out_frames.append(
-                        pd.DataFrame(
-                            {
-                                "_id": pdf["_id"].to_numpy(),
-                                "_v": pdf["_v"].to_numpy(),
-                                "tbl": np.full(len(pdf), t, dtype=np.int32),
-                                "bucket": chunk @ weights,
-                            }
-                        )
-                    )
-                yield pd.concat(out_frames, ignore_index=True)
-
-        return df.mapInPandas(
-            sigs,
-            schema=(
-                "_id long, _v array<float>, tbl int, bucket long"
-            ),
-        )
-
-    bucketed = bucketed_arrow if sig_engine == "arrow" else bucketed_fold
-
-    schema = spark.read.parquet(in_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
     # RAW cosine for the threshold filter (the oracle's WHERE cos >=
     # threshold also filters the raw value, rounding only in SELECT —
     # filtering the rounded value would disagree on cosines in
     # [threshold - 5e-7, threshold)); round only for the output column.
-    cos_raw = cosine_similarity(F.col("_va"), F.col("_vb"))
+    cos_raw = cosine_similarity(F.col("_pa"), F.col("_pb"))
 
-    # per-run probe-read schemas + attempted-id ledger + write-overlap
-    # pool (r14, same rationale as the minhash leg: skip per-batch
-    # footer schema inference over the growing index, answer
-    # "earlier partitions?" from within-run state, and overlap the
-    # independent contract writes from two driver threads)
-    from concurrent.futures import ThreadPoolExecutor
+    def setup(in_dir: str, schema: T.StructType):
+        # dim from the materialized replay's first row — bounded-collect:
+        # one scalar (the hyperplanes are a driver-side literal table)
+        dim = spark.read.parquet(in_dir).select(F.size("_v")).first()[0]
+        n_bits, bpt = bits, bits_per_table
+        if bpt is None:
+            # auto-size from the replay's parquet footers (a metadata
+            # read; count() only as fallback) — see docstring for the rule
+            n_est = footer_row_count(spark.read.parquet(in_dir))
+            if n_est is None:
+                n_est = spark.read.parquet(in_dir).count()
+            n_bits, bpt = _auto_lsh_layout(n_est, bits)
+        n_tables = n_bits // bpt
+        if n_tables < 1:
+            raise ValueError(
+                f"bits_per_table ({bpt}) exceeds bits ({n_bits}): "
+                "n_tables would be 0 and every pair would be silently missed"
+            )
+        planes = portable_hyperplanes(dim, n_bits)
 
-    from pyspark.sql import types as T
+        if sig_engine == "fold":
+            # built once per run, not a literal tree per batch (r13:
+            # seconds of driver time each)
+            tb = F.explode(
+                lsh_buckets(F.col("_v"), planes, bpt, n_tables)
+            ).alias("_tb")
 
-    _idt = schema["_id"].dataType
-    _vt = schema["_v"].dataType
-    _posting = [
-        T.StructField("_id", _idt),
-        T.StructField("tbl", T.IntegerType()),
-        T.StructField("bucket", T.LongType()),
-        T.StructField("batch", T.IntegerType()),
-    ]
-    if carry_vectors:
-        _posting.insert(1, T.StructField("_v", _vt))
-    idx_schema = T.StructType(_posting)
-    vecs_schema = T.StructType(
-        [
-            T.StructField("_id", _idt),
-            T.StructField("_v", _vt),
-            T.StructField("batch", T.IntegerType()),
-        ]
+            def bucketed(df: DataFrame) -> DataFrame:
+                return df.select("_id", "_v", tb).select(
+                    "_id", "_v", F.col("_tb.tbl"), F.col("_tb.bucket")
+                )
+
+        else:
+            # plain literals so the closure is self-contained (executors
+            # cannot import this repo when the driver runs elsewhere —
+            # NOTES.md seam #2, same as brute_force_topk_arrow)
+            planes_lit = [[float(x) for x in p] for p in planes[:n_bits]]
+
+            def sigs(batches):
+                import numpy as np
+                import pandas as pd
+
+                P = np.asarray(planes_lit, dtype=np.float64)  # bits × dim
+                # bit j → 2^j within its table
+                weights = 2 ** np.arange(bpt, dtype=np.int64)
+                for pdf in batches:
+                    if not len(pdf):
+                        continue
+                    V = np.asarray(
+                        [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
+                    )
+                    bits_on = (V @ P.T) > 0  # rows × bits, one matmul
+                    yield pd.concat(
+                        [
+                            pd.DataFrame(
+                                {
+                                    "_id": pdf["_id"].to_numpy(),
+                                    "_v": pdf["_v"].to_numpy(),
+                                    "tbl": np.full(len(pdf), t, np.int32),
+                                    "bucket": bits_on[
+                                        :, t * bpt : (t + 1) * bpt
+                                    ] @ weights,
+                                }
+                            )
+                            for t in range(n_tables)
+                        ],
+                        ignore_index=True,
+                    )
+
+            def bucketed(df: DataFrame) -> DataFrame:
+                return df.mapInPandas(
+                    sigs, "_id long, _v array<float>, tbl int, bucket long"
+                )
+
+        idx_schema = T.StructType(
+            [
+                T.StructField("_id", schema["_id"].dataType),
+                T.StructField("_v", schema["_v"].dataType),
+                T.StructField("tbl", T.IntegerType()),
+                T.StructField("bucket", T.LongType()),
+                T.StructField("batch", T.IntegerType()),
+            ]
+        )
+
+        def step(batch: DataFrame, earlier: dict | None):
+            bb = bucketed(batch).persist()
+            bb.count()  # bounded work: one micro-batch
+            flagged = _posting_pairs(
+                bb,
+                earlier and earlier["idx"],
+                ["tbl", "bucket"],
+                "_v",
+                cos_raw.alias("cos"),
+                F.col("cos") >= threshold,
+            ).select("a", "b", F.round("cos", 6).alias("cos"))
+            return bb, flagged, {"idx": bb}
+
+        return {"idx": idx_schema}, step
+
+    replay = embeddings.select(
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
     )
-    attempted: set[int] = set()
-    pool = ThreadPoolExecutor(max_workers=2)
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        bb = bucketed(batch).persist()
-        bb.count()  # bounded work: one micro-batch
-        # The JOIN PROBE side rides a round-robin spread of the tiny
-        # posting set (guide §2 — r13): bb is cached in the batch's
-        # IO partitioning (ONE partition for a one-file trigger), the
-        # planner broadcasts the other join side, and the interpreted
-        # cosine confirm then ran single-task over every candidate —
-        # measured 2–3.6 s/batch at 244k candidates (probe in
-        # OPTIMIZATION_r13.md). Spreading batch-sized posting rows is
-        # a KB-scale shuffle; the index APPEND below still writes from
-        # the unspread bb, so the accreting index keeps one file per
-        # batch.
-        spread = bb.repartition(
-            batch.sparkSession.sparkContext.defaultParallelism
-        )
-        left = spread.select(
-            F.col("_id").alias("a"), F.col("_v").alias("_va"),
-            "tbl", "bucket",
-        )
-        right = bb.select(
-            F.col("_id").alias("b"), F.col("_v").alias("_vb"),
-            "tbl", "bucket",
-        )
-        cands = (
-            left.join(right, ["tbl", "bucket"])
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b", "_va", "_vb")
-        )
-        has_earlier = _has_earlier(
-            attempted,
-            batch_id,
-            (idx_dir,) if carry_vectors else (idx_dir, vecs_dir),
-        )
-        if has_earlier:
-            idx = (
-                read_index(
-                    spark, idx_dir, fmt="parquet", schema=idx_schema
-                )
-                .filter(F.col("batch") < batch_id)
-                .drop("batch")
-            )
-            new_side = spread.select(
-                F.col("_id").alias("nid"),
-                F.col("_v").alias("nv"),
-                "tbl",
-                "bucket",
-            )
-            if carry_vectors:
-                # postings carry the vector: ONE (tbl, bucket) join
-                # yields candidate rows with both vectors in hand —
-                # no history-sized second shuffle
-                probe = new_side.join(
-                    idx.withColumnRenamed("_id", "_oid")
-                    .withColumnRenamed("_v", "_ov"),
-                    ["tbl", "bucket"],
-                ).filter(F.col("nid") != F.col("_oid"))
-            else:
-                vecs_old = (
-                    read_index(
-                        spark, vecs_dir, fmt="parquet",
-                        schema=vecs_schema,
-                    )
-                    .filter(F.col("batch") < batch_id)
-                    .drop("batch")
-                )
-                matched = new_side.join(idx, ["tbl", "bucket"]).filter(
-                    F.col("nid") != F.col("_id")
-                )
-                probe = matched.join(
-                    vecs_old.withColumnRenamed("_id", "_oid")
-                    .withColumnRenamed("_v", "_ov"),
-                    matched["_id"] == F.col("_oid"),
-                )
-            cross = probe.select(
-                F.least("nid", "_oid").alias("a"),
-                F.greatest("nid", "_oid").alias("b"),
-                F.when(F.col("nid") < F.col("_oid"), F.col("nv"))
-                .otherwise(F.col("_ov"))
-                .alias("_va"),
-                F.when(F.col("nid") < F.col("_oid"), F.col("_ov"))
-                .otherwise(F.col("nv"))
-                .alias("_vb"),
-            )
-            cands = cands.unionByName(cross)
-        flagged = (
-            cands.select("a", "b", cos_raw.alias("_cos_raw"))
-            .filter(F.col("_cos_raw") >= threshold)
-            .select("a", "b", F.round("_cos_raw", 6).alias("cos"))
-            .distinct()  # one row per pair, however many tables matched
-        )
-        # contract writes overlap (guide §2.6 — r14, see the minhash
-        # leg): the pairs write (probe join + cosine confirm) and the
-        # posting/vector appends are independent given the
-        # MATERIALIZED bb (counted above) and touch different
-        # directories; the probe reads only batch < current partitions
-        attempted.add(batch_id)
-        f_pairs = _submit_append(pool, spark, flagged, out_dir, batch_id)
-        try:
-            if carry_vectors:
-                append_index_batch(
-                    spark,
-                    bb.select("_id", "_v", "tbl", "bucket"),
-                    idx_dir,
-                    batch_id,
-                    fmt="parquet",
-                )
-            else:
-                f_vecs = _submit_append(
-                    pool, spark, bb.select("_id", "_v").distinct(),
-                    vecs_dir, batch_id,
-                )
-                try:
-                    append_index_batch(
-                        spark,
-                        bb.select("_id", "tbl", "bucket"),
-                        idx_dir,
-                        batch_id,
-                        fmt="parquet",
-                    )
-                finally:
-                    f_vecs.result()
-        finally:
-            f_pairs.result()
-        bb.unpersist()
-
-    q = stream.writeStream.foreachBatch(process).start()
-    try:
-        q.processAllAvailable()
-        if progress_out is not None:
-            progress_out.extend(
-                {
-                    "batch_id": p["batchId"],
-                    "duration_ms": p["batchDuration"],
-                    "rows": p["numInputRows"],
-                }
-                for p in q.recentProgress
-                if p["numInputRows"] > 0
-            )
-        if _raw_progress_out is not None:
-            import json as _json
-
-            _raw_progress_out.extend(
-                _json.loads(p.json) for p in q.recentProgress
-            )
-    finally:
-        q.stop()
-        pool.shutdown(wait=True)
-    if not os.path.isdir(out_dir) or not any(
-        e.startswith("batch=") for e in os.listdir(out_dir)
-    ):
-        return spark.createDataFrame([], "a long, b long, cos double")
-    return (
-        read_index(spark, out_dir, fmt="parquet")
-        .select("a", "b", "cos")
-        .localCheckpoint(eager=True)
+    return _accreting_replay(
+        spark, replay, "_id", work_dir, "emb", n_input_files, setup,
+        "a long, b long, cos double", progress_out,
     )
