@@ -1575,12 +1575,9 @@ def test_two_level_router_nprobe_all_equals_flat(spark):
     all_probe = cells((coarse, owner), len(coarse))
     assert all_probe == flat
 
-    a1 = sum(
-        cells((coarse, owner), 1)[i] == flat[i] for i in flat
-    )
-    a2 = sum(
-        cells((coarse, owner), 2)[i] == flat[i] for i in flat
-    )
+    one, two = cells((coarse, owner), 1), cells((coarse, owner), 2)
+    a1 = sum(one[i] == flat[i] for i in flat)
+    a2 = sum(two[i] == flat[i] for i in flat)
     assert a2 >= a1
 
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vspace_spark.functions.kernels import as_matrix, nearest_center, router
 from vspace_spark.functions.text import ngrams_col, tokenize_col
 from vspace_spark.functions.vectors import cosine_similarity
 
@@ -2070,11 +2071,11 @@ def _semantic_dedup_arrow_raw(
 ) -> DataFrame:
     """Arrow/numpy engine for :func:`semantic_dedup`'s raw core (see
     its docstring): matmul cell assignment per Arrow batch, one Gram
-    matmul per cell for the pairwise pass. Closures are
-    self-contained (no module globals) so executor workers need no
-    importable vspace_spark (NOTES.md seam #2). Assumes non-null
-    vectors (like the other Arrow twins); zero-norm vectors never
-    pair and come out kept.
+    matmul per cell for the pairwise pass. The closures reference no
+    module global but the shared kernels, which ship by value, so
+    executor workers need no importable vspace_spark (NOTES.md seam
+    #2). Assumes non-null vectors (like the other Arrow twins);
+    zero-norm vectors never pair and come out kept.
 
     ``coarse`` = (coarse_centers Kc×D, fine_owner K ints — the coarse
     cell each fine center belongs to): two-level assignment for
@@ -2093,90 +2094,38 @@ def _semantic_dedup_arrow_raw(
     measured that this routing is near-chance over a RANDOM fine
     codebook (no shared cluster structure), which is why the portable
     md5-codebook path stays flat and only the trained twin uses it."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     centers_rows = [list(map(float, c)) for c in centers]
     th = float(threshold)
-    coarse_rows = (
-        None if coarse is None else [list(map(float, c)) for c in coarse[0]]
+    coarse_rows = None if coarse is None else (
+        [list(map(float, c)) for c in coarse[0]],
+        [int(o) for o in coarse[1]],
     )
-    owner_rows = None if coarse is None else [int(o) for o in coarse[1]]
     nprobe = int(coarse_nprobe)
     if nprobe < 1:
         raise ValueError(f"coarse_nprobe must be >= 1, got {nprobe}")
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+    def assign(batches):
+        import pandas as pd
 
-        C = _np.asarray(centers_rows, dtype=_np.float64)  # K×D
-        c2 = (C * C).sum(1)[None, :]
-        if coarse_rows is not None:
-            CC = _np.asarray(coarse_rows, dtype=_np.float64)  # Kc×D
-            cc2 = (CC * CC).sum(1)[None, :]
-            owner = _np.asarray(owner_rows, dtype=_np.int64)
-            members = [
-                _np.nonzero(owner == c)[0] for c in range(len(CC))
-            ]
+        route = router(centers_rows, coarse_rows, nprobe)
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = _np.stack(
-                [_np.asarray(v, dtype=_np.float64) for v in pdf["_vin"]]
-            )
-            # ||v−c||² = ||v||² − 2 v·c + ||c||²; argmin unaffected by
-            # the shared ||v||² term, ties break to the lowest cell id
-            # (np.argmin picks the first minimum)
-            if coarse_rows is None:
-                d = c2 - 2.0 * (V @ C.T)
-                cells = d.argmin(1).astype("int32")
-            else:
-                dc = cc2 - 2.0 * (V @ CC.T)
-                np_eff = min(nprobe, len(CC))
-                # per-row nearest np_eff coarse cells, nearest first
-                # (argsort, not argpartition: probe order decides
-                # equal-distance ties — nearest-coarse wins, matching
-                # the single-probe convention)
-                order = _np.argsort(dc, axis=1)[:, :np_eff]
-                best_d = _np.full(len(V), _np.inf)
-                cells = _np.empty(len(V), dtype="int32")
-                for p in range(np_eff):
-                    cgrp = order[:, p]
-                    for c in range(len(CC)):
-                        rows = _np.nonzero(cgrp == c)[0]
-                        if not len(rows):
-                            continue
-                        m = members[c]
-                        if not len(m):
-                            continue
-                        sub = (
-                            c2[0, m][None, :]
-                            - 2.0 * (V[rows] @ C[m].T)
-                        )
-                        j = sub.argmin(1)
-                        d = sub[_np.arange(len(rows)), j]
-                        upd = d < best_d[rows]
-                        rr = rows[upd]
-                        best_d[rr] = d[upd]
-                        cells[rr] = m[j[upd]].astype("int32")
-            yield _pd.DataFrame(
+            V = as_matrix(pdf["_vin"])
+            yield pd.DataFrame(
                 {
                     "_id": pdf["_idin"].astype("int64"),
-                    "cell": cells,
-                    "_v": list(V.astype(_np.float64)),
+                    "cell": route(V).astype("int32"),
+                    "_v": list(V),
                 }
             )
 
-    def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+    def cell_pairs(pdf):
         import numpy as _np
         import pandas as _pd
 
         pdf = pdf.sort_values("_id").reset_index(drop=True)
-        V = _np.stack(
-            [_np.asarray(v, dtype=_np.float64) for v in pdf["_v"]]
-        )
+        V = as_matrix(pdf["_v"])
         ids = pdf["_id"].to_numpy()
         norms = _np.sqrt((V * V).sum(1))
         nz = norms > 0
@@ -2305,14 +2254,12 @@ def hierarchical_codebook(
             d2 = np.minimum(d2, ((pts - pts[j]) ** 2).sum(1))
         C = pts[idx].copy()
         for _ in range(steps):
-            d = (C * C).sum(1)[None, :] - 2.0 * (pts @ C.T)
-            a = d.argmin(1)
+            a = nearest_center(pts, C)
             for c in range(len(C)):
                 mask = a == c
                 if mask.any():
                     C[c] = pts[mask].mean(0)
-        d = (C * C).sum(1)[None, :] - 2.0 * (pts @ C.T)
-        return C, d.argmin(1)
+        return C, nearest_center(pts, C)
 
     kc = kc or max(2, int(np.ceil(np.sqrt(k))))
     CC, ca = lloyd(X, kc, iters)

@@ -18,7 +18,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from vspace_spark.functions.vectors import cosine_similarity, dot
+from vspace_spark.functions.kernels import (
+    as_matrix,
+    center_dists,
+    router,
+    top_n,
+)
+from vspace_spark.functions.vectors import dot, l2_norm
+
+
+def _top_k(
+    scored: DataFrame, k: int, by: F.Column, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """Each query's ``k`` best candidates by ``by`` (``F.desc("_cos")``
+    or ``F.asc("_dist")``), ties to the lower neighbor id, as
+    ``[query_id, neighbor_id, rank, *keep]``."""
+    w = Window.partitionBy("query_id").orderBy(by, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", *keep)
+    )
 
 
 def brute_force_topk(
@@ -42,8 +62,6 @@ def brute_force_topk(
     # dividing by nullif(nq*nc, 0) builds the identical expression
     # tree in the identical order — every score and rank is
     # bit-identical (oracle-pinned via ann_bruteforce_top5).
-    from vspace_spark.functions.vectors import l2_norm
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
@@ -65,14 +83,7 @@ def brute_force_topk(
             ).alias("_cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top_k(scored, k, F.desc("_cos"))
 
 
 def random_hyperplanes(dim: int, bits: int, spark) -> DataFrame:
@@ -238,63 +249,34 @@ def _assign_cells_arrow(
     per-row struct fold, yielding ``[neighbor_id, _cv, cell]``.
 
     ``coarse`` = (coarse_centers, fine_owner) from
-    ``hierarchical_codebook``: two-level routing — argmin over the Kc
+    ``hierarchical_codebook``: two-level routing through the shared
+    :func:`~vspace_spark.functions.kernels.router` — argmin over the Kc
     coarse centers, then over only the fine centers the winning coarse
-    cell owns (N·(Kc + K/Kc)·D flops instead of N·K·D). Same routing
-    (and the same sharp edge: meaningful only for codebooks whose two
-    levels share trained cluster structure) as
-    ``dedup._semantic_dedup_arrow_raw``; the closure is self-contained
-    so executor workers need no importable vspace_spark (NOTES.md seam
-    #2). Ties break to the lowest cell id (np.argmin takes the first
-    minimum) — the same tie-break as the fold path's struct sort.
+    cell owns (N·(Kc + K/Kc)·D flops instead of N·K·D). IVF probes ONE
+    coarse cell; ``semantic_dedup``'s arrow lane probes
+    ``coarse_nprobe`` (default 2). Meaningful only for codebooks whose
+    two levels share trained cluster structure. Ties break to the
+    lowest cell id (np.argmin takes the first minimum) — the same
+    tie-break as the fold path's struct sort.
     """
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     centers_rows = [list(map(float, c)) for c in centers]
-    coarse_rows = (
-        None if coarse is None else [list(map(float, c)) for c in coarse[0]]
+    coarse_rows = None if coarse is None else (
+        [list(map(float, c)) for c in coarse[0]],
+        [int(o) for o in coarse[1]],
     )
-    owner_rows = None if coarse is None else [int(o) for o in coarse[1]]
 
-    def assign(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as _np
-        import pandas as _pd
+    def assign(batches):
+        import pandas as pd
 
-        C = _np.asarray(centers_rows, dtype=_np.float64)  # K×D
-        c2 = (C * C).sum(1)[None, :]
-        if coarse_rows is not None:
-            CC = _np.asarray(coarse_rows, dtype=_np.float64)  # Kc×D
-            cc2 = (CC * CC).sum(1)[None, :]
-            owner = _np.asarray(owner_rows, dtype=_np.int64)
-            members = [_np.nonzero(owner == c)[0] for c in range(len(CC))]
+        route = router(centers_rows, coarse_rows)
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = _np.stack(
-                [_np.asarray(v, dtype=_np.float64) for v in pdf["_vin"]]
-            )
-            # ||v−c||² = ||v||² − 2 v·c + ||c||²; the shared ||v||²
-            # term cannot change the argmin
-            if coarse_rows is None:
-                d = c2 - 2.0 * (V @ C.T)
-                cells = d.argmin(1).astype("int32")
-            else:
-                dc = cc2 - 2.0 * (V @ CC.T)
-                cgrp = dc.argmin(1)
-                cells = _np.empty(len(V), dtype="int32")
-                for c in range(len(CC)):
-                    rows = _np.nonzero(cgrp == c)[0]
-                    if not len(rows):
-                        continue
-                    m = members[c]
-                    sub = c2[0, m][None, :] - 2.0 * (V[rows] @ C[m].T)
-                    cells[rows] = m[sub.argmin(1)]
-            yield _pd.DataFrame(
+            V = as_matrix(pdf["_vin"])
+            yield pd.DataFrame(
                 {
                     "neighbor_id": pdf["_idin"].astype("int64"),
-                    "cell": cells,
+                    "cell": route(V).astype("int32"),
                     "_cv": list(V),
                 }
             )
@@ -319,37 +301,28 @@ def _probe_cells_arrow(
     why the arrow engine routes the query side through numpy too.
     Ties break (dist, cell) ascending like the fold path's struct
     sort."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     centers_rows = [list(map(float, c)) for c in centers]
     npb = int(n_probe)
 
-    def probe(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as _np
-        import pandas as _pd
+    def probe(batches):
+        import numpy as np
+        import pandas as pd
 
-        C = _np.asarray(centers_rows, dtype=_np.float64)  # K×D
-        c2 = (C * C).sum(1)[None, :]
+        C = np.asarray(centers_rows, dtype=np.float64)  # K×D
+        c2 = (C * C).sum(1)
         take = min(npb, len(C))
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = _np.stack(
-                [_np.asarray(v, dtype=_np.float64) for v in pdf["_vin"]]
-            )
-            d = c2 - 2.0 * (V @ C.T)
-            # stable argsort on distance ⇒ equal distances keep index
-            # (= lowest cell) order — the fold path's tie-break
-            top = _np.argsort(d, axis=1, kind="stable")[:, :take]
-            yield _pd.DataFrame(
+            V = as_matrix(pdf["_vin"])
+            top = top_n(center_dists(V, C, c2), take)
+            yield pd.DataFrame(
                 {
-                    "query_id": _np.repeat(
+                    "query_id": np.repeat(
                         pdf["_idin"].to_numpy().astype("int64"), take
                     ),
                     "cell": top.reshape(-1).astype("int32"),
-                    "_qv": list(_np.repeat(V, take, axis=0)),
+                    "_qv": list(np.repeat(V, take, axis=0)),
                 }
             )
 
@@ -388,60 +361,26 @@ def refine_codebook(
     """
     import numpy as np
 
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     C_cur = [list(map(float, c)) for c in centers]
     owner = None if coarse is None else [int(o) for o in coarse[1]]
     dim = len(C_cur[0])
     for _ in range(int(steps)):
         centers_rows = C_cur
-        coarse_rows = (
-            None
-            if coarse is None
-            else [list(map(float, c)) for c in coarse[0]]
+        coarse_rows = None if coarse is None else (
+            [list(map(float, c)) for c in coarse[0]],
+            owner,
         )
-        owner_rows = owner
 
-        def partial_sums(
-            batches: "Iterator[pd.DataFrame]",
-        ) -> "Iterator[pd.DataFrame]":
+        def partial_sums(batches):
             import numpy as _np
             import pandas as _pd
 
-            C = _np.asarray(centers_rows, dtype=_np.float64)
-            c2 = (C * C).sum(1)[None, :]
-            if coarse_rows is not None:
-                CC = _np.asarray(coarse_rows, dtype=_np.float64)
-                cc2 = (CC * CC).sum(1)[None, :]
-                own = _np.asarray(owner_rows, dtype=_np.int64)
-                members = [
-                    _np.nonzero(own == c)[0] for c in range(len(CC))
-                ]
+            route = router(centers_rows, coarse_rows)
             for pdf in batches:
                 if not len(pdf):
                     continue
-                V = _np.stack(
-                    [
-                        _np.asarray(v, dtype=_np.float64)
-                        for v in pdf["_vin"]
-                    ]
-                )
-                if coarse_rows is None:
-                    cells = (c2 - 2.0 * (V @ C.T)).argmin(1)
-                else:
-                    cgrp = (cc2 - 2.0 * (V @ CC.T)).argmin(1)
-                    cells = _np.empty(len(V), dtype=_np.int64)
-                    for c in range(len(CC)):
-                        rows = _np.nonzero(cgrp == c)[0]
-                        if not len(rows):
-                            continue
-                        m = members[c]
-                        sub = c2[0, m][None, :] - 2.0 * (
-                            V[rows] @ C[m].T
-                        )
-                        cells[rows] = m[sub.argmin(1)]
+                V = as_matrix(pdf["_vin"])
+                cells = route(V)
                 uniq = _np.unique(cells)
                 sums = _np.zeros((len(uniq), V.shape[1]))
                 cnts = _np.zeros(len(uniq), dtype=_np.int64)
@@ -506,7 +445,6 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
     centers: list[list[float]] | None = None,
     assign_engine: str = "fold",
     trainer_sample_rows: int | None = None,
@@ -525,8 +463,7 @@ def ivf_topk(
     pyspark.ml KMeans (VERDICT r8 #1): same clustering quality on the
     recall floor, but the trainer is seconds at K=4096 where ml KMeans
     takes minutes of iterative Spark jobs (PERF.md round 9), it is
-    deterministic without a seed (``seed`` is retained for signature
-    compatibility and ignored), and it hands back the coarse routing
+    deterministic without a seed, and it hands back the coarse routing
     tier the arrow assigner exploits at corpus scale. The trained
     center count lands within per-cell rounding of ``n_cells``
     (hierarchical_codebook's contract — cells bound, exact K doesn't).
@@ -631,8 +568,6 @@ def ivf_topk(
     # AFTER the engine-specific assignment so both the fold and arrow
     # assignment schemas stay untouched; evaluated once per corpus row
     # / once per probe row, not per candidate
-    from vspace_spark.functions.vectors import l2_norm
-
     assigned = assigned.withColumn("_cn", l2_norm(F.col("_cv")))
     q = q.withColumn("_qn", l2_norm(F.col("_qv")))
     scored = (
@@ -647,14 +582,7 @@ def ivf_topk(
             ).alias("_cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top_k(scored, k, F.desc("_cos"))
 
 
 def lsh_topk(
@@ -699,8 +627,6 @@ def lsh_topk(
     # once per VECTOR, not per posting row (the first cut computed
     # them per posting — `tables`× more folds than necessary, which on
     # this OR-amplified layout is more folds than the candidates save)
-    from vspace_spark.functions.vectors import l2_norm
-
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
@@ -727,14 +653,7 @@ def lsh_topk(
             / F.nullif(F.col("_qn") * F.col("_cn"), F.lit(0.0))
         ).alias("_cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top_k(scored, k, F.desc("_cos"))
 
 
 def pq_codebook(
@@ -970,16 +889,8 @@ def ivf_pq_probe(
         .groupBy("query_id", "neighbor_id")
         .agg(dist.alias("_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("_dist"), F.asc("neighbor_id")
-    )
-    out_cols = ["query_id", "neighbor_id", "rank"] + (
-        ["_dist"] if keep_dist else []
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols)
+    return _top_k(
+        scored, k, F.asc("_dist"), ("_dist",) if keep_dist else ()
     )
 
 
@@ -1064,9 +975,10 @@ def brute_force_topk_arrow(
     Rank parity with the fold path is not bit-guaranteed (BLAS
     pairwise/SIMD summation vs strict left fold can flip near-ties),
     so this registers rows-only; tests/test_similarity.py asserts the
-    two paths agree on the fixture. The closure is self-contained
-    (queries passed as a plain list literal — executors cannot import
-    this repo when the driver runs elsewhere, NOTES.md seam #2).
+    two paths agree on the fixture. The closure holds the queries as a
+    plain list literal and references only the by-value kernels —
+    executors cannot import this repo when the driver runs elsewhere
+    (NOTES.md seam #2).
 
     Returns ``[query_id, neighbor_id, rank]``.
     """
@@ -1089,9 +1001,7 @@ def brute_force_topk_arrow(
         for pdf in batches:
             if not len(pdf):
                 continue
-            C = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_cv"]]
-            )
+            C = as_matrix(pdf["_cv"])
             cid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
             cn = np.linalg.norm(C, axis=1)
             cos = (C @ Q.T) / np.outer(cn, qn)  # batch × queries
@@ -1113,14 +1023,7 @@ def brute_force_topk_arrow(
     ).mapInPandas(
         score, "query_id long, neighbor_id long, _cos double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("_cos"), F.asc("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top_k(partial, k, F.desc("_cos"))
 
 
 def ivf_pq_encode_arrow(
@@ -1177,9 +1080,7 @@ def ivf_pq_encode_arrow(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-            )
+            V = as_matrix(pdf["_v"])
             d2 = (
                 (V * V).sum(1, keepdims=True)
                 - 2.0 * (V @ C.T)
@@ -1263,7 +1164,7 @@ def ivf_pq_probe_arrow(
         qd = (
             (Q * Q).sum(1, keepdims=True) - 2.0 * (Q @ C.T) + (C * C).sum(1)
         )
-        probed = np.argsort(qd, axis=1, kind="stable")[:, :npb]
+        probed = top_n(qd, npb)
         # ADC tables: nq × m × ksub
         adc = np.stack(
             [
@@ -1304,11 +1205,4 @@ def ivf_pq_probe_arrow(
         "cell",
         *[f"code_{s}" for s in range(m)],
     ).mapInPandas(probe, "query_id long, neighbor_id long, _dist double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("_dist"), F.asc("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top_k(partial, k, F.asc("_dist"))

@@ -28,6 +28,12 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vspace_spark.functions.kernels import (
+    hash_tokens,
+    in_sorted,
+    row_histogram,
+    rot_xor,
+)
 from vspace_spark.functions.text import (
     DOCID_PATTERN,
     everygrams_col,
@@ -213,225 +219,6 @@ def doc_term_frequencies(
     )
 
 
-def _hash_chain(prev: F.Column, nxt: F.Column) -> F.Column:
-    """Combine two 64-bit hashes order-sensitively with overflow-safe
-    bit ops (rotate-left 13 XOR) — safe under ANSI mode, good enough
-    dispersion for dictionary keys (collisions checked by test)."""
-    rotated = F.shiftleft(prev, 13).bitwiseOR(F.shiftrightunsigned(prev, 51))
-    return rotated.bitwiseXOR(nxt)
-
-
-def gram_hashes_col(tokens: F.Column, min_n: int, max_n: int) -> F.Column:
-    """n-gram IDENTITIES as 64-bit hashes without materializing gram
-    strings: hash each token once, then chain with long arithmetic —
-    the zip_with ladder from ngrams_col, on longs. O(max_n) passes,
-    zero string construction."""
-    th = F.transform(tokens, lambda t: F.xxhash64(t))
-    grams = []
-    g = th
-    for n in range(1, max_n + 1):
-        if n > 1:
-            shifted = F.slice(th, n, F.greatest(F.size(th) - (n - 1), F.lit(0)))
-            g = F.zip_with(g, shifted, _hash_chain)
-        if n >= min_n:
-            grams.append(
-                F.when(
-                    F.size(tokens) >= n,
-                    F.slice(g, 1, F.size(tokens) - n + 1),
-                ).otherwise(F.array().cast("array<bigint>"))
-            )
-    return F.flatten(F.array(*grams))
-
-
-def token_hash_expr(token: F.Column) -> F.Column:
-    """The same chain applied to a token STRING (splitting multi-word
-    grams) — lets a vocabulary/dictionary side compute ids compatible
-    with gram_hashes_col."""
-    th = F.transform(F.split(token, " "), lambda t: F.xxhash64(t))
-    return F.aggregate(
-        F.slice(th, 2, F.greatest(F.size(th) - 1, F.lit(0))),
-        F.element_at(th, 1),
-        _hash_chain,
-    )
-
-
-def term_stats_hashed(
-    docs: DataFrame,
-    dictionary: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_cols: Sequence[str] = (),
-    min_n: int = 1,
-    max_n: int = 1,
-) -> DataFrame:
-    """Dictionary-encoded term statistics — the 100 TB throughput path.
-
-    The general ``term_stats`` shuffles gram STRINGS; at 6-gram scale
-    string construction + string shuffling dominate (measured: the
-    string path runs ~2.3× slower end-to-end). Here the exploded stream
-    carries only 64-bit gram ids (gram_hashes_col), the vocabulary gate
-    and both aggregations run on longs, and gram strings are LATE-
-    MATERIALIZED by joining the final (small) stats against a
-    broadcast dictionary.
-
-    ``dictionary`` is a ``[token]`` DF enumerating every token the
-    output may contain (vocabulary multi-grams + corpus unigrams —
-    derivable cheaply because distinct tokens ≪ gram instances). Grams
-    absent from the dictionary are dropped (= the vocabulary gate).
-    """
-    dict_df = dictionary.select(
-        "token", token_hash_expr(F.col("token")).alias("tid")
-    ).persist()
-
-    tokens = tokenize_col(F.col(text_col))
-    ex = docs.select(
-        id_col,
-        *group_cols,
-        F.size(tokens).alias("wc"),
-        F.explode(gram_hashes_col(tokens, min_n, max_n)).alias("tid"),
-    )
-    gated = ex.join(F.broadcast(dict_df.select("tid")), "tid", "left_semi")
-    perdoc = gated.groupBy(id_col, *group_cols, "wc", "tid").agg(
-        F.count("*").alias("tf")
-    )
-    stats = perdoc.groupBy("tid", *group_cols).agg(
-        F.count("*").alias("document_frequency"),
-        F.sum("tf").alias("term_frequency"),
-        F.sum("wc").alias("tdsum"),
-    )
-    return stats.join(F.broadcast(dict_df), "tid").select(
-        "token",
-        *group_cols,
-        "document_frequency",
-        "term_frequency",
-        "tdsum",
-    )
-
-
-def term_stats_arrow(
-    docs: DataFrame,
-    dictionary: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_cols: Sequence[str] = (),
-    min_n: int = 1,
-    max_n: int = 1,
-) -> DataFrame:
-    """Maximum-throughput term statistics: hashed grams + Arrow-batched
-    per-document histograms.
-
-    Why: ``term_stats_hashed`` still shuffles one row per (doc, gram)
-    into a ~|corpus|-sized aggregation whose partial phase cannot
-    reduce (keys barely repeat) — measured as THE bottleneck (55 of
-    80 s at 6-gram/0.1 GB). The reference avoided that shuffle
-    structurally: its Python ``Counter`` pre-aggregated per document
-    inside the row (reference: vspace/pipelines/base.py:144-152), so
-    its one shuffle was token-keyed and collapsed map-side. This
-    operator does the same with vectorized numpy instead of scalar
-    Python: per document, ``np.isin`` gates gram ids against the
-    dictionary and ``np.unique(..., return_counts)`` builds the tf
-    histogram — C speed, Arrow transfer, no (doc, gram) shuffle. The
-    surviving shuffle is keyed by (gram id[, source]): ~|vocabulary|
-    keys, fully partial-aggregated map-side.
-
-    Semantically identical to ``term_stats``/``term_stats_hashed``
-    (equivalence tested); the dictionary is collected to the driver
-    (fine for vocabularies up to tens of millions of entries — it is
-    already broadcast-sized by assumption).
-    """
-    import numpy as np
-    import pandas as pd
-
-    dict_df = dictionary.select(
-        "token", token_hash_expr(F.col("token")).alias("tid")
-    ).persist()
-    vocab_ids = np.sort(
-        # bounded-collect: vocabulary-sized (dictionary, not corpus)
-        np.array([r.tid for r in dict_df.select("tid").collect()], dtype=np.int64)
-    )
-
-    tokens = tokenize_col(F.col(text_col))
-    enc = docs.select(
-        id_col,
-        *group_cols,
-        F.size(tokens).alias("wc"),
-        gram_hashes_col(tokens, min_n, max_n).alias("tids"),
-    )
-
-    group_fields = ", ".join(f"{c} string" for c in group_cols)
-    out_schema = (
-        f"{id_col} long, "
-        + (group_fields + ", " if group_fields else "")
-        + "wc int, tid long, tf int"
-    )
-
-    def histogram_batches(batches):
-        # whole-batch vectorization: flatten every document's gram-id
-        # array, tag each gram with its row ordinal, gate via sorted-
-        # membership, then ONE lexsort over (row, tid) + run-length
-        # boundaries = per-(doc, gram) tf for the entire Arrow batch —
-        # no per-row Python loop (measured ~2× over the row loop).
-        for pdf in batches:
-            n_rows = len(pdf)
-            if not n_rows:
-                continue
-            lens = np.fromiter(
-                (len(t) for t in pdf["tids"]), dtype=np.int64, count=n_rows
-            )
-            if not lens.sum():
-                continue
-            flat = np.concatenate(
-                [np.asarray(t, dtype=np.int64) for t in pdf["tids"]]
-            )
-            row_idx = np.repeat(np.arange(n_rows, dtype=np.int64), lens)
-            if vocab_ids.size:
-                pos = np.searchsorted(vocab_ids, flat).clip(
-                    0, vocab_ids.size - 1
-                )
-                mask = vocab_ids[pos] == flat
-            else:
-                mask = np.zeros(flat.size, dtype=bool)
-            flat, row_idx = flat[mask], row_idx[mask]
-            if not flat.size:
-                continue
-            order = np.lexsort((flat, row_idx))
-            flat, row_idx = flat[order], row_idx[order]
-            boundary = np.empty(flat.size, dtype=bool)
-            boundary[0] = True
-            np.logical_or(
-                row_idx[1:] != row_idx[:-1],
-                flat[1:] != flat[:-1],
-                out=boundary[1:],
-            )
-            starts = np.flatnonzero(boundary)
-            tf = np.diff(np.append(starts, flat.size)).astype(np.int32)
-            u_rows, u_tids = row_idx[starts], flat[starts]
-            out = {
-                id_col: pdf[id_col].to_numpy(dtype=np.int64)[u_rows],
-                **{
-                    g: pdf[g].to_numpy()[u_rows] for g in group_cols
-                },
-                "wc": pdf["wc"].to_numpy(dtype=np.int32)[u_rows],
-                "tid": u_tids,
-                "tf": tf,
-            }
-            yield pd.DataFrame(out)
-
-    perdoc = enc.mapInPandas(histogram_batches, out_schema)
-    stats = perdoc.groupBy("tid", *group_cols).agg(
-        F.count("*").alias("document_frequency"),
-        F.sum("tf").alias("term_frequency"),
-        F.sum("wc").alias("tdsum"),
-    )
-    return stats.join(F.broadcast(dict_df), "tid").select(
-        "token",
-        *group_cols,
-        "document_frequency",
-        "term_frequency",
-        "tdsum",
-    )
-
-
 def term_stats_pandas(
     docs: DataFrame,
     dictionary: DataFrame,
@@ -444,30 +231,19 @@ def term_stats_pandas(
     """Fastest term-statistics path: tokenize + hash + histogram all
     inside the Python worker from RAW TEXT.
 
-    ``term_stats_arrow`` still paid for (a) interpreted JVM zip_with
-    hash chains and (b) shipping ~8 bytes/gram over Arrow. Here the
-    Arrow input is the text itself (≈ corpus size); everything after is
-    vectorized numpy: ``pd.util.hash_array`` (SipHash, fixed key —
-    deterministic across processes) over the flat token array, n-gram
-    ids as rotate-xor chains with document-boundary masks, sorted-
-    membership gate, one lexsort histogram per batch. The dictionary's
-    ids are computed driver-side with the SAME numpy code, so gate and
-    late materialization stay consistent — no JVM hashing anywhere.
+    The Arrow input is the text itself (≈ corpus size); everything
+    after is vectorized numpy:
+    ``pd.util.hash_array`` (SipHash, fixed key — deterministic across
+    processes) over the flat token array, n-gram ids as rotate-xor
+    chains with document-boundary masks, sorted-membership gate, one
+    lexsort histogram per batch. The dictionary's ids are computed
+    driver-side with the SAME kernels (``functions/kernels.py``), so
+    gate and late materialization stay consistent — no JVM hashing
+    anywhere.
 
     Same output/semantics as ``term_stats`` (equivalence-tested).
     """
     import numpy as np
-    import pandas as pd
-
-    def _hash_tokens(tokens: "np.ndarray") -> "np.ndarray":
-        return pd.util.hash_array(tokens).view(np.int64)
-
-    def _rot_xor(prev: "np.ndarray", nxt: "np.ndarray") -> "np.ndarray":
-        p = prev.view(np.uint64)
-        return (
-            ((p << np.uint64(13)) | (p >> np.uint64(51)))
-            ^ nxt.view(np.uint64)
-        ).view(np.int64)
 
     # dictionary ids via the same numpy scheme, computed on the driver
     # bounded-collect: vocabulary-sized (dictionary, not corpus)
@@ -480,15 +256,13 @@ def term_stats_pandas(
         )
         for i in range(max_words)
     ]
-    tid = _hash_tokens(word_cols[0])
+    tid = hash_tokens(word_cols[0])
     for i in range(1, max_words):
         has = np.array([w is not None for w in word_cols[i]])
         if not has.any():
             continue
-        nxt = _hash_tokens(
-            np.where(has, word_cols[i], "")
-        )
-        tid = np.where(has, _rot_xor(tid, nxt), tid)
+        nxt = hash_tokens(np.where(has, word_cols[i], ""))
+        tid = np.where(has, rot_xor(tid, nxt), tid)
     dict_pdf["tid"] = tid
     vocab_ids = np.sort(tid)
     # persist the plain frame; the broadcast hint goes on the join site
@@ -510,16 +284,6 @@ def term_stats_pandas(
     def stats_from_text(batches):
         import numpy as np
         import pandas as pd
-
-        def hash_tokens(tokens):
-            return pd.util.hash_array(tokens).view(np.int64)
-
-        def rot_xor(prev, nxt):
-            p = prev.view(np.uint64)
-            return (
-                ((p << np.uint64(13)) | (p >> np.uint64(51)))
-                ^ nxt.view(np.uint64)
-            ).view(np.int64)
 
         for pdf in batches:
             n_rows = len(pdf)
@@ -558,35 +322,17 @@ def term_stats_pandas(
             row_idx = np.concatenate(gram_rows)
             ids = np.concatenate(gram_ids)
 
-            if vocab_ids.size:
-                p = np.searchsorted(vocab_ids, ids).clip(
-                    0, vocab_ids.size - 1
-                )
-                mask = vocab_ids[p] == ids
-            else:
-                mask = np.zeros(ids.size, dtype=bool)
-            ids, row_idx = ids[mask], row_idx[mask]
-            if not ids.size:
+            mask = in_sorted(vocab_ids, ids)
+            if not mask.any():
                 continue
-            order = np.lexsort((ids, row_idx))
-            ids, row_idx = ids[order], row_idx[order]
-            boundary = np.empty(ids.size, dtype=bool)
-            boundary[0] = True
-            np.logical_or(
-                row_idx[1:] != row_idx[:-1],
-                ids[1:] != ids[:-1],
-                out=boundary[1:],
-            )
-            starts = np.flatnonzero(boundary)
-            tf = np.diff(np.append(starts, ids.size)).astype(np.int32)
-            u_rows = row_idx[starts]
+            u_rows, u_ids, tf = row_histogram(row_idx[mask], ids[mask])
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(dtype=np.int64)[u_rows],
                     **{g: pdf[g].to_numpy()[u_rows] for g in gcols},
                     "wc": lens.astype(np.int32)[u_rows],
-                    "tid": ids[starts],
-                    "tf": tf,
+                    "tid": u_ids,
+                    "tf": tf.astype(np.int32),
                 }
             )
 
@@ -609,7 +355,7 @@ def term_stats_pandas(
 def unigram_dictionary(
     docs: DataFrame, text_col: str = "text", extra_vocab: DataFrame | None = None
 ) -> DataFrame:
-    """Dictionary for ``term_stats_hashed``: distinct corpus unigrams
+    """Dictionary for ``term_stats_pandas``: distinct corpus unigrams
     (map-side dedup keeps the shuffle tiny — distinct tokens ≪
     occurrences) plus optional vocabulary multi-grams, docid tokens
     excluded."""

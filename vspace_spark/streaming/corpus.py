@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vspace_spark.functions.kernels import row_histogram
 from vspace_spark.functions.text import (
     everygrams_col,
     histogram,
@@ -99,10 +100,10 @@ def streaming_term_stats_pandas(docs: DataFrame) -> DataFrame:
     The histogram batches: whitespace-split per row, flatten,
     ``pd.factorize`` the flat token array into EXACT integer codes
     (hash-table string equality, C speed, no collision semantics to
-    reason about), lexsort on (code, row), run lengths = per-doc tf.
-    The closure is self-contained (numpy/pandas imported inside) —
-    executor Python workers cannot import vspace_spark when the
-    driver runs elsewhere (NOTES.md seam 2).
+    reason about), then the shared per-(row, code) run-length
+    histogram (``functions/kernels.py``, shipped by value: executor
+    Python workers cannot import vspace_spark when the driver runs
+    elsewhere, NOTES.md seam 2).
     """
 
     def histogram_batches(it):
@@ -123,22 +124,12 @@ def streaming_term_stats_pandas(docs: DataFrame) -> DataFrame:
             )
             row_idx = np.repeat(np.arange(len(wck)), wck)
             codes, uniques = pd.factorize(flat)
-            order = np.lexsort((codes, row_idx))
-            codes, row_idx = codes[order], row_idx[order]
-            boundary = np.empty(codes.size, dtype=bool)
-            boundary[0] = True
-            np.logical_or(
-                row_idx[1:] != row_idx[:-1],
-                codes[1:] != codes[:-1],
-                out=boundary[1:],
-            )
-            starts = np.flatnonzero(boundary)
-            tf = np.diff(np.append(starts, codes.size)).astype(np.int64)
+            rows, codes, tf = row_histogram(row_idx, codes)
             yield pd.DataFrame(
                 {
-                    "token": uniques.take(codes[starts]),
+                    "token": uniques.take(codes),
                     "tf": tf,
-                    "wc": wck[row_idx[starts]],
+                    "wc": wck[rows],
                 }
             )
 

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vspace_spark.functions.kernels import as_matrix
 from vspace_spark.functions.text import ngrams_col, tokenize_col
 from vspace_spark.io.connectors import append_index_batch, read_index
 
@@ -809,9 +810,9 @@ def incremental_embedding_dedup(
                 )
 
         else:
-            # plain literals so the closure is self-contained (executors
-            # cannot import this repo when the driver runs elsewhere —
-            # NOTES.md seam #2, same as brute_force_topk_arrow)
+            # plain literals and the by-value kernels only: executors
+            # cannot import this repo when the driver runs elsewhere
+            # (NOTES.md seam #2)
             planes_lit = [[float(x) for x in p] for p in planes[:n_bits]]
 
             def sigs(batches):
@@ -824,9 +825,7 @@ def incremental_embedding_dedup(
                 for pdf in batches:
                     if not len(pdf):
                         continue
-                    V = np.asarray(
-                        [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-                    )
+                    V = as_matrix(pdf["_v"])
                     bits_on = (V @ P.T) > 0  # rows × bits, one matmul
                     yield pd.concat(
                         [
