@@ -12,9 +12,7 @@ from vspace_spark.io.tables import load_table
 from vspace_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
-    minhash_signature,
     shingle_pairs_jaccard,
-    simhash_col,
     simhash_near_pairs,
 )
 from vspace_spark.functions.text import tokenize_col
@@ -35,12 +33,47 @@ def _with_planted_dups(spark, sf_dir):
 
 
 def test_minhash_identical_docs_identical_sigs(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(5)
-    two = docs.select(
-        minhash_signature(tokenize_col("text"), 16).alias("s1"),
-        minhash_signature(tokenize_col("text"), 16).alias("s2"),
+    from vspace_spark.operators.dedup import _minhash_plan, _minhash_sigs
+
+    docs = load_table(spark, sf_dir, "documents").orderBy("doc_id").limit(5)
+    twins = docs.unionByName(
+        docs.withColumn("doc_id", F.col("doc_id") + 100000)
     )
-    assert two.filter(F.col("s1") != F.col("s2")).count() == 0
+    for engine in ("portable", "xxhash64"):
+        sigs = {
+            r._id: r.sig
+            for r in _minhash_sigs(
+                twins, _minhash_plan(engine, "text", 3, 16)
+            ).collect()
+        }
+        originals = [i for i in sigs if i < 100000]
+        assert originals
+        for i in originals:
+            assert len(sigs[i]) == 16
+            assert sigs[i] == sigs[i + 100000], (engine, i)
+
+
+@pytest.mark.parametrize(
+    "num_hashes, bands", [(4, 8), (16, 5), (16, 0)]
+)
+def test_minhash_banding_rejects_unequal_bands(spark, num_hashes, bands):
+    """``num_hashes // bands == 0`` made every band's bucket ``""``, so
+    six unrelated documents came back as all 15 pairs; any band split
+    that is not equal and non-empty is refused before Spark work."""
+    from vspace_spark.operators.dedup import minhash_lsh_pairs_portable
+    from vspace_spark.streaming.incremental import incremental_minhash_dedup
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i} x{i} y{i} z{i} v{i}") for i in range(6)],
+        "doc_id long, text string",
+    )
+    for fn in (minhash_lsh_pairs, minhash_lsh_pairs_portable):
+        with pytest.raises(ValueError, match="divisible by bands"):
+            fn(docs, num_hashes=num_hashes, bands=bands)
+    with pytest.raises(ValueError, match="divisible by bands"):
+        incremental_minhash_dedup(
+            spark, docs, num_hashes=num_hashes, bands=bands
+        )
 
 
 def test_minhash_lsh_recall_against_exact_jaccard(spark, sf_dir):
@@ -94,19 +127,30 @@ def test_minhash_est_jaccard_tracks_true_jaccard(spark, sf_dir):
     assert mae < 0.15, f"MinHash estimate MAE {mae} too high"
 
 
-def test_simhash_rowexpr_and_agg_variants_agree(spark, sf_dir):
-    from vspace_spark.operators.dedup import simhash_signatures
+def test_stream_row_minhash_equals_shared_signature(spark, sf_dir):
+    """The ingest stream's per-row MinHash (``_row_minhash``, stateless
+    for the stream-static join) equals the batch builder's explode +
+    per-seed MIN signature on every document, for the portable family
+    the stream runs."""
+    from vspace_spark.functions.text import ngrams_col
+    from vspace_spark.operators.dedup import (
+        _minhash_plan,
+        _minhash_sigs,
+        _row_minhash,
+    )
 
-    docs = load_table(spark, sf_dir, "documents").limit(10)
-    rowexpr = docs.select(
-        "doc_id", simhash_col(tokenize_col("text")).alias("sig")
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.size(tokenize_col("text")) >= 3
     )
-    agg = simhash_signatures(docs, "doc_id", tokenize_col("text")).select(
-        F.col("_id").alias("doc_id"), "sig"
+    shingles = F.array_distinct(ngrams_col(tokenize_col("text"), 3))
+    row = docs.select(
+        F.col("doc_id").alias("_id"),
+        _row_minhash("portable", shingles, 32).alias("sig"),
     )
-    got = {r.doc_id: r.sig for r in rowexpr.collect()}
-    want = {r.doc_id: r.sig for r in agg.collect()}
-    assert got == want
+    agg = _minhash_sigs(docs, _minhash_plan("portable", "text", 3, 32))
+    got = {r._id: r.sig for r in row.collect()}
+    want = {r._id: r.sig for r in agg.collect()}
+    assert got and got == want
 
 
 def test_simhash_identical_and_near(spark, sf_dir):
@@ -286,6 +330,8 @@ def test_hot_bucket_cutoff_preserves_normal_recall(spark, sf_dir):
 # Portable (md5) vs fast (xxhash64) twin equivalence — VERDICT r2 #6
 # ---------------------------------------------------------------------------
 
+import random  # noqa: E402
+
 from hypothesis import given, settings, strategies as st  # noqa: E402
 
 _WORDS = ["ant", "bee", "cat", "dog", "elk", "fox", "gnu", "hen", "owl", "pig"]
@@ -312,15 +358,32 @@ def _corpus_with_planted_dups(draw):
     return rows, {(i, 1000 + i) for i in dup_idx}
 
 
-@settings(max_examples=5, deadline=None)
-@given(_corpus_with_planted_dups())
-@pytest.mark.slow  # >20 s (measured r14): driver verify-window budget
-def test_minhash_twins_equal_recall_on_planted_dups(spark, case):
-    """Identical documents have identical signatures under ANY hash
-    family, so every planted verbatim-dup pair must surface in BOTH the
-    xxhash64 fast path and the md5 portable path with est_jaccard 1.0 —
-    the property that lets the oracle-checked portable twin's evidence
-    transfer to the unchecked fast twin."""
+def _fixed_texts(n: int) -> list[str]:
+    rng = random.Random(0)
+    texts: list[str] = []
+    while len(texts) < n:
+        t = " ".join(rng.choice(_WORDS) for _ in range(rng.randint(4, 8)))
+        if t not in texts:
+            texts.append(t)
+    return texts
+
+
+# One fixed planted-verbatim-dup corpus: 40 distinct docs, of which 0, 3
+# and 7 are duplicated under ids 1000 + i. 40 of 43 texts are distinct,
+# above the clone probe's 0.9 ratio, so the pair generators take the raw
+# path and the planted pairs come from the hash families themselves; the
+# hypothesis corpora (at most 10 of 12 distinct) always collapse, and
+# their planted pairs get the expand step's literal est_jaccard 1.0 /
+# hamming 0.
+_FIXED_TEXTS = _fixed_texts(40)
+_FIXED_CASE = (
+    [(i, t) for i, t in enumerate(_FIXED_TEXTS)]
+    + [(1000 + i, _FIXED_TEXTS[i]) for i in (0, 3, 7)],
+    {(0, 1000), (3, 1003), (7, 1007)},
+)
+
+
+def _assert_minhash_twins_find(spark, case):
     from vspace_spark.operators.dedup import (
         minhash_lsh_pairs,
         minhash_lsh_pairs_portable,
@@ -338,10 +401,7 @@ def test_minhash_twins_equal_recall_on_planted_dups(spark, case):
             assert got[pair] == 1.0, f"{fn.__name__} {pair}: {got[pair]}"
 
 
-@settings(max_examples=5, deadline=None)
-@given(_corpus_with_planted_dups())
-@pytest.mark.slow  # >20 s (measured r14): driver verify-window budget
-def test_simhash_twins_equal_recall_on_planted_dups(spark, case):
+def _assert_simhash_twins_find(spark, case):
     from vspace_spark.operators.dedup import (
         simhash_near_pairs,
         simhash_near_pairs_portable,
@@ -354,6 +414,37 @@ def test_simhash_twins_equal_recall_on_planted_dups(spark, case):
         for pair in planted:
             assert pair in got, f"{fn.__name__} missed planted {pair}"
             assert got[pair] == 0, f"{fn.__name__} {pair}: {got[pair]}"
+
+
+@settings(max_examples=5, deadline=None)
+@given(_corpus_with_planted_dups())
+@pytest.mark.slow  # >20 s (measured r14): driver verify-window budget
+def test_minhash_twins_equal_recall_on_planted_dups(spark, case):
+    """Identical documents have identical signatures under ANY hash
+    family, so every planted verbatim-dup pair must surface in BOTH the
+    xxhash64 fast path and the md5 portable path with est_jaccard 1.0 —
+    the property that lets the oracle-checked portable twin's evidence
+    transfer to the unchecked fast twin."""
+    _assert_minhash_twins_find(spark, case)
+
+
+@settings(max_examples=5, deadline=None)
+@given(_corpus_with_planted_dups())
+@pytest.mark.slow  # >20 s (measured r14): driver verify-window budget
+def test_simhash_twins_equal_recall_on_planted_dups(spark, case):
+    _assert_simhash_twins_find(spark, case)
+
+
+def test_minhash_twins_find_planted_dups_fixed_corpus(spark):
+    """Default-suite twin of the slow hypothesis test: one fixed
+    planted-verbatim-dup corpus, the same assertions."""
+    _assert_minhash_twins_find(spark, _FIXED_CASE)
+
+
+def test_simhash_twins_find_planted_dups_fixed_corpus(spark):
+    """Default-suite twin of the slow hypothesis test: one fixed
+    planted-verbatim-dup corpus, the same assertions."""
+    _assert_simhash_twins_find(spark, _FIXED_CASE)
 
 
 def test_ann_lsh_twins_find_duplicated_vectors(spark, sf_dir):
@@ -882,14 +973,10 @@ _CLONE_LIGHT_IDENTITY_TESTS = {
     "shingle_pairs_jaccard": (
         "test_jaccard_exact_collapse_matches_uncollapsed_oracle"
     ),
-    "minhash_lsh_pairs": "test_minhash_collapse_matches_raw_uncapped",
-    "minhash_lsh_pairs_portable": (
-        "test_minhash_collapse_matches_raw_uncapped"
-    ),
-    "simhash_near_pairs": "test_simhash_collapse_matches_raw_uncapped",
-    "simhash_near_pairs_portable": (
-        "test_simhash_collapse_matches_raw_uncapped"
-    ),
+    # _minhash_lsh / _simhash_pairs are the shared skeletons behind
+    # both hash twins; each identity test runs both twins
+    "_minhash_lsh": "test_minhash_collapse_matches_raw_uncapped",
+    "_simhash_pairs": "test_simhash_collapse_matches_raw_uncapped",
     "embedding_near_pairs": "test_embedding_collapse_matches_raw_pairs",
     "semantic_dedup": "test_semantic_dedup_collapse_matches_raw",
     "edit_distance_pairs": "test_edit_distance_pairs_collapse_matches_raw",
@@ -946,6 +1033,34 @@ def test_every_clone_light_caller_has_identity_test():
         assert f"def {test}(" in here or f"def {test}(" in props, (
             f"{caller}: registered identity test {test} does not exist"
         )
+
+
+def test_minhash_and_simhash_pieces_are_defined_once():
+    """Structural guard, same shape as the clone-probe guard: the md5
+    seed hash, the per-seed MIN, the band-bucket element pick and the
+    SimHash bit vote each occur ONCE under vspace_spark (the hash
+    family and skeletons in operators/dedup.py). The batch twins, the
+    incremental leg and the ingest stream produce the same pairs only
+    while they share these definitions; a copy that drifts breaks the
+    equality silently, so a second copy fails here."""
+    import os
+    import re
+
+    patterns = {
+        "md5 seed hash": r'F\.concat_ws\(":",F\.lit\(str\(',
+        "per-seed MIN": r'F\.min\(f"_h\{i\}"\)',
+        "band bucket": r"F\.element_at\([^,]+,b\*rows\+r\+1\)",
+        "simhash vote": r'F\.shiftright\("_h",j\)',
+    }
+    counts = dict.fromkeys(patterns, 0)
+    pkg = os.path.join(os.path.dirname(__file__), "..", "vspace_spark")
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                src = re.sub(r"\s+", "", open(os.path.join(root, f)).read())
+                for name, pat in patterns.items():
+                    counts[name] += len(re.findall(pat, src))
+    assert counts == dict.fromkeys(patterns, 1), counts
 
 
 def test_clear_clone_probe_memo(spark):

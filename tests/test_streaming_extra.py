@@ -878,9 +878,15 @@ class TestIncrementalMinhashXxhash:
         import pytest
 
         from vspace_spark.io.tables import load_table
-        from vspace_spark.streaming.incremental import (
+        from vspace_spark.operators.dedup import (
+            _agreement,
+            _band_col,
+            _band_pairs,
             _banded,
-            _portable_minhash_sigs,
+            _minhash_plan,
+            _minhash_sigs,
+        )
+        from vspace_spark.streaming.incremental import (
             incremental_minhash_dedup,
         )
 
@@ -896,34 +902,13 @@ class TestIncrementalMinhashXxhash:
         )
         got = {(r.a, r.b, r.agree) for r in inc.collect()}
 
-        bb = _banded(
-            _portable_minhash_sigs(
-                docs, "doc_id", "text", 3, 32, hash_engine="xxhash64"
-            ),
-            8,
-            4,
-        )
-        left = bb.select(
-            F.col("_id").alias("a"), F.col("sig").alias("sig_a"),
-            "band", "bucket",
-        )
-        right = bb.select(
-            F.col("_id").alias("b"), F.col("sig").alias("sig_b"),
-            "band", "bucket",
-        )
-        agree = F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda v: v,
-            )
-        )
+        sigs = _minhash_sigs(docs, _minhash_plan("xxhash64", "text", 3, 32))
+        banded = _banded(sigs, _band_col("xxhash64", 8, 4), "_id")
         want = {
             (r.a, r.b, r.agree)
-            for r in left.join(right, ["band", "bucket"])
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b", agree.alias("agree"))
+            for r in _band_pairs(banded, sigs)
+            .select("a", "b", _agreement("_siga", "_sigb").alias("agree"))
             .filter(F.col("agree") >= 16)
-            .distinct()
             .collect()
         }
         assert got == want, (len(got), len(want))

@@ -5,16 +5,22 @@ Scale design (the part that matters at 100 TB):
 - NOTHING here cross-joins two fact-sized inputs. Candidate pairs come
   from inverted-index equi-joins (shingle → docs), LSH band buckets, or
   a blocking key — all shuffle-on-key plans that AQE can skew-split.
-- Signatures (MinHash/SimHash) are computed with built-in ``xxhash64``
-  inside column expressions: JVM-side, no Python, one pass.
+- Signatures (MinHash/SimHash) are computed inside column expressions
+  (JVM-side, no Python, one pass) from one of two hash families,
+  ``_FAMILIES``: built-in ``xxhash64`` (production) or md5-portable
+  (the DuckDB-oracle definition); each skeleton is written once.
 - Pair outputs are canonicalized (a < b) so downstream connected-
   components / keep-one logic is deterministic.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vspace_spark.functions.kernels import as_matrix, nearest_center, router
 from vspace_spark.functions.text import ngrams_col, tokenize_col
@@ -382,65 +388,258 @@ def drop_hot_buckets(
     return blocked.join(F.broadcast(hot), keys, "left_anti")
 
 
-def minhash_signature(tokens: F.Column, num_hashes: int = 64) -> F.Column:
-    """MinHash signature as ``array<bigint>``: for seed i, the min of
-    ``xxhash64(token, i)`` over the document's distinct shingles.
-    Pure column expression — no shuffle. NOTE: embeds the token array
-    num_hashes times in the expression tree (Catalyst does not CSE
-    across projection elements), so keep the input a plain column and
-    num_hashes modest; ``minhash_signatures`` (explode + min-agg) is
-    the fast path for full corpora."""
-    distinct = F.array_distinct(tokens)
+def _md5_60(c: F.Column) -> F.Column:
+    # 15 hex chars = 60 bits → always a positive BIGINT; DuckDB twin:
+    # ('0x' || substr(md5(x), 1, 15))::BIGINT
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
-    def hash_with_seed(seed: int):
+
+class _HashFamily(NamedTuple):
+    """Everything the ``"portable"`` and ``"xxhash64"`` MinHash/SimHash
+    twins differ on; signature, banding and pair skeletons are shared.
+
+    - ``seed_hash(i, shingle)``: the MinHash per-seed shingle hash;
+    - ``bucket(band)``: the band bucket key from the band's values
+      joined as a string, of type ``bucket_type``;
+    - ``token_hash(token)``: the SimHash bit pattern, ``sim_bits``
+      wide (md5 gives 15 hex chars, so the portable width is 60 bits
+      and never reaches the sign bit).
+
+    ``"portable"`` (md5, the string bucket) is reproducible in ANSI SQL
+    — every signature, bucket and distance sits under the DuckDB
+    value-hash oracle. ``"xxhash64"`` is one JVM hash instruction per
+    seed instead of md5's per-seed string digest: the production lane,
+    with no SQL twin."""
+
+    seed_hash: Callable[[int, F.Column], F.Column]
+    bucket: Callable[[F.Column], F.Column]
+    bucket_type: T.DataType
+    token_hash: Callable[[F.Column], F.Column]
+    sim_bits: int
+
+
+_FAMILIES = {
+    "portable": _HashFamily(
+        seed_hash=lambda i, sh: _md5_60(F.concat_ws(":", F.lit(str(i)), sh)),
+        bucket=lambda band: band,
+        bucket_type=T.StringType(),
+        token_hash=_md5_60,
+        sim_bits=60,
+    ),
+    "xxhash64": _HashFamily(
+        seed_hash=lambda i, sh: F.xxhash64(sh, F.lit(i)),
+        bucket=F.xxhash64,
+        bucket_type=T.LongType(),
+        token_hash=F.xxhash64,
+        sim_bits=64,
+    ),
+}
+
+
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """Rows per LSH band; equal, non-empty bands or ``ValueError`` (an
+    empty band's bucket is ``""`` for every document, which pairs the
+    whole corpus)."""
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(
+            f"LSH banding with {bands} bands needs num_hashes divisible "
+            f"by bands; got num_hashes={num_hashes} — pick bands >= 1 "
+            f"that divides {num_hashes}"
+        )
+    return num_hashes // bands
+
+
+def _minhash_plan(
+    engine: str,
+    text_col: str,
+    shingle_n: int,
+    num_hashes: int,
+    id_col: str = "doc_id",
+) -> tuple:
+    """The Column trees :func:`_minhash_sigs` applies, built once so a
+    foreachBatch caller reuses them across micro-batches (guide §7.3):
+    each of the ``num_hashes`` seed trees converts through py4j at
+    construction. Columns are immutable session-independent parse
+    trees, so reuse is free and exact."""
+    h = _FAMILIES[engine].seed_hash
+    ex_cols = (
+        F.col(id_col).alias("_id"),
+        F.explode(
+            F.array_distinct(ngrams_col(tokenize_col(text_col), shingle_n))
+        ).alias("_sh"),
+    )
+    hash_cols = [h(i, F.col("_sh")).alias(f"_h{i}") for i in range(num_hashes)]
+    min_aggs = [F.min(f"_h{i}").alias(f"_m{i}") for i in range(num_hashes)]
+    sig_col = F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("sig")
+    return ex_cols, hash_cols, min_aggs, sig_col
+
+
+def _minhash_sigs(docs: DataFrame, plan: tuple) -> DataFrame:
+    """Corpus → ``[_id, sig: array<bigint>]`` via explode + per-seed
+    MIN aggregation over a :func:`_minhash_plan`.
+
+    Each distinct shingle is materialized once and hashed
+    ``num_hashes`` times in one projection (a per-row column form
+    re-evaluates the shingle array per seed — Catalyst performs no CSE
+    across projection elements, measured 80×+ slower), then
+    min-aggregated. Map-side partial aggregation means the shuffle
+    carries num_hashes longs per document — at 100 TB corpus scale the
+    wire cost is signatures, not shingles. Partitioning is the
+    caller's: batch callers rebalance first, the incremental replay
+    decides once per run."""
+    ex_cols, hash_cols, min_aggs, sig_col = plan
+    mins = (
+        docs.select(*ex_cols)
+        .select("_id", *hash_cols)
+        .groupBy("_id")
+        .agg(*min_aggs)
+    )
+    return mins.select("_id", sig_col)
+
+
+def _row_minhash(engine: str, shingles: F.Column, num_hashes: int) -> F.Column:
+    """The :func:`_minhash_sigs` signature as a stateless per-row column
+    over a DISTINCT shingle array — for stream sides, where an
+    aggregation would make the stream-static join stateful."""
+    h = _FAMILIES[engine].seed_hash
+
+    def seed(i: int):
         # factory, not a default-arg lambda: PySpark dispatches HOF
-        # lambdas on arity, and a 2-param lambda would receive the
-        # array INDEX as its second argument
-        return lambda t: F.xxhash64(t, F.lit(seed))
+        # lambdas on arity (a 2-param lambda would get the array index)
+        return lambda t: h(i, t)
 
     return F.array(
         *[
-            F.array_min(F.transform(distinct, hash_with_seed(i)))
+            F.array_min(F.transform(shingles, seed(i)))
             for i in range(num_hashes)
         ]
     )
 
 
-def minhash_signatures(
+def _band_col(
+    engine: str, bands: int, rows: int, sig: str = "sig"
+) -> F.Column:
+    """The exploded ``bb`` (band, bucket) struct column over signature
+    column ``sig``: band b's key is its ``rows`` values joined as a
+    string, through the family's ``bucket``."""
+    bucket = _FAMILIES[engine].bucket
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    bucket(
+                        F.concat_ws(
+                            ",",
+                            *[
+                                F.element_at(sig, b * rows + r + 1)
+                                for r in range(rows)
+                            ],
+                        )
+                    ).alias("bucket"),
+                )
+                for b in range(bands)
+            ]
+        )
+    ).alias("bb")
+
+
+def _banded(sigs: DataFrame, bb: F.Column, *keep: str) -> DataFrame:
+    """``[*keep, band, bucket]``: one row per (signature, band) for the
+    :func:`_band_col` column ``bb``."""
+    return sigs.select(*keep, bb).select(*keep, "bb.band", "bb.bucket")
+
+
+def _agreement(a: str, b: str) -> F.Column:
+    """Number of positions where two MinHash signatures agree."""
+    return F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda v: v))
+
+
+def _band_pairs(banded: DataFrame, sigs: DataFrame) -> DataFrame:
+    """``[b, a, _siga, _sigb]``: every pair (a < b) sharing a (band,
+    bucket), once, with both signatures.
+
+    SLIM banding (guide §2.3 / §8 — r13): pair on (band, bucket, id)
+    rows (~24 B each), THEN rejoin the signature table once per
+    endpoint. Carrying the full signature through the bucket exchange
+    and the (a, b) dedup cost ~9× the shuffled bytes for the same pair
+    set (plan diff in plans/r13/dedup_minhash_lsh_fast_{before,
+    after}.txt)."""
+    left = banded.select("band", "bucket", F.col("_id").alias("a"))
+    right = banded.select("band", "bucket", F.col("_id").alias("b"))
+    return (
+        left.join(right, ["band", "bucket"])
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+        .dropDuplicates(["a", "b"])
+        .join(
+            sigs.select(F.col("_id").alias("a"), F.col("sig").alias("_siga")),
+            "a",
+        )
+        .join(
+            sigs.select(F.col("_id").alias("b"), F.col("sig").alias("_sigb")),
+            "b",
+        )
+    )
+
+
+def _minhash_lsh(
+    engine: str,
     docs: DataFrame,
     id_col: str,
-    tokens: F.Column,
-    num_hashes: int = 64,
+    text_col: str,
+    shingle_n: int,
+    num_hashes: int,
+    bands: int,
+    max_bucket_size: int | None,
+    collapse_exact: bool,
 ) -> DataFrame:
-    """Corpus → ``[_id, sig: array<bigint>]`` via explode + per-seed
-    MIN aggregation.
+    """The MinHash + LSH skeleton behind :func:`minhash_lsh_pairs` and
+    :func:`minhash_lsh_pairs_portable`: collapse → signatures → band
+    self-join → slim pairs → signature rejoin → agreement."""
+    rows = _rows_per_band(num_hashes, bands)
+    if collapse_exact and (
+        # with a group cap the guard semantics REQUIRE the collapsed
+        # path (see minhash_lsh_pairs) — only clone-light-skip when
+        # output identity is proven
+        max_bucket_size is not None or not _clone_light(docs, text_col)
+    ):
+        canon_docs, members = _collapse_docs(
+            docs, id_col, text_col, min_tokens=shingle_n,
+            max_group=max_bucket_size,
+        )
+        raw = _minhash_lsh(
+            engine, canon_docs, id_col, text_col, shingle_n, num_hashes,
+            bands, max_bucket_size, collapse_exact=False,
+        )
+        return _expand_pairs(raw, members, {"est_jaccard": F.lit(1.0)})
+    from vspace_spark.operators.scale import (
+        est_relation_bytes,
+        persist_shared,
+        rebalance_for_compute,
+    )
 
-    The per-row column-expression variant re-evaluates the shingle
-    array per hash seed (Catalyst performs no CSE across projection
-    elements — measured 80×+ slower); here each distinct shingle is
-    materialized once, hashed ``num_hashes`` times in one projection,
-    and min-aggregated. Map-side partial aggregation means the shuffle
-    carries num_hashes longs per document — at 100 TB corpus scale the
-    wire cost is signatures, not shingles.
-    """
-    from vspace_spark.operators.scale import rebalance_for_compute
-
-    ex = rebalance_for_compute(docs).select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.array_distinct(tokens)).alias("_sh"),
+    # compact (num_hashes longs per doc) and consumed by both sides of
+    # the bucket self-join and the rejoin — persist so hashing runs
+    # once; level by the shared policy sized rows × signature width
+    # (exact when docs is a bare scan; source-bytes upper bound
+    # otherwise)
+    sigs = persist_shared(
+        _minhash_sigs(
+            rebalance_for_compute(docs),
+            _minhash_plan(engine, text_col, shingle_n, num_hashes, id_col),
+        ),
+        est_relation_bytes(docs, row_bytes=8 * num_hashes + 32),
     )
-    hashed = ex.select(
-        "_id",
-        *[
-            F.xxhash64("_sh", F.lit(i)).alias(f"_h{i}")
-            for i in range(num_hashes)
-        ],
-    )
-    mins = hashed.groupBy("_id").agg(
-        *[F.min(f"_h{i}").alias(f"_m{i}") for i in range(num_hashes)]
-    )
-    return mins.select(
-        "_id", F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("sig")
+    banded = _banded(sigs, _band_col(engine, bands, rows), "_id")
+    if max_bucket_size is not None:
+        banded = drop_hot_buckets(banded, ["band", "bucket"], max_bucket_size)
+    return _band_pairs(banded, sigs).select(
+        "a",
+        "b",
+        (_agreement("_siga", "_sigb") / F.lit(num_hashes)).alias(
+            "est_jaccard"
+        ),
     )
 
 
@@ -454,13 +653,16 @@ def minhash_lsh_pairs(
     max_bucket_size: int | None = None,
     collapse_exact: bool = True,
 ) -> DataFrame:
-    """MinHash + LSH candidate pairs — the sub-quadratic near-dup path.
+    """MinHash + LSH candidate pairs — the sub-quadratic near-dup path,
+    on the ``xxhash64`` family (the production lane; its
+    oracle-checked definition is :func:`minhash_lsh_pairs_portable`).
 
     shingle → signature (num_hashes mins) → split into ``bands`` bands
     of ``num_hashes/bands`` rows → hash each band → explode → groupBy
     (band, band_hash) buckets → pairs within buckets. Two docs collide
     iff some band matches exactly; P(candidate) ≈ 1-(1-J^r)^b. A pair
-    sharing several bands is emitted once (distinct).
+    sharing several bands is emitted once (distinct). ``bands`` must
+    divide ``num_hashes`` (``ValueError`` otherwise).
 
     ``collapse_exact`` (default) runs the exact-dedup prepass first
     (see :func:`shingle_pairs_jaccard`): identical texts have
@@ -491,95 +693,9 @@ def minhash_lsh_pairs(
     Returns ``[a, b, est_jaccard]`` (signature agreement fraction,
     a cheap estimate computed from the two signatures — no text rejoin).
     """
-    if collapse_exact and (
-        # with a group cap the guard semantics REQUIRE the collapsed
-        # path (see docstring) — only clone-light-skip when output
-        # identity is proven
-        max_bucket_size is not None or not _clone_light(docs, text_col)
-    ):
-        canon_docs, members = _collapse_docs(
-            docs, id_col, text_col, min_tokens=shingle_n,
-            max_group=max_bucket_size,
-        )
-        raw = minhash_lsh_pairs(
-            canon_docs, id_col, text_col, shingle_n, num_hashes, bands,
-            max_bucket_size, collapse_exact=False,
-        )
-        return _expand_pairs(raw, members, {"est_jaccard": F.lit(1.0)})
-    rows = num_hashes // bands
-    tokens = ngrams_col(tokenize_col(text_col), shingle_n)
-    from vspace_spark.operators.scale import (
-        est_relation_bytes,
-        persist_shared,
-    )
-
-    # compact (num_hashes longs per doc) and consumed by both sides of
-    # the bucket self-join — persist so hashing runs once; level by
-    # the shared policy sized rows × signature width (exact when docs
-    # is a bare scan; source-bytes upper bound otherwise)
-    sigs = persist_shared(
-        minhash_signatures(docs, id_col, tokens, num_hashes),
-        est_relation_bytes(docs, row_bytes=8 * num_hashes + 32),
-    )
-    # SLIM banding (guide §2.3 / §8 — r13): the bucket self-join and
-    # the (a, b) dedup used to carry the full num_hashes-long signature
-    # on BOTH sides — ~8.5 kB of payload per doc through the
-    # (band, bucket) exchange and ~1 kB per candidate pair through the
-    # dropDuplicates exchange, where only ids decide who pairs.
-    # Pair on (band, bucket, id) rows (~24 B each), THEN rejoin the
-    # persisted signature table once per endpoint — at 100 TB that is
-    # ~9× fewer shuffled bytes for the same pair set (plan diff in
-    # plans/r13/dedup_minhash_lsh_fast_{before,after}.txt); output is
-    # bit-identical (same pairs, same sig values, same est_jaccard —
-    # oracle-pinned on the portable twin).
-    banded = sigs.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.element_at("sig", b * rows + r + 1)
-                                    for r in range(rows)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bucket")
-    if max_bucket_size is not None:
-        banded = drop_hot_buckets(banded, ["band", "bucket"], max_bucket_size)
-    left = banded.select("band", "bucket", F.col("_id").alias("a"))
-    right = banded.select("band", "bucket", F.col("_id").alias("b"))
-    pairs = (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-        .join(
-            sigs.select(F.col("_id").alias("a"), F.col("sig").alias("_siga")),
-            "a",
-        )
-        .join(
-            sigs.select(F.col("_id").alias("b"), F.col("sig").alias("_sigb")),
-            "b",
-        )
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with("_siga", "_sigb", lambda x, y: x == y),
-            lambda v: v,
-        )
-    )
-    return pairs.select(
-        "a", "b", (agree / F.lit(len(range(num_hashes)))).alias("est_jaccard")
+    return _minhash_lsh(
+        "xxhash64", docs, id_col, text_col, shingle_n, num_hashes, bands,
+        max_bucket_size, collapse_exact,
     )
 
 
@@ -594,176 +710,35 @@ def minhash_lsh_pairs_portable(
     collapse_exact: bool = True,
 ) -> DataFrame:
     """MinHash + LSH with PORTABLE hashing: md5-derived 60-bit ints
-    instead of ``xxhash64``, so an ANSI-SQL engine reproduces every
-    signature bit-for-bit and the whole operator sits under the
-    value-hash oracle gate (the xxhash64 path in
-    :func:`minhash_lsh_pairs` is the cheaper production hot path but
-    has no SQL twin — this variant trades ~2× hash cost for
-    end-to-end cross-engine verifiability).
-
-    Same scale shape as the fast path: distinct shingles materialized
-    once and hashed ``num_hashes`` times in one projection (no
-    re-evaluation of the shingle array per seed — the Catalyst no-CSE
-    trap), per-seed MIN with map-side partial aggregation, band bucket
-    key = the band's min-values joined as a string (no second-level
-    hash — fewer cross-engine moving parts; the extra bytes ride only
-    the bucket shuffle). ``collapse_exact`` is the same output-
-    identical exact-dedup prepass as :func:`minhash_lsh_pairs`.
+    instead of ``xxhash64`` and the band's values joined as a string
+    for the bucket key (no second-level hash), so an ANSI-SQL engine
+    reproduces every signature and bucket bit-for-bit and the whole
+    operator sits under the value-hash oracle gate
+    (``dedup_minhash_lsh``). Trades ~2× hash cost for cross-engine
+    verifiability; otherwise the same skeleton, guard and
+    ``collapse_exact`` semantics as :func:`minhash_lsh_pairs`.
     Returns ``[a, b, est_jaccard]``.
     """
-    if collapse_exact and (
-        max_bucket_size is not None or not _clone_light(docs, text_col)
-    ):
-        canon_docs, members = _collapse_docs(
-            docs, id_col, text_col, min_tokens=shingle_n,
-            max_group=max_bucket_size,
-        )
-        raw = minhash_lsh_pairs_portable(
-            canon_docs, id_col, text_col, shingle_n, num_hashes, bands,
-            max_bucket_size, collapse_exact=False,
-        )
-        return _expand_pairs(raw, members, {"est_jaccard": F.lit(1.0)})
-    rows = num_hashes // bands
-    tokens = ngrams_col(tokenize_col(text_col), shingle_n)
-    from vspace_spark.operators.scale import rebalance_for_compute
-
-    ex = rebalance_for_compute(docs).select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.array_distinct(tokens)).alias("_sh"),
-    )
-
-    def h(i: int) -> F.Column:
-        # 15 hex chars = 60 bits → always a positive BIGINT; DuckDB
-        # twin: ('0x' || substr(md5(i || ':' || shingle), 1, 15))::BIGINT
-        return F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(str(i)), F.col("_sh"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-
-    hashed = ex.select(
-        "_id", *[h(i).alias(f"_h{i}") for i in range(num_hashes)]
-    )
-    mins = hashed.groupBy("_id").agg(
-        *[F.min(f"_h{i}").alias(f"_m{i}") for i in range(num_hashes)]
-    )
-    from vspace_spark.operators.scale import (
-        est_relation_bytes,
-        persist_shared,
-    )
-
-    sigs = persist_shared(
-        mins.select(
-            "_id",
-            F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("sig"),
-        ),
-        est_relation_bytes(docs, row_bytes=8 * num_hashes + 32),
-    )
-    # SLIM banding — same restructure as the xxhash64 twin (guide §2.3
-    # / §8 — r13): pair on (band, bucket, id) rows only, rejoin the
-    # persisted signatures once per endpoint after the (a, b) dedup.
-    # The bucket key here is the band's min-values STRING (oracle-
-    # mirrored), so the slim rows are a few tens of bytes vs the
-    # ~300 B signature payload they used to carry on both join sides.
-    # Output bit-identical — the whole operator stays under the DuckDB
-    # value-hash gate (dedup_minhash_lsh).
-    banded = sigs.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.element_at("sig", b * rows + r + 1)
-                                for r in range(rows)
-                            ],
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bucket")
-    if max_bucket_size is not None:
-        banded = drop_hot_buckets(banded, ["band", "bucket"], max_bucket_size)
-    left = banded.select("band", "bucket", F.col("_id").alias("a"))
-    right = banded.select("band", "bucket", F.col("_id").alias("b"))
-    pairs = (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-        .join(
-            sigs.select(F.col("_id").alias("a"), F.col("sig").alias("_siga")),
-            "a",
-        )
-        .join(
-            sigs.select(F.col("_id").alias("b"), F.col("sig").alias("_sigb")),
-            "b",
-        )
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with("_siga", "_sigb", lambda x, y: x == y),
-            lambda v: v,
-        )
-    )
-    return pairs.select(
-        "a", "b", (agree / F.lit(num_hashes)).alias("est_jaccard")
+    return _minhash_lsh(
+        "portable", docs, id_col, text_col, shingle_n, num_hashes, bands,
+        max_bucket_size, collapse_exact,
     )
 
 
-def simhash_col(tokens: F.Column, bits: int = 64) -> F.Column:
-    """64-bit SimHash as bigint: per token, ``xxhash64`` supplies the
-    bit pattern; each bit position accumulates +1/-1 weighted votes and
-    the sign becomes the output bit. Column-expression only.
-
-    The vote for bit j is Σ over tokens of (bit j set ? 1 : -1); we
-    compute it with one aggregate per bit over the token array — O(64n)
-    bit tests per row, JVM-side.
-    """
-    h = F.transform(F.array_distinct(tokens), lambda t: F.xxhash64(t))
-
-    def vote_for_bit(bit: int):
-        return lambda acc, v: acc + F.when(
-            F.shiftright(v, bit).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_cols = []
-    for j in range(bits):
-        vote = F.aggregate(h, F.lit(0), vote_for_bit(j))
-        bit_cols.append(
-            F.when(vote > 0, F.lit(1).cast("bigint")).otherwise(
-                F.lit(0).cast("bigint")
-            )
-            * F.lit(2 ** j).cast("bigint")
-            if j < 63
-            # avoid 2**63 bigint overflow: use the sign bit via negative
-            else F.when(vote > 0, F.lit(-(2 ** 63))).otherwise(F.lit(0))
-        )
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out + c
-    return out
-
-
-def simhash_signatures(
-    docs: DataFrame, id_col: str, tokens: F.Column, bits: int = 64
+def _simhash_sigs(
+    engine: str, docs: DataFrame, id_col: str, tokens: F.Column
 ) -> DataFrame:
-    """Corpus → ``[_id, sig: bigint]`` SimHash via explode + vote
-    aggregation (same rationale as ``minhash_signatures``: one hash per
-    distinct token, ``bits`` SUM aggregates, map-side combined)."""
+    """Corpus → ``[_id, sig: bigint]`` SimHash: each distinct token's
+    family bit pattern votes +1/-1 per bit (``sim_bits`` SUM
+    aggregates, map-side combined) and each bit's sign becomes the
+    signature bit; bit 63 is the sign bit of the bigint."""
     from vspace_spark.operators.scale import rebalance_for_compute
 
+    fam = _FAMILIES[engine]
     ex = rebalance_for_compute(docs).select(
         F.col(id_col).alias("_id"),
         F.explode(F.array_distinct(tokens)).alias("_t"),
-    ).select("_id", F.xxhash64("_t").alias("_h"))
+    ).select("_id", fam.token_hash(F.col("_t")).alias("_h"))
     votes = ex.groupBy("_id").agg(
         *[
             F.sum(
@@ -771,11 +746,11 @@ def simhash_signatures(
                     F.shiftright("_h", j).bitwiseAND(F.lit(1)) == 1, 1
                 ).otherwise(-1)
             ).alias(f"_v{j}")
-            for j in range(bits)
+            for j in range(fam.sim_bits)
         ]
     )
     sig = F.lit(0).cast("bigint")
-    for j in range(bits):
+    for j in range(fam.sim_bits):
         bit = (
             F.when(F.col(f"_v{j}") > 0, F.lit(2**j).cast("bigint")).otherwise(
                 F.lit(0).cast("bigint")
@@ -787,34 +762,34 @@ def simhash_signatures(
     return votes.select("_id", sig.alias("sig"))
 
 
+def simhash_signatures(
+    docs: DataFrame, id_col: str, tokens: F.Column
+) -> DataFrame:
+    """Corpus → ``[_id, sig: bigint]`` 64-bit ``xxhash64`` SimHash via
+    explode + vote aggregation: one hash per distinct token, 64 SUM
+    aggregates, map-side combined."""
+    return _simhash_sigs("xxhash64", docs, id_col, tokens)
+
+
 def hamming64(a: F.Column, b: F.Column) -> F.Column:
     """Hamming distance between two 64-bit signatures (bit_count of XOR)."""
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_near_pairs(
+def _simhash_pairs(
+    engine: str,
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 7,
-    n_chunks: int = 8,
-    max_bucket_size: int | None = None,
-    collapse_exact: bool = True,
+    id_col: str,
+    text_col: str,
+    max_hamming: int,
+    n_chunks: int,
+    max_bucket_size: int | None,
+    collapse_exact: bool,
 ) -> DataFrame:
-    """SimHash near-dup pairs with PIGEONHOLE chunk blocking: the 64-bit
-    signature splits into ``n_chunks`` equal chunks; a pair within
-    Hamming distance < n_chunks must agree exactly on ≥1 chunk, so
-    joining on (chunk_index, chunk_value) enumerates ALL such pairs —
-    guaranteed recall for ham ≤ n_chunks - 1, no cross join. Exact
-    Hamming then filters to ``max_hamming``.
-
-    Candidate volume scales with 2^(64/n_chunks) bucket granularity;
-    8×8-bit chunks is the standard sweet spot (Manku et al.'s simhash
-    dedup uses the same pigeonhole construction). ``collapse_exact``
-    is the same output-identical exact-dedup prepass as
-    :func:`minhash_lsh_pairs` (identical texts ⇒ identical
-    signatures ⇒ hamming 0, always within radius).
-    """
+    """The SimHash pigeonhole skeleton behind :func:`simhash_near_pairs`
+    and :func:`simhash_near_pairs_portable`: the family's ``sim_bits``
+    signature splits into ``n_chunks`` equal chunks, the (chunk, value)
+    self-join enumerates candidates, exact Hamming filters them."""
     if max_hamming >= n_chunks:
         raise ValueError(
             f"pigeonhole blocking with {n_chunks} chunks guarantees recall "
@@ -828,13 +803,12 @@ def simhash_near_pairs(
             docs, id_col, text_col, min_tokens=1,
             max_group=max_bucket_size,
         )
-        raw = simhash_near_pairs(
-            canon_docs, id_col, text_col, max_hamming, n_chunks,
+        raw = _simhash_pairs(
+            engine, canon_docs, id_col, text_col, max_hamming, n_chunks,
             max_bucket_size, collapse_exact=False,
         )
         return _expand_pairs(raw, members, {"hamming": F.lit(0)})
-    width = 64 // n_chunks
-    tokens = tokenize_col(text_col)
+    width = _FAMILIES[engine].sim_bits // n_chunks
     from vspace_spark.operators.scale import (
         est_relation_bytes,
         persist_shared,
@@ -843,7 +817,7 @@ def simhash_near_pairs(
     # one 64-bit signature per doc — rows × 40 B, tiny next to the
     # corpus, so the shared policy keeps it on-heap at any real scale
     sigs = persist_shared(
-        simhash_signatures(docs, id_col, tokens),
+        _simhash_sigs(engine, docs, id_col, tokenize_col(text_col)),
         est_relation_bytes(docs, row_bytes=40),
     )
     chunks = F.array(
@@ -877,119 +851,59 @@ def simhash_near_pairs(
     )
 
 
+def simhash_near_pairs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_hamming: int = 7,
+    n_chunks: int = 8,
+    max_bucket_size: int | None = None,
+    collapse_exact: bool = True,
+) -> DataFrame:
+    """SimHash near-dup pairs with PIGEONHOLE chunk blocking on the
+    64-bit ``xxhash64`` signature (the production lane; its
+    oracle-checked definition is :func:`simhash_near_pairs_portable`):
+    the signature splits into ``n_chunks`` equal chunks; a pair within
+    Hamming distance < n_chunks must agree exactly on ≥1 chunk, so
+    joining on (chunk_index, chunk_value) enumerates ALL such pairs —
+    guaranteed recall for ham ≤ n_chunks - 1, no cross join. Exact
+    Hamming then filters to ``max_hamming``.
+
+    Candidate volume scales with 2^(64/n_chunks) bucket granularity;
+    8×8-bit chunks is the standard sweet spot (Manku et al.'s simhash
+    dedup uses the same pigeonhole construction). ``collapse_exact``
+    is the same output-identical exact-dedup prepass as
+    :func:`minhash_lsh_pairs` (identical texts ⇒ identical
+    signatures ⇒ hamming 0, always within radius).
+    """
+    return _simhash_pairs(
+        "xxhash64", docs, id_col, text_col, max_hamming, n_chunks,
+        max_bucket_size, collapse_exact,
+    )
+
+
 def simhash_near_pairs_portable(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 5,
     n_chunks: int = 6,
-    bits: int = 60,
     max_bucket_size: int | None = None,
     collapse_exact: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs with PORTABLE hashing: md5-derived
     60-bit token patterns (15 hex chars → always-positive BIGINT, so
-    no sign-bit special case) instead of ``xxhash64``, making every
-    vote, signature, chunk key, and Hamming distance reproducible in
-    ANSI SQL — the whole operator sits under the value-hash oracle
-    gate. The 64-bit xxhash64 path (:func:`simhash_near_pairs`) stays
-    the production hot path.
-
-    Same pigeonhole construction: ``n_chunks`` equal chunks guarantee
-    recall for Hamming ≤ n_chunks - 1 (6 × 10-bit chunks → radius 5).
-    Same scale shape as :func:`simhash_signatures`: one md5 per
-    distinct token, ``bits`` SUM votes map-side combined, the only
-    shuffles being the vote aggregation and the (chunk, value) bucket
-    self-join.
+    no sign-bit case) instead of ``xxhash64``, making every vote,
+    signature, chunk key, and Hamming distance reproducible in ANSI
+    SQL — the whole operator sits under the value-hash oracle gate
+    (``dedup_simhash``). Same pigeonhole skeleton as
+    :func:`simhash_near_pairs` over 60 bits: ``n_chunks`` equal chunks
+    guarantee recall for Hamming ≤ n_chunks - 1 (6 × 10-bit chunks →
+    radius 5).
     """
-    if max_hamming >= n_chunks:
-        raise ValueError(
-            f"pigeonhole blocking with {n_chunks} chunks guarantees "
-            f"recall only for hamming <= {n_chunks - 1}; got "
-            f"max_hamming={max_hamming}"
-        )
-    if collapse_exact and (
-        max_bucket_size is not None or not _clone_light(docs, text_col)
-    ):
-        canon_docs, members = _collapse_docs(
-            docs, id_col, text_col, min_tokens=1,
-            max_group=max_bucket_size,
-        )
-        raw = simhash_near_pairs_portable(
-            canon_docs, id_col, text_col, max_hamming, n_chunks, bits,
-            max_bucket_size, collapse_exact=False,
-        )
-        return _expand_pairs(raw, members, {"hamming": F.lit(0)})
-    width = bits // n_chunks
-    from vspace_spark.operators.scale import rebalance_for_compute
-
-    ex = rebalance_for_compute(docs).select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.array_distinct(tokenize_col(text_col))).alias("_t"),
-    ).select(
-        "_id",
-        F.conv(F.substring(F.md5("_t"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("_h"),
-    )
-    votes = ex.groupBy("_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright("_h", j).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"_v{j}")
-            for j in range(bits)
-        ]
-    )
-    sig = F.lit(0).cast("bigint")
-    for j in range(bits):
-        sig = sig + F.when(
-            F.col(f"_v{j}") > 0, F.lit(2**j).cast("bigint")
-        ).otherwise(F.lit(0).cast("bigint"))
-    from vspace_spark.operators.scale import (
-        est_relation_bytes,
-        persist_shared,
-    )
-
-    sigs = persist_shared(
-        votes.select("_id", sig.alias("sig")),
-        est_relation_bytes(docs, row_bytes=40),
-    )
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftrightunsigned("sig", c * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("val"),
-            )
-            for c in range(n_chunks)
-        ]
-    )
-    blocked = sigs.select(
-        "_id", "sig", F.explode(chunks).alias("ck")
-    ).select("_id", "sig", "ck.chunk", "ck.val")
-    if max_bucket_size is not None:
-        blocked = drop_hot_buckets(blocked, ["chunk", "val"], max_bucket_size)
-    left = blocked.select(
-        "chunk", "val", F.col("_id").alias("a"), F.col("sig").alias("_sa")
-    )
-    right = blocked.select(
-        "chunk", "val", F.col("_id").alias("b"), F.col("sig").alias("_sb")
-    )
-    return (
-        left.join(right, ["chunk", "val"])
-        .filter(F.col("a") < F.col("b"))
-        .select(
-            "a",
-            "b",
-            hamming64(F.col("_sa"), F.col("_sb"))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["a", "b"])
+    return _simhash_pairs(
+        "portable", docs, id_col, text_col, max_hamming, n_chunks,
+        max_bucket_size, collapse_exact,
     )
 
 

@@ -361,11 +361,21 @@ def agree_incr_minhash_xxhash64(
     (hashes, band buckets, agreement counts), so exact bag equality
     is not brittle — no margin rule needed."""
     from vspace_spark.io.sinks import keyed_tmp_dir
-    from vspace_spark.streaming.incremental import (
+    from vspace_spark.operators.dedup import (
+        _agreement,
+        _band_col,
+        _band_pairs,
         _banded,
-        _portable_minhash_sigs,
-        incremental_minhash_dedup,
+        _minhash_plan,
+        _minhash_sigs,
     )
+    from vspace_spark.operators.scale import (
+        KNOWN_SMALL,
+        est_relation_bytes,
+        persist_shared,
+        rebalance_for_compute,
+    )
+    from vspace_spark.streaming.incremental import incremental_minhash_dedup
 
     docs_tbl = load_table(spark, sf_dir, "documents")
     docs = docs_tbl.select("doc_id", "text")
@@ -374,51 +384,23 @@ def agree_incr_minhash_xxhash64(
         spark, docs, work_dir=work, n_input_files=5,
         hash_engine="xxhash64",
     )
-    # banded signatures feed both sides of the bucket self-join AND
-    # both exceptAll directions of the diff — persist once (guide §5 —
-    # r13; the batch side was otherwise rebuilt per reference while
-    # `inc` is already an eager localCheckpoint). Size: 8 band rows
-    # per doc × (32-long sig + band/bucket) ≈ 2.2 KB/doc, footer-exact
-    # off the bare table scan.
-    from vspace_spark.operators.scale import (
-        est_relation_bytes,
-        persist_shared,
-    )
-
-    bb = persist_shared(
-        _banded(
-            _portable_minhash_sigs(
-                docs, "doc_id", "text", 3, 32, hash_engine="xxhash64"
-            ),
-            8,
-            4,
+    # signatures feed the bucket self-join and both rejoins — persist
+    # once; 32 longs per doc, footer-exact off the bare table scan
+    sigs = persist_shared(
+        _minhash_sigs(
+            rebalance_for_compute(docs),
+            _minhash_plan("xxhash64", "text", 3, 32),
         ),
-        est_relation_bytes(docs_tbl, row_bytes=8 * (8 * 32 + 24)),
+        est_relation_bytes(docs_tbl, row_bytes=8 * 32 + 32),
     )
-    left = bb.select(
-        F.col("_id").alias("a"), F.col("sig").alias("_sa"),
-        "band", "bucket",
-    )
-    right = bb.select(
-        F.col("_id").alias("b"), F.col("sig").alias("_sb"),
-        "band", "bucket",
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda v: v
-        )
-    )
-    from vspace_spark.operators.scale import KNOWN_SMALL
-
+    banded = _banded(sigs, _band_col("xxhash64", 8, 4), "_id")
     # flagged-pair set (sub-corpus-sized by construction), read by
     # both exceptAll directions — persist so the bucket self-join
     # runs once
     batch = persist_shared(
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", agree.alias("agree"))
-        .filter(F.col("agree") >= 16)
-        .distinct(),
+        _band_pairs(banded, sigs)
+        .select("a", "b", _agreement("_siga", "_sigb").alias("agree"))
+        .filter(F.col("agree") >= 16),
         KNOWN_SMALL,
     )
     return _diff_count(inc.select("a", "b", "agree"), batch)

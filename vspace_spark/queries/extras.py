@@ -369,11 +369,13 @@ def stream_dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature agreement estimates Jaccard and pairs ≥ 0.5 survive.
 
     The stream side computes its signature as a PURE COLUMN EXPRESSION
-    (``array_min`` over transformed distinct shingles): no streaming
-    aggregation, so the stream-static join stays stateless and
-    append-mode needs no watermark gymnastics. The static side uses
-    the explode + per-seed MIN aggregation (the batch scale path, same
-    hash definition → identical signatures). Batch-equivalent on the
+    (``operators.dedup._row_minhash``: ``array_min`` over transformed
+    distinct shingles): no streaming aggregation, so the stream-static
+    join stays stateless and append-mode needs no watermark
+    gymnastics. The static side uses the batch twins' explode +
+    per-seed MIN builder (``_minhash_sigs``); both sides take the
+    portable family's seed hash and band bucket, so signatures and
+    buckets are identical. Batch-equivalent on the
     finite replay → fully oracle-checked (same portable signatures as
     ``dedup_minhash_lsh``, plus the ≥ 0.5 threshold). Production: the
     per-row HOF signature costs num_hashes × |shingles| md5s per
@@ -384,43 +386,17 @@ def stream_dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     from vspace_spark.functions.text import ngrams_col, tokenize_col
+    from vspace_spark.operators.dedup import (
+        _agreement,
+        _band_col,
+        _banded,
+        _minhash_plan,
+        _minhash_sigs,
+        _row_minhash,
+    )
     from vspace_spark.streaming.events import run_stream_to_memory
 
     num_hashes, bands, rows = 32, 8, 4
-
-    def md5_hash(i: int):
-        # factory, not a default-arg lambda: PySpark dispatches HOF
-        # lambdas on arity (a 2-param lambda would get the array index)
-        return lambda t: F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(str(i)), t)), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-
-    def banded(df_with_sig, id_col, sig_col):
-        return df_with_sig.select(
-            id_col,
-            sig_col,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.element_at(sig_col, b * rows + r + 1)
-                                    for r in range(rows)
-                                ],
-                            ).alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select(id_col, sig_col, "bb.band", "bb.bucket")
 
     # static index: explode + per-seed MIN aggregation (the scale
     # path), built over the corpus's DISTINCT texts only — the same
@@ -451,20 +427,10 @@ def stream_dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     canon_docs = canon_docs.repartition(
         spark.sparkContext.defaultParallelism
     )
-    ex = canon_docs.select(
-        "b",
-        F.explode(
-            F.array_distinct(ngrams_col(tokenize_col("text"), 3))
-        ).alias("_sh"),
-    )
-    hashed = ex.select(
-        "b", *[md5_hash(i)(F.col("_sh")).alias(f"_h{i}") for i in range(num_hashes)]
-    )
-    static_sigs = hashed.groupBy("b").agg(
-        *[F.min(f"_h{i}").alias(f"_m{i}") for i in range(num_hashes)]
-    ).select(
-        "b", F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("_sigb")
-    )
+    static_sigs = _minhash_sigs(
+        canon_docs,
+        _minhash_plan("portable", "text", 3, num_hashes, id_col="b"),
+    ).select(F.col("_id").alias("b"), F.col("sig").alias("_sigb"))
     # materialized BEFORE the stream starts: (1) a stream-static join
     # re-evaluates the static plan every micro-batch — the 450 M-md5
     # signature build must run once, not per trigger; (2) the static
@@ -485,7 +451,12 @@ def stream_dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-row-scaled, so the shared policy (not a bare heap
     # persist) decides the level at 100× (VERDICT r12 #4/#5)
     static = persist_shared(
-        banded(static_sigs, "b", "_sigb"),
+        _banded(
+            static_sigs,
+            _band_col("portable", bands, rows, "_sigb"),
+            "b",
+            "_sigb",
+        ),
         est_relation_bytes(
             docs, row_bytes=bands * (8 * num_hashes + 32 + 12 * rows)
         ),
@@ -532,24 +503,16 @@ def stream_dedup_docs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "_sh"
         ),
     )
-    arriving = banded(
+    arriving = _banded(
         pre.select(
             "a",
-            F.array(
-                *[
-                    F.array_min(F.transform(F.col("_sh"), md5_hash(i)))
-                    for i in range(num_hashes)
-                ]
-            ).alias("_siga"),
+            _row_minhash("portable", F.col("_sh"), num_hashes).alias("_siga"),
         ),
+        _band_col("portable", bands, rows, "_siga"),
         "a",
         "_siga",
     )
-    agree = F.size(
-        F.filter(
-            F.zip_with("_siga", "_sigb", lambda x, y: x == y), lambda v: v
-        )
-    )
+    agree = _agreement("_siga", "_sigb")
     matched = (
         arriving.join(static, ["band", "bucket"])
         .select("a", "b", (agree / F.lit(num_hashes)).alias("_e"))

@@ -46,8 +46,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vspace_spark.functions.kernels import as_matrix
-from vspace_spark.functions.text import ngrams_col, tokenize_col
 from vspace_spark.io.connectors import append_index_batch, read_index
+from vspace_spark.operators.dedup import (
+    _FAMILIES,
+    _agreement,
+    _band_col,
+    _banded,
+    _minhash_plan,
+    _minhash_sigs,
+    _rows_per_band,
+)
 
 
 def _auto_lsh_layout(n: int, bits: int) -> tuple[int, int]:
@@ -324,143 +332,6 @@ def _posting_pairs(
     return cands.select("a", "b", score).filter(keep).distinct()
 
 
-def _minhash_sig_plan(
-    id_col: str,
-    text_col: str,
-    shingle_n: int,
-    num_hashes: int,
-    hash_engine: str,
-) -> tuple:
-    """The Column trees :func:`_portable_minhash_sigs` applies, built
-    ONCE so a foreachBatch caller can reuse them across micro-batches
-    (guide §7.3's loop-generated-trees rule, extended from the
-    embedding leg's r13 hoist to the minhash leg): each of the
-    ``num_hashes`` md5/conv/substring trees converts through py4j at
-    construction, and rebuilding all of them per batch was pure
-    per-batch driver cost. Columns are immutable session-independent
-    parse trees, so reuse across batches is free and exact."""
-
-    def h(i: int) -> F.Column:
-        if hash_engine == "xxhash64":
-            return F.xxhash64("_sh", F.lit(i))
-        return F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(str(i)), F.col("_sh"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-
-    ex_cols = (
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.array_distinct(ngrams_col(tokenize_col(text_col), shingle_n))
-        ).alias("_sh"),
-    )
-    hash_cols = [h(i).alias(f"_h{i}") for i in range(num_hashes)]
-    min_aggs = [F.min(f"_h{i}").alias(f"_m{i}") for i in range(num_hashes)]
-    sig_col = F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("sig")
-    return (ex_cols, hash_cols, min_aggs, sig_col)
-
-
-def _portable_minhash_sigs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int,
-    num_hashes: int,
-    hash_engine: str = "portable",
-    _plan: tuple | None = None,
-    _rebalance: bool | None = None,
-) -> DataFrame:
-    """(id, sig) minhash signatures via the scale path: distinct
-    shingles exploded once, hashed ``num_hashes``× in one projection,
-    per-seed MIN with map-side partial aggregation.
-
-    ``hash_engine="portable"`` (default) is the md5 60-bit definition
-    of ``operators.dedup.minhash_lsh_pairs_portable`` (15 hex chars →
-    always-positive BIGINT) — reproducible in any engine, the
-    oracle-checkable lane. ``"xxhash64"`` is the batch fast twin's
-    definition (``minhash_lsh_pairs``: one JVM hash instruction per
-    seed vs md5's per-seed string digest) — the production ingest
-    lane; same banding, same agreement semantics, different hash
-    values, so it pairs with the batch xxhash64 twin, not the oracle.
-
-    The input is rebalanced first: inside ``foreachBatch`` each
-    micro-batch arrives with the FILE SOURCE's partitioning (one file
-    → one or two partitions), which would serialize the 32-hash
-    projection on a couple of cores exactly like the under-
-    parallelized batch scans ``rebalance_for_compute`` was measured
-    on (PERF.md, 8.8×). The byte floor is lowered 32× from the
-    helper's default here (r13): the default 4 MB floor was
-    calibrated on ~1×-per-byte tokenize work, while this projection
-    does ``num_hashes`` interpreted md5 digests per shingle — a
-    micro-batch far below 4 MB decoded still carries seconds of
-    single-task hashing.
-
-    ``_plan`` (r14): prebuilt Column trees from
-    :func:`_minhash_sig_plan` — foreachBatch callers build them once
-    per operator call instead of once per micro-batch.
-    ``_rebalance`` (r14): ``None`` probes the input's partitioning and
-    footer size per call (the batch-caller default); ``True``/``False``
-    is a caller-made decision — the incremental replay decides ONCE
-    from the materialized replay's total bytes instead of re-probing
-    footers every micro-batch."""
-    if _rebalance is None:
-        from vspace_spark.operators.scale import rebalance_for_compute
-
-        docs = rebalance_for_compute(docs, min_bytes=128 << 10)
-    elif _rebalance:
-        docs = docs.repartition(
-            docs.sparkSession.sparkContext.defaultParallelism
-        )
-    ex_cols, hash_cols, min_aggs, sig_col = _plan or _minhash_sig_plan(
-        id_col, text_col, shingle_n, num_hashes, hash_engine
-    )
-    ex = docs.select(*ex_cols)
-    mins = ex.select("_id", *hash_cols).groupBy("_id").agg(*min_aggs)
-    return mins.select("_id", sig_col)
-
-
-def _banded_col(bands: int, rows: int) -> F.Column:
-    """The exploded (band, bucket) struct column :func:`_banded`
-    applies — exposed so foreachBatch callers can build it once per
-    operator call (guide §7.3, same rationale as
-    :func:`_minhash_sig_plan`)."""
-    return F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at("sig", b * rows + r + 1)
-                            for r in range(rows)
-                        ],
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
-    ).alias("bb")
-
-
-def _banded(
-    sigs: DataFrame,
-    bands: int,
-    rows: int,
-    _bb: F.Column | None = None,
-) -> DataFrame:
-    """(id, sig, band, bucket) — bucket is the band's min-values
-    joined as a string (no second-level hash; portable)."""
-    return sigs.select(
-        "_id",
-        "sig",
-        _bb if _bb is not None else _banded_col(bands, rows),
-    ).select("_id", "sig", "bb.band", "bb.bucket")
-
-
 def incremental_minhash_dedup(
     spark: SparkSession,
     docs: DataFrame,
@@ -483,18 +354,19 @@ def incremental_minhash_dedup(
     ``<work_dir>/out``.
 
     ``hash_engine``: ``"portable"`` (default) keeps the md5 signature
-    the oracle reproduces; ``"xxhash64"`` swaps in the batch fast
-    twin's one-instruction hash (see
-    :func:`_portable_minhash_sigs`) — the production ingest lane,
-    measured in PERF.md round 11; pair-set-vs-expected equality and
-    replay idempotency are test-pinned for both.
+    and string bucket the oracle reproduces; ``"xxhash64"`` swaps in
+    the batch fast twin's family (``operators.dedup._FAMILIES``: one
+    JVM hash instruction per seed, hashed bucket) — the production
+    ingest lane, measured in PERF.md round 11. Either way the
+    signatures and buckets are the batch twin's, so the union over
+    micro-batches equals the batch pair set; pair-set-vs-expected
+    equality and replay idempotency are test-pinned for both.
+    ``bands`` must divide ``num_hashes`` (``ValueError`` otherwise).
     """
-    if hash_engine not in ("portable", "xxhash64"):
+    if hash_engine not in _FAMILIES:
         raise ValueError(f"unknown hash_engine: {hash_engine}")
-    rows = num_hashes // bands
-    agree = F.size(
-        F.filter(F.zip_with("_pa", "_pb", lambda x, y: x == y), lambda v: v)
-    )
+    rows = _rows_per_band(num_hashes, bands)
+    agree = _agreement("_pa", "_pb").alias("agree")
 
     def setup(in_dir: str, schema: T.StructType):
         # Per-batch fixed cost, paid once per RUN (VERDICT r13 #2,
@@ -503,12 +375,13 @@ def incremental_minhash_dedup(
         # made from the materialized replay's total decoded bytes (the
         # rule of rebalance_for_compute's 128 KB floor at one-file
         # batches) instead of re-probing parquet footers per batch.
+        # The floor is 32× below that helper's default: the default
+        # was calibrated on ~1×-per-byte tokenize work, while the
+        # signature projection does num_hashes hashes per shingle.
         from vspace_spark.operators.scale import _uncompressed_input_bytes
 
-        sig_plan = _minhash_sig_plan(
-            "doc_id", "text", shingle_n, num_hashes, hash_engine
-        )
-        bb_col = _banded_col(bands, rows)
+        sig_plan = _minhash_plan(hash_engine, "text", shingle_n, num_hashes)
+        bb_col = _band_col(hash_engine, bands, rows)
         total = _uncompressed_input_bytes(spark.read.parquet(in_dir))
         rebalance = total is None or total / max(n_input_files, 1) >= 128 << 10
         index_schema = T.StructType(
@@ -516,7 +389,9 @@ def incremental_minhash_dedup(
                 T.StructField("_id", schema["doc_id"].dataType),
                 T.StructField("sig", T.ArrayType(T.LongType())),
                 T.StructField("band", T.IntegerType()),
-                T.StructField("bucket", T.StringType()),
+                T.StructField(
+                    "bucket", _FAMILIES[hash_engine].bucket_type
+                ),
                 T.StructField("batch", T.IntegerType()),
             ]
         )
@@ -525,23 +400,21 @@ def incremental_minhash_dedup(
             # persisted, not counted: whichever of the pairs job and the
             # index append touches a partition first computes it, the
             # other blocks on the cache lock and reads it
+            if rebalance:
+                # a one-file micro-batch arrives in one or two IO
+                # partitions; spread it before the hash projection
+                batch = batch.repartition(
+                    spark.sparkContext.defaultParallelism
+                )
             bb = _banded(
-                _portable_minhash_sigs(
-                    batch, "doc_id", "text", shingle_n, num_hashes,
-                    hash_engine=hash_engine,
-                    _plan=sig_plan,
-                    _rebalance=rebalance,
-                ),
-                bands,
-                rows,
-                _bb=bb_col,
+                _minhash_sigs(batch, sig_plan), bb_col, "_id", "sig"
             ).persist()
             flagged = _posting_pairs(
                 bb,
                 earlier and earlier["index"],
                 ["band", "bucket"],
                 "sig",
-                agree.alias("agree"),
+                agree,
                 F.col("agree") >= min_agree,
             )
             return bb, flagged, {"index": bb}
