@@ -9,6 +9,9 @@ the trilogy at a chosen SF/batch count and prints the decomposition —
 the measurement behind the round-13 "per-batch fixed cost" work
 (OPTIMIZATION_r13.md, Not-yet-optimized #1).
 
+Each line also carries ``jobs_per_batch_p50``, the median number of
+Spark jobs a micro-batch ran (the ``jobs`` field of ``progress_out``).
+
 Run: python scripts/incr_batch_decompose.py [leg] [n_batches] [reps]
      leg in {embedding, minhash, passjoin, embedding_arrow,
      minhash_xxhash64}
@@ -18,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -128,6 +132,9 @@ def main() -> None:
                     },
                     "gap_sec": round(
                         wall - sums["triggerExecution"] / 1000, 2
+                    ),
+                    "jobs_per_batch_p50": statistics.median(
+                        p["jobs"] for p in progress
                     ),
                     "count_sec": round(count_sec, 2),
                     "load_1m": round(os.getloadavg()[0], 1),

@@ -608,88 +608,175 @@ def test_thread_target_falls_back_outside_pinned_mode(spark, monkeypatch):
     assert _thread_target(spark, fn) is fn
 
 
+# Most Spark jobs one micro-batch of each leg may run. Under AQE every
+# query stage ran as a job of its own: 13, 11 and 17 per batch.
+_BATCH_JOB_CEILINGS = {"minhash": 3, "fold": 5, "arrow": 5, "passjoin": 11}
+
+
+def test_replay_batches_run_few_jobs_and_leave_caller_aqe_on(
+    spark, tmp_path
+):
+    """Every leg plans its micro-batches without AQE, on the stream's
+    own session: ``progress_out`` records at most 3 Spark jobs per
+    MinHash batch, 5 per embedding batch (both ``sig_engine`` values)
+    and 11 per PassJoin batch. The first probing batch records its
+    pairs plan: the MinHash postings are joined as the aggregate left
+    them, the embedding postings are spread round-robin first. The
+    caller's session keeps AQE on throughout."""
+    import numpy as np
+
+    from vspace_spark.streaming.incremental import (
+        incremental_embedding_dedup,
+        incremental_minhash_dedup,
+        incremental_passjoin_dedup,
+    )
+
+    key = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(key) == "true"
+    rng = np.random.default_rng(13)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(0, 1, 16)]) for i in range(60)],
+        "vec_id long, embedding array<float>",
+    )
+
+    def embedding(engine):
+        return lambda work, progress: incremental_embedding_dedup(
+            spark, emb, bits=32, bits_per_table=4, threshold=0.4,
+            work_dir=work, n_input_files=3, progress_out=progress,
+            sig_engine=engine,
+        )
+
+    legs = {
+        "minhash": lambda work, progress: incremental_minhash_dedup(
+            spark, TestIncrementalIndexDedup()._clones(spark),
+            work_dir=work, n_input_files=3, progress_out=progress,
+        ),
+        "fold": embedding("fold"),
+        "arrow": embedding("arrow"),
+        "passjoin": lambda work, progress: incremental_passjoin_dedup(
+            spark, TestIncrementalPassjoin()._near_docs(spark),
+            work_dir=work, n_input_files=3, progress_out=progress,
+        ),
+    }
+    plans = {}
+    for leg, run in legs.items():
+        progress: list = []
+        run(str(tmp_path / leg), progress)
+        assert [p["batch_id"] for p in progress] == [0, 1, 2], leg
+        jobs = [p["jobs"] for p in progress]
+        assert all(1 <= j <= _BATCH_JOB_CEILINGS[leg] for j in jobs), (
+            leg, jobs,
+        )
+        assert [p["batch_id"] for p in progress if "plan" in p] == [1], leg
+        plans[leg] = progress[1]["plan"]
+    assert "RoundRobinPartitioning" not in plans["minhash"]
+    assert "RoundRobinPartitioning" in plans["fold"]
+    assert "RoundRobinPartitioning" in plans["arrow"]
+    assert spark.conf.get(key) == "true"
+
+
+def _assert_embedding_matches_batch_lsh(spark, emb, work, n_input_files):
+    """The embedding leg's union over micro-batches equals the BATCH
+    hyperplane-LSH pair set (same portable planes, same exact-cosine
+    confirm) — the batch-boundary-independence contract — and a replay
+    over the same work_dir is idempotent."""
+    from vspace_spark.functions.vectors import cosine_similarity
+    from vspace_spark.operators.similarity import (
+        lsh_signature,
+        portable_hyperplanes,
+    )
+    from vspace_spark.streaming.incremental import (
+        incremental_embedding_dedup,
+    )
+
+    inc = incremental_embedding_dedup(
+        spark, emb, bits=32, bits_per_table=4, threshold=0.4,
+        work_dir=work, n_input_files=n_input_files,
+    )
+    got = {(r.a, r.b, r.cos) for r in inc.collect()}
+
+    planes = portable_hyperplanes(64, 32)
+    sigs = emb.select(
+        "vec_id",
+        "embedding",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(t).alias("tbl"),
+                        lsh_signature(
+                            F.col("embedding"),
+                            planes[t * 4 : (t + 1) * 4],
+                        ).alias("bucket"),
+                    )
+                    for t in range(8)
+                ]
+            )
+        ).alias("_tb"),
+    ).select("vec_id", "embedding", "_tb.tbl", "_tb.bucket")
+    left = sigs.select(
+        F.col("vec_id").alias("a"),
+        F.col("embedding").alias("_va"),
+        "tbl",
+        "bucket",
+    )
+    right = sigs.select(
+        F.col("vec_id").alias("b"),
+        F.col("embedding").alias("_vb"),
+        "tbl",
+        "bucket",
+    )
+    want = {
+        (r.a, r.b, r.cos)
+        for r in left.join(right, ["tbl", "bucket"])
+        .filter(F.col("a") < F.col("b"))
+        .select(
+            "a",
+            "b",
+            cosine_similarity(F.col("_va"), F.col("_vb")).alias("_c"),
+        )
+        # RAW-value filter, then round — matching the operator and
+        # the registered oracle (ADVICE r10 medium)
+        .filter(F.col("_c") >= 0.4)
+        .select("a", "b", F.round("_c", 6).alias("cos"))
+        .distinct()
+        .collect()
+    }
+    assert got == want, (len(got), len(want))
+    assert len(got) > 0
+    again = incremental_embedding_dedup(
+        spark, emb, bits=32, bits_per_table=4, threshold=0.4,
+        work_dir=work, n_input_files=n_input_files,
+    )
+    assert {(r.a, r.b, r.cos) for r in again.collect()} == want
+
+
 class TestIncrementalEmbedding:
     @pytest.mark.slow  # >20 s (measured r14): driver verify-window budget
     def test_matches_batch_lsh_pairs(self, spark, sf_dir, tmp_path):
-        """The embedding leg of the accreting-index trilogy: the union
-        over micro-batches must equal the BATCH hyperplane-LSH pair
-        set (same portable planes, same exact-cosine confirm) — the
-        batch-boundary-independence contract — and replay over the
-        same work_dir must be idempotent."""
-        from vspace_spark.functions.vectors import cosine_similarity
+        """The embedding leg of the accreting-index trilogy equals the
+        batch LSH pair set and replays idempotently, over 5 batches
+        of the configured scale."""
         from vspace_spark.io.tables import load_table
-        from vspace_spark.operators.similarity import (
-            lsh_signature,
-            portable_hyperplanes,
-        )
-        from vspace_spark.streaming.incremental import (
-            incremental_embedding_dedup,
-        )
 
         emb = load_table(spark, sf_dir, "embeddings")
-        work = str(tmp_path / "emb")
-        inc = incremental_embedding_dedup(
-            spark, emb, bits=32, bits_per_table=4, threshold=0.4,
-            work_dir=work, n_input_files=5,
+        _assert_embedding_matches_batch_lsh(
+            spark, emb, str(tmp_path / "emb"), 5
         )
-        got = {(r.a, r.b, r.cos) for r in inc.collect()}
 
-        planes = portable_hyperplanes(64, 32)
-        sigs = emb.select(
-            "vec_id",
-            "embedding",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("tbl"),
-                            lsh_signature(
-                                F.col("embedding"),
-                                planes[t * 4 : (t + 1) * 4],
-                            ).alias("bucket"),
-                        )
-                        for t in range(8)
-                    ]
-                )
-            ).alias("_tb"),
-        ).select("vec_id", "embedding", "_tb.tbl", "_tb.bucket")
-        left = sigs.select(
-            F.col("vec_id").alias("a"),
-            F.col("embedding").alias("_va"),
-            "tbl",
-            "bucket",
+    def test_matches_batch_lsh_pairs_three_batches(
+        self, spark, sf_dir, tmp_path
+    ):
+        """Default-suite twin of :meth:`test_matches_batch_lsh_pairs`
+        with the same assertions over 3 batches of the sf0.001 tables
+        (the suite's default scale): the first batch builds the index,
+        the next two probe it."""
+        from vspace_spark.io.tables import load_table
+
+        emb = load_table(spark, sf_dir, "embeddings")
+        _assert_embedding_matches_batch_lsh(
+            spark, emb, str(tmp_path / "emb3"), 3
         )
-        right = sigs.select(
-            F.col("vec_id").alias("b"),
-            F.col("embedding").alias("_vb"),
-            "tbl",
-            "bucket",
-        )
-        want = {
-            (r.a, r.b, r.cos)
-            for r in left.join(right, ["tbl", "bucket"])
-            .filter(F.col("a") < F.col("b"))
-            .select(
-                "a",
-                "b",
-                cosine_similarity(F.col("_va"), F.col("_vb")).alias(
-                    "_c"
-                ),
-            )
-            # RAW-value filter, then round — matching the operator and
-            # the registered oracle (ADVICE r10 medium)
-            .filter(F.col("_c") >= 0.4)
-            .select("a", "b", F.round("_c", 6).alias("cos"))
-            .distinct()
-            .collect()
-        }
-        assert got == want, (len(got), len(want))
-        assert len(got) > 0
-        again = incremental_embedding_dedup(
-            spark, emb, bits=32, bits_per_table=4, threshold=0.4,
-            work_dir=work, n_input_files=5,
-        )
-        assert {(r.a, r.b, r.cos) for r in again.collect()} == want
 
     def test_incremental_fold_planes_as_data(self, spark, tmp_path):
         """The fold lane ships its hyperplanes as DATA (one json

@@ -31,11 +31,22 @@ found exactly once — in the later endpoint's batch via the index probe
 when the two arrive apart, or via the intra-batch self-join when they
 arrive together — so the union over batches equals the batch pair
 set regardless of how the file source slices the replay.
+
+Each micro-batch is planned without AQE, on the stream's own session
+only (the caller's session keeps its setting). A micro-batch is a few
+documents, so AQE has nothing to coalesce or split, but it runs every
+query stage as a Spark job of its own: 13 jobs per MinHash batch
+against 3 for the static plan (PERF.md "Three jobs per micro-batch").
+The static plan still broadcasts the batch-sized side and streams the
+index scan, because the cached postings carry their real size.
 """
 
 from __future__ import annotations
 
 import concurrent.futures
+import contextlib
+import functools
+import operator
 import os
 import shutil
 import uuid
@@ -55,6 +66,14 @@ from vspace_spark.operators.dedup import (
     _minhash_plan,
     _minhash_sigs,
     _rows_per_band,
+)
+from vspace_spark.plans.explain import formatted_plan
+
+# The local properties ``SparkContext.setJobGroup`` sets.
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
 )
 
 
@@ -116,6 +135,20 @@ def _has_earlier(
     )
 
 
+@contextlib.contextmanager
+def _job_group(sc, group: str):
+    """Run the body's Spark jobs under job group ``group``, keeping the
+    thread's job description, then restore the thread's own group (a
+    streaming query's is its run id, which stopping it cancels)."""
+    saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+    sc.setJobGroup(group, saved[1], interruptOnCancel=True)
+    try:
+        yield
+    finally:
+        for k, v in zip(_JOB_GROUP_PROPS, saved):
+            sc.setLocalProperty(k, v)
+
+
 def _accreting_replay(
     spark: SparkSession,
     replay: DataFrame,
@@ -145,17 +178,26 @@ def _accreting_replay(
     included): an explicit schema skips parquet footer inference over
     the growing history on every probe. ``step(batch, earlier)``
     builds one micro-batch's work; ``earlier`` maps each index name to
-    the postings of the batches STRICTLY before this one — a replayed
-    batch must not see its own or later appends, or the rerun emits
-    pairs twice — or is None when there are none. ``step`` returns
-    ``(cached, flagged, appends)``: the frame it persisted, the pairs
-    to write and the ``{index name: frame}`` postings to append.
+    the postings of the batches STRICTLY before this one (their
+    ``batch`` column included) — a replayed batch must not see its own
+    or later appends, or the rerun emits pairs twice — or is None when
+    there are none. ``step`` returns ``(cached, flagged, appends)``:
+    the frame it persisted, the pairs to write and the ``{index name:
+    frame}`` postings to append.
+
+    AQE is switched off on the micro-batch's session, a per-query clone
+    of ``spark`` (the module docstring has why); ``spark``'s own conf
+    is never changed.
 
     ``progress_out`` receives one record per data batch — ``batch_id``,
-    ``duration_ms``, ``rows`` and the engine's ``durationMs`` phase
-    map. Each batch's progress is read as the next batch starts, so a
-    run longer than ``spark.sql.streaming.numRecentProgressUpdates``
-    still reports every batch.
+    ``duration_ms``, ``rows``, the engine's ``durationMs`` phase map
+    and ``jobs``, the Spark jobs the batch ran (each batch runs under
+    a job group of its own, which the pool threads inherit). The first
+    batch that probes the index also carries ``plan``, the formatted
+    physical plan of its pairs query. Each batch's progress is read as
+    the next batch starts, so a run longer than
+    ``spark.sql.streaming.numRecentProgressUpdates`` still reports
+    every batch.
     """
     if work_dir is None:
         work_dir = os.path.join(
@@ -205,6 +247,8 @@ def _accreting_replay(
     # starts batch N+1 only after batch N is committed.
     pool = concurrent.futures.ThreadPoolExecutor(max_workers=len(paths))
     progress: dict[int, dict] = {}
+    plans: dict[int, str] = {}  # the first probing batch's pairs plan
+    run_id = uuid.uuid4().hex
     query: list = []  # the running query, for process() to read
 
     def record(p) -> None:
@@ -219,20 +263,28 @@ def _accreting_replay(
                 },
             )
 
+    def group(batch_id: int) -> str:
+        return f"vspace-{tag}-{run_id}-{batch_id}"
+
     def process(batch: DataFrame, batch_id: int) -> None:
+        batch.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
         if progress_out is not None and query:
             record(query[0].lastProgress)  # the batch that just ended
+        with _job_group(spark.sparkContext, group(batch_id)):
+            run(batch, batch_id)
+
+    def run(batch: DataFrame, batch_id: int) -> None:
         earlier = None
         if _has_earlier(attempted, batch_id, paths.values()):
             earlier = {
                 name: read_index(
                     spark, paths[name], fmt="parquet", schema=idx_schema
-                )
-                .filter(F.col("batch") < batch_id)
-                .drop("batch")
+                ).filter(f"`batch` < {batch_id}")
                 for name, idx_schema in indexes.items()
             }
         cached, flagged, appends = step(batch, earlier)
+        if progress_out is not None and earlier is not None and not plans:
+            plans[batch_id] = formatted_plan(flagged)
         attempted.add(batch_id)
         *pooled, (last, df) = appends.items()
         writes = [_submit_append(pool, spark, flagged, out_dir, batch_id)]
@@ -256,7 +308,13 @@ def _accreting_replay(
         if progress_out is not None:
             for p in q.recentProgress:  # the last batch's, at least
                 record(p)
-            progress_out.extend(progress[b] for b in sorted(progress))
+            tracker = spark.sparkContext.statusTracker()
+            for b in sorted(progress):
+                rec = progress[b]
+                rec["jobs"] = len(tracker.getJobIdsForGroup(group(b)))
+                if b in plans:
+                    rec["plan"] = plans[b]
+                progress_out.append(rec)
     finally:
         q.stop()
         pool.shutdown(wait=True)
@@ -280,56 +338,76 @@ def _accreting_replay(
 
 
 def _posting_pairs(
-    posted: DataFrame,
-    earlier: DataFrame | None,
-    keys: list,
+    keys: list[str],
     payload: str,
     score: F.Column,
     keep: F.Column,
-) -> DataFrame:
-    """One micro-batch's flagged pairs over postings ``(_id, payload,
-    *keys)``: candidates from the intra-batch self-join on ``keys``
-    (a < b) and, when ``earlier`` postings exist, from the probe of
-    that index, min/max-normalized so the pair key is orientation-free
-    even if the replay delivers files out of id order. ``score`` is
-    computed over the oriented payloads (``_pa`` of ``a``, ``_pb`` of
-    ``b``) and kept where ``keep`` holds, one row per pair however
-    many keys matched.
+    spread: int | None,
+):
+    """``pairs(posted, earlier)``: one micro-batch's flagged pairs over
+    postings ``(_id, payload, *keys)``. Candidates come from the
+    intra-batch self-join on ``keys`` (a < b) and, when ``earlier``
+    postings exist, from the probe of that index, min/max-normalized
+    so the pair key is orientation-free even if the replay delivers
+    files out of id order. ``score`` is computed over the oriented
+    payloads (``_pa`` of ``a``, ``_pb`` of ``b``) and kept where
+    ``keep`` holds, one row per pair however many keys matched.
 
-    Join-probe spread (guide §2 — r13): the postings are cached in the
-    batch's IO partitioning (ONE partition for a one-file trigger), so
-    without it the confirm ran single-task over every candidate —
-    2–3.6 s/batch at 244k candidates (OPTIMIZATION_r13.md). Spreading
-    batch-sized posting rows is a KB-scale shuffle; the index append
-    still writes the unspread postings, one file per batch."""
-    new = posted.repartition(
-        posted.sparkSession.sparkContext.defaultParallelism
-    ).select(F.col("_id").alias("nid"), F.col(payload).alias("np"), *keys)
-    left = new.select(F.col("nid").alias("a"), F.col("np").alias("_pa"), *keys)
-    right = new.select(
-        F.col("nid").alias("b"), F.col("np").alias("_pb"), *keys
+    Called once per run: every Column is built here, so a batch makes
+    DataFrame calls only. Each ``F.*`` call is about 16 py4j round
+    trips, about 190 ms per batch for this set. The
+    self-join renames the new side's keys, so both joins take their
+    whole condition, ``a < b`` and the self-match filter included.
+
+    ``spread``: the partition count the postings are spread to before
+    the joins, or None. The embedding leg spreads (guide §2 — r13):
+    its postings are a per-row projection of a one-file batch, cached
+    in ONE partition, so without it the confirm ran single-task over
+    every candidate — 2–3.6 s/batch at 244k candidates
+    (OPTIMIZATION_r13.md). Spreading batch-sized posting rows is a
+    KB-scale shuffle; the index append still writes the unspread
+    postings, one file per batch. The MinHash leg does not: its
+    postings come out of the per-``_id`` MIN aggregate, already in
+    ``spark.sql.shuffle.partitions`` partitions once AQE no longer
+    coalesces them to one."""
+    renamed = [f"_k{i}" for i in range(len(keys))]
+    same = functools.reduce(
+        operator.and_, [F.col(k) == F.col(r) for k, r in zip(keys, renamed)]
     )
-    cands = (
-        left.join(right, keys)
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b", "_pa", "_pb")
-    )
-    if earlier is not None:
-        probe = new.join(earlier, keys).filter(F.col("nid") != F.col("_id"))
-        new_first = F.col("nid") < F.col("_id")
-        cands = cands.unionByName(
-            probe.select(
-                F.least("nid", "_id").alias("a"),
-                F.greatest("nid", "_id").alias("b"),
-                F.when(new_first, F.col("np"))
-                .otherwise(F.col(payload))
-                .alias("_pa"),
-                F.when(new_first, F.col(payload))
-                .otherwise(F.col("np"))
-                .alias("_pb"),
-            )
-        )
-    return cands.select("a", "b", score).filter(keep).distinct()
+    left_cols = [
+        F.col("_id").alias("a"),
+        F.col(payload).alias("_pa"),
+        *[F.col(k) for k in keys],
+    ]
+    right_cols = [
+        F.col("_id").alias("b"),
+        F.col(payload).alias("_pb"),
+        *[F.col(k).alias(r) for k, r in zip(keys, renamed)],
+    ]
+    self_on = same & (F.col("a") < F.col("b"))
+    # probe: the new side (b, _pb) against the index rows (_id, payload)
+    probe_on = same & (F.col("b") != F.col("_id"))
+    new_first = F.col("b") < F.col("_id")
+    oriented = [
+        F.least("b", "_id").alias("a"),
+        F.greatest("b", "_id").alias("b"),
+        F.when(new_first, F.col("_pb")).otherwise(F.col(payload)).alias("_pa"),
+        F.when(new_first, F.col(payload)).otherwise(F.col("_pb")).alias("_pb"),
+    ]
+    cand_cols = [F.col("a"), F.col("b"), F.col("_pa"), F.col("_pb")]
+    out_cols = [F.col("a"), F.col("b"), score]
+
+    def pairs(posted: DataFrame, earlier: DataFrame | None) -> DataFrame:
+        if spread is not None:
+            posted = posted.repartition(spread)
+        right = posted.select(*right_cols)
+        cands = posted.select(*left_cols).join(right, self_on)
+        if earlier is not None:
+            probe = right.join(earlier, probe_on).select(*oriented)
+            cands = cands.select(*cand_cols).unionByName(probe)
+        return cands.select(*out_cols).filter(keep).distinct()
+
+    return pairs
 
 
 def incremental_minhash_dedup(
@@ -366,24 +444,31 @@ def incremental_minhash_dedup(
     if hash_engine not in _FAMILIES:
         raise ValueError(f"unknown hash_engine: {hash_engine}")
     rows = _rows_per_band(num_hashes, bands)
-    agree = _agreement("_pa", "_pb").alias("agree")
 
     def setup(in_dir: str, schema: T.StructType):
         # Per-batch fixed cost, paid once per RUN (VERDICT r13 #2,
-        # guide §7.3/§5): the signature/banding Column trees are built
-        # here and reused by every batch, and the rebalance decision is
-        # made from the materialized replay's total decoded bytes (the
-        # rule of rebalance_for_compute's 128 KB floor at one-file
-        # batches) instead of re-probing parquet footers per batch.
-        # The floor is 32× below that helper's default: the default
-        # was calibrated on ~1×-per-byte tokenize work, while the
-        # signature projection does num_hashes hashes per shingle.
+        # guide §7.3/§5): the signature, banding and pair Column trees
+        # are built here and reused by every batch, and the rebalance
+        # decision is made from the materialized replay's total decoded
+        # bytes (the rule of rebalance_for_compute's 128 KB floor at
+        # one-file batches) instead of re-probing parquet footers per
+        # batch. The floor is 32× below that helper's default: the
+        # default was calibrated on ~1×-per-byte tokenize work, while
+        # the signature projection does num_hashes hashes per shingle.
         from vspace_spark.operators.scale import _uncompressed_input_bytes
 
         sig_plan = _minhash_plan(hash_engine, "text", shingle_n, num_hashes)
         bb_col = _band_col(hash_engine, bands, rows)
+        pairs = _posting_pairs(
+            ["band", "bucket"],
+            "sig",
+            _agreement("_pa", "_pb").alias("agree"),
+            F.col("agree") >= min_agree,
+            spread=None,
+        )
         total = _uncompressed_input_bytes(spark.read.parquet(in_dir))
         rebalance = total is None or total / max(n_input_files, 1) >= 128 << 10
+        parallelism = spark.sparkContext.defaultParallelism
         index_schema = T.StructType(
             [
                 T.StructField("_id", schema["doc_id"].dataType),
@@ -403,20 +488,11 @@ def incremental_minhash_dedup(
             if rebalance:
                 # a one-file micro-batch arrives in one or two IO
                 # partitions; spread it before the hash projection
-                batch = batch.repartition(
-                    spark.sparkContext.defaultParallelism
-                )
+                batch = batch.repartition(parallelism)
             bb = _banded(
                 _minhash_sigs(batch, sig_plan), bb_col, "_id", "sig"
             ).persist()
-            flagged = _posting_pairs(
-                bb,
-                earlier and earlier["index"],
-                ["band", "bucket"],
-                "sig",
-                agree,
-                F.col("agree") >= min_agree,
-            )
+            flagged = pairs(bb, earlier and earlier["index"])
             return bb, flagged, {"index": bb}
 
         return {"index": index_schema}, step
@@ -649,8 +725,16 @@ def incremental_embedding_dedup(
     # filtering the rounded value would disagree on cosines in
     # [threshold - 5e-7, threshold)); round only for the output column.
     cos_raw = cosine_similarity(F.col("_pa"), F.col("_pb"))
+    out_cols = [F.col("a"), F.col("b"), F.round("cos", 6).alias("cos")]
 
     def setup(in_dir: str, schema: T.StructType):
+        pairs = _posting_pairs(
+            ["tbl", "bucket"],
+            "_v",
+            cos_raw.alias("cos"),
+            F.col("cos") >= threshold,
+            spread=spark.sparkContext.defaultParallelism,
+        )
         # dim from the materialized replay's first row — bounded-collect:
         # one scalar (the hyperplanes are a driver-side literal table)
         dim = spark.read.parquet(in_dir).select(F.size("_v")).first()[0]
@@ -673,14 +757,19 @@ def incremental_embedding_dedup(
         if sig_engine == "fold":
             # built once per run, not a literal tree per batch (r13:
             # seconds of driver time each)
-            tb = F.explode(
-                lsh_buckets(F.col("_v"), planes, bpt, n_tables)
-            ).alias("_tb")
+            tb_cols = [
+                F.col("_id"),
+                F.col("_v"),
+                F.explode(
+                    lsh_buckets(F.col("_v"), planes, bpt, n_tables)
+                ).alias("_tb"),
+            ]
+            posting_cols = [
+                F.col("_id"), F.col("_v"), F.col("_tb.tbl"), F.col("_tb.bucket")
+            ]
 
             def bucketed(df: DataFrame) -> DataFrame:
-                return df.select("_id", "_v", tb).select(
-                    "_id", "_v", F.col("_tb.tbl"), F.col("_tb.bucket")
-                )
+                return df.select(*tb_cols).select(*posting_cols)
 
         else:
             # plain literals and the by-value kernels only: executors
@@ -735,14 +824,9 @@ def incremental_embedding_dedup(
         def step(batch: DataFrame, earlier: dict | None):
             bb = bucketed(batch).persist()
             bb.count()  # bounded work: one micro-batch
-            flagged = _posting_pairs(
-                bb,
-                earlier and earlier["idx"],
-                ["tbl", "bucket"],
-                "_v",
-                cos_raw.alias("cos"),
-                F.col("cos") >= threshold,
-            ).select("a", "b", F.round("cos", 6).alias("cos"))
+            flagged = pairs(bb, earlier and earlier["idx"]).select(
+                *out_cols
+            )
             return bb, flagged, {"idx": bb}
 
         return {"idx": idx_schema}, step
