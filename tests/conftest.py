@@ -53,6 +53,20 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def fixed_fuzzy_corpus() -> list[str]:
+    """Fixed edit-distance corpus over the "abc" alphabet, keys 0–24
+    chars: the default-suite stand-in for the property tests' random
+    corpora (see test_properties.py's fixed-corpus twins). Position
+    is the doc id."""
+    return [
+        "bbaacaa", "acab", "abbbbbcababaacbcbbbc", "cba", "bbaacab",
+        "acacab", "bbacaa", "acb", "abbcbbcababaacbcbbbc", "abac",
+        "abcbbbcabcbaacbcbbbc", "abbcbbcbabaacbcbbbc", "", "c",
+        "abcabcabcabcabcabcabcabc", "abcabcabcabcabcaabcabcab",
+    ]
+
+
+@pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
 

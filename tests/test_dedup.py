@@ -979,6 +979,10 @@ _CLONE_LIGHT_IDENTITY_TESTS = {
     "_simhash_pairs": "test_simhash_collapse_matches_raw_uncapped",
     "embedding_near_pairs": "test_embedding_collapse_matches_raw_pairs",
     "semantic_dedup": "test_semantic_dedup_collapse_matches_raw",
+    # _edit_pairs is the collapse prologue the three edit-distance
+    # generators share; each generator keeps an identity test of its
+    # own, since each runs the prologue over its own key domain
+    "_edit_pairs": "test_edit_distance_pairs_collapse_matches_raw",
     "edit_distance_pairs": "test_edit_distance_pairs_collapse_matches_raw",
     "qgram_edit_pairs": "test_qgram_edit_pairs_collapse_matches_raw",
     "dedup_keep_best": (

@@ -232,6 +232,18 @@ _FUZZY_KEY = st.text(alphabet="abc", min_size=0, max_size=24)
 _FUZZY_CORPUS = st.lists(_FUZZY_KEY, min_size=2, max_size=12)
 
 
+def _fuzzy_docs(spark, corpus):
+    """``[doc_id, text]``, the position as id. Built from pandas over
+    Arrow, not from a list of Rows: every query stage that reads a
+    Row-list frame re-reads it through a Python worker, several times
+    the cost of the pair query itself at this size."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(corpus)), "text": corpus})
+    )
+
+
 @settings(
     max_examples=12,
     deadline=None,
@@ -240,23 +252,31 @@ _FUZZY_CORPUS = st.lists(_FUZZY_KEY, min_size=2, max_size=12)
 @given(corpus=_FUZZY_CORPUS)
 @pytest.mark.slow  # >20 s (measured r14): driver verify-window budget
 def test_qgram_pairs_match_exhaustive_in_guarantee_domain(spark, corpus):
+    _assert_qgram_matches_exhaustive(spark, corpus)
+
+
+def test_qgram_pairs_match_exhaustive_on_fixed_corpus(
+    spark, fixed_fuzzy_corpus
+):
+    """Default-suite twin of the slow property test above, on one
+    fixed corpus."""
+    _assert_qgram_matches_exhaustive(spark, fixed_fuzzy_corpus)
+
+
+def _assert_qgram_matches_exhaustive(spark, corpus):
     """qgram_edit_pairs' count-filter bound is SOUND: over random
     small-alphabet keys, the inverted-index path must emit exactly the
     exhaustive path's pairs restricted to the guarantee domain
     max(len(a), len(b)) >= q*(k+1) — and never a pair outside the
     distance budget. Keys below the domain are excluded from the
     comparison (the operator documents them as not guaranteed)."""
-    from pyspark.sql import Row
-
     from vspace_spark.operators.dedup import (
         edit_distance_pairs,
         qgram_edit_pairs,
     )
 
     q, k = 2, 2
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(corpus)]
-    )
+    docs = _fuzzy_docs(spark, corpus)
     key = F.col("text")
     got = {
         (r.a, r.b, r.dist)
@@ -302,6 +322,57 @@ def test_qgram_pairs_match_exhaustive_in_guarantee_domain(spark, corpus):
 @given(corpus=_FUZZY_CORPUS)
 @pytest.mark.slow  # >20 s (measured r14): driver verify-window budget
 def test_passjoin_pairs_match_exhaustive_everywhere(spark, corpus):
+    _assert_passjoin_matches_exhaustive(spark, corpus)
+
+
+def test_passjoin_pairs_match_exhaustive_on_fixed_corpus(
+    spark, fixed_fuzzy_corpus
+):
+    """Default-suite twin of the slow property test above. The fixed
+    corpus reaches every lane the property test is there for: pairs of
+    two short keys (both under k+1 chars), short×long pairs, and pairs
+    whose every segment match sits on the lower or on the upper end of
+    the multi-match window, so tightening either cap by one loses them."""
+    k = 3
+    want = _assert_passjoin_matches_exhaustive(spark, fixed_fuzzy_corpus)
+    short = [len(t) < k + 1 for t in fixed_fuzzy_corpus]
+    assert any(short[a] and short[b] for a, b, _ in want)
+    assert any(short[a] != short[b] for a, b, _ in want)
+    pinned = _window_pinned_pairs(fixed_fuzzy_corpus, want, k)
+    assert pinned["lower"] and pinned["upper"], pinned
+
+
+def _window_pinned_pairs(corpus, pairs, k):
+    """The pairs of ``pairs`` that some probe orientation finds ONLY at
+    the lower (``"lower"``) or only at the upper (``"upper"``) end of
+    the Lemma-3 start-position window — a pure-Python model of the
+    probe window in ``operators/dedup.py:_segment_pairs``, over the
+    segments of an index side of at least k+1 chars."""
+    pinned = {"lower": set(), "upper": set()}
+    for a, b, _ in pairs:
+        for s, r in ((corpus[a], corpus[b]), (corpus[b], corpus[a])):
+            n, d = len(r), len(s) - len(r)
+            if n < k + 1:
+                continue
+            hits = []
+            for i in range(k + 1):
+                st = i * n // (k + 1)
+                sl = (i + 1) * n // (k + 1) - st
+                lo, hi = max(-i, d - (k - i)), min(i, d + (k - i))
+                hits += [
+                    (off, lo, hi)
+                    for off in range(lo, hi + 1)
+                    if 0 <= st + off <= len(s) - sl
+                    and s[st + off : st + off + sl] == r[st : st + sl]
+                ]
+            if hits and all(off == lo for off, lo, _ in hits):
+                pinned["lower"].add((a, b))
+            if hits and all(off == hi for off, _, hi in hits):
+                pinned["upper"].add((a, b))
+    return pinned
+
+
+def _assert_passjoin_matches_exhaustive(spark, corpus):
     """passjoin_edit_pairs is EXACT at every key length (no guarantee
     domain to restrict to): over random small-alphabet keys — the
     regime that exercises every lane (short residual, segment index,
@@ -310,17 +381,13 @@ def test_passjoin_pairs_match_exhaustive_everywhere(spark, corpus):
     is the empirical pin for the multi-match-aware substring windows
     (Li/Deng/Feng Lemma 3): any unsound tightening of the position
     window loses a pair here."""
-    from pyspark.sql import Row
-
     from vspace_spark.operators.dedup import (
         edit_distance_pairs,
         passjoin_edit_pairs,
     )
 
     k = 3
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(corpus)]
-    )
+    docs = _fuzzy_docs(spark, corpus)
     key = F.col("text")
     got = {
         (r.a, r.b, r.dist)
@@ -335,3 +402,4 @@ def test_passjoin_pairs_match_exhaustive_everywhere(spark, corpus):
         ).collect()
     }
     assert got == want, f"diff: {got ^ want}"
+    return want

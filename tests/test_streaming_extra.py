@@ -532,44 +532,74 @@ class TestIncrementalPassjoin:
         )
         return spark.createDataFrame(rows, "doc_id long, text string")
 
-    def test_matches_batch_passjoin(self, spark, tmp_path):
+    @pytest.mark.parametrize(
+        "fixed", [False, True], ids=["near_docs", "fixed_corpus"]
+    )
+    def test_matches_batch_passjoin(
+        self, spark, tmp_path, fixed_fuzzy_corpus, fixed
+    ):
         """VERDICT r9 #8: the persisted-segment-index incremental path
         must emit exactly the batch passjoin_edit_pairs set — the
         same batch-boundary-independence contract the signature index
-        has — and be replay-idempotent over the same work_dir."""
+        has — and be replay-idempotent over the same work_dir. Run on
+        the near-dup fixture in 5 batches and on the property tests'
+        fixed "abc" corpus in 3."""
         from vspace_spark.operators.dedup import passjoin_edit_pairs
         from vspace_spark.streaming.incremental import (
             incremental_passjoin_dedup,
         )
 
-        docs = self._near_docs(spark)
+        k = 3
+        if fixed:
+            docs = spark.createDataFrame(
+                list(enumerate(fixed_fuzzy_corpus)), "doc_id long, text string"
+            )
+            key_len, n_input_files = 24, 3
+        else:
+            docs, key_len, n_input_files = self._near_docs(spark), 20, 5
         work = str(tmp_path / "pj")
-        inc = incremental_passjoin_dedup(
-            spark, docs, key_len=20, max_dist=3, work_dir=work,
-            n_input_files=5,
-        )
-        got = {(r.a, r.b, r.dist) for r in inc.collect()}
+
+        def run():
+            inc = incremental_passjoin_dedup(
+                spark, docs, key_len=key_len, max_dist=k, work_dir=work,
+                n_input_files=n_input_files,
+            )
+            return {(r.a, r.b, r.dist) for r in inc.collect()}
+
+        got = run()
         want = {
             (r.a, r.b, r.dist)
             for r in passjoin_edit_pairs(
                 docs,
-                F.substring("text", 1, 20),
+                F.substring("text", 1, key_len),
                 block=[],
-                max_dist=3,
+                max_dist=k,
             ).collect()
         }
         assert got == want, got ^ want
         assert len(got) > 0
-        # cross-batch evidence: at n_input_files=5 the clone cluster
-        # 20..24 spans batches, and (40,41)/(40,42) are short-lane
         pairs = {(a, b) for a, b, _ in got}
-        assert (40, 41) in pairs and (40, 42) in pairs
-        # replay idempotency
-        again = incremental_passjoin_dedup(
-            spark, docs, key_len=20, max_dist=3, work_dir=work,
-            n_input_files=5,
-        )
-        assert {(r.a, r.b, r.dist) for r in again.collect()} == want
+        if fixed:
+            # a stored short key (< k+1 chars, no segments) pairs with a
+            # later batch's key of at most 2k chars: the cross-batch
+            # residual lane
+            stored = {
+                r._id: (len(r._k), r.batch)
+                for r in spark.read.parquet(f"{work}/keys").collect()
+            }
+            assert len({b for _, b in stored.values()}) == n_input_files
+            assert any(
+                stored[old][0] < k + 1
+                and stored[new][0] <= 2 * k
+                and stored[old][1] < stored[new][1]
+                for a, b in pairs
+                for old, new in ((a, b), (b, a))
+            ), (pairs, stored)
+        else:
+            # cross-batch evidence: at n_input_files=5 the clone cluster
+            # 20..24 spans batches, and (40,41)/(40,42) are short-lane
+            assert (40, 41) in pairs and (40, 42) in pairs
+        assert run() == want  # replay idempotency
 
 
 def test_has_earlier_needs_every_probe_dir(tmp_path):
@@ -609,8 +639,10 @@ def test_thread_target_falls_back_outside_pinned_mode(spark, monkeypatch):
 
 
 # Most Spark jobs one micro-batch of each leg may run. Under AQE every
-# query stage ran as a job of its own: 13, 11 and 17 per batch.
-_BATCH_JOB_CEILINGS = {"minhash": 3, "fold": 5, "arrow": 5, "passjoin": 11}
+# query stage ran as a job of its own: 13, 11 and 17 per batch. PassJoin
+# ran 11 until one probe of new and stored segments replaced its
+# self-join, cross-batch probe and cross-batch residual.
+_BATCH_JOB_CEILINGS = {"minhash": 3, "fold": 5, "arrow": 5, "passjoin": 6}
 
 
 def test_replay_batches_run_few_jobs_and_leave_caller_aqe_on(
@@ -619,7 +651,7 @@ def test_replay_batches_run_few_jobs_and_leave_caller_aqe_on(
     """Every leg plans its micro-batches without AQE, on the stream's
     own session: ``progress_out`` records at most 3 Spark jobs per
     MinHash batch, 5 per embedding batch (both ``sig_engine`` values)
-    and 11 per PassJoin batch. The first probing batch records its
+    and 6 per PassJoin batch. The first probing batch records its
     pairs plan: the MinHash postings are joined as the aggregate left
     them, the embedding postings are spread round-robin first. The
     caller's session keeps AQE on throughout."""

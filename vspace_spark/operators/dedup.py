@@ -15,6 +15,8 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections.abc import Callable
 from typing import NamedTuple
 
@@ -907,6 +909,19 @@ def simhash_near_pairs_portable(
     )
 
 
+def _nonzero_norm(vec: F.Column) -> F.Column:
+    """Σx² > 0 over ``vec``, FALSE (never NULL) for a NULL vector or
+    element: the collapse domain of the embedding dedups. A zero or
+    NULL vector's cosine is NaN or NULL, so it never pairs, and
+    collapsing such vectors would drop clones."""
+    sq = F.aggregate(
+        F.transform(vec, lambda x: x.cast("double") * x),
+        F.lit(0.0),
+        lambda a, b: a + b,
+    )
+    return F.coalesce(sq > 0, F.lit(False))
+
+
 def embedding_near_pairs(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -936,18 +951,8 @@ def embedding_near_pairs(
         and threshold < 0.999
         and not _clone_light(embeddings, F.col(vec_col))
     ):
-        nonzero = (
-            F.aggregate(
-                F.transform(
-                    F.col(vec_col), lambda x: x.cast("double") * x
-                ),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            )
-            > 0
-        )
         canon_vecs, members = _collapse_by_key(
-            embeddings.filter(nonzero),
+            embeddings.filter(_nonzero_norm(F.col(vec_col))),
             id_col,
             [vec_col],
             F.md5(F.to_json(F.struct(F.col(vec_col)))),
@@ -1140,20 +1145,10 @@ def semantic_dedup(
         and threshold < 0.999
         and not _clone_light(embeddings, F.col(vec_col))
     ):
-        # strictly-positive norm, non-null — zero/NULL vectors pass
-        # through the core uncollapsed (their cosine is NULL, so they
-        # never pair; collapsing them would wrongly drop clones)
-        nz = F.coalesce(
-            F.aggregate(
-                F.transform(
-                    F.col(vec_col), lambda x: x.cast("double") * x
-                ),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            )
-            > 0,
-            F.lit(False),
-        )
+        # zero/NULL vectors pass through the core uncollapsed (their
+        # cosine is NULL, so they never pair; collapsing them would
+        # wrongly drop clones)
+        nz = _nonzero_norm(F.col(vec_col))
         canon_vecs, members = _collapse_by_key(
             embeddings.filter(nz),
             id_col,
@@ -1282,6 +1277,107 @@ def semantic_dedup(
     )
 
 
+def _edit_pairs(
+    docs: DataFrame,
+    key,
+    id_col: str,
+    block: list,
+    collapse_exact: bool,
+    raw: Callable[[DataFrame], DataFrame],
+    min_len: int | None = None,
+) -> DataFrame:
+    """The prologue every edit-distance generator shares: key the rows
+    as ``[_id, *block, _k]``, keep the keys of at least ``min_len``
+    chars when it is given and return ``raw(keyed)``'s ``[a, b, dist]``
+    pairs. NULL keys never pair: the raw lanes' length predicates drop
+    them, and so does the collapse's join on md5(key).
+
+    ``collapse_exact`` (probe-gated like the family): rows with
+    identical keys collapse per (block, md5(key)) before ``raw`` runs
+    and expand back output-identically — cross-group pairs inherit
+    their canonicals' distance (identical keys ⇒ identical DP),
+    intra-group pairs are exactly 0 ≤ any budget. A clone group of k
+    costs k² only in output rows, never in DP evaluations — without it
+    the 100×-replica corpus (99 verbatim clones per doc) runs 100² DPs
+    per base pair. Both paths see the same ``min_len`` domain, so the
+    output never depends on the probe's verdict."""
+    key = F.col(key) if isinstance(key, str) else key
+    keyed = docs.select(F.col(id_col).alias("_id"), *block, key.alias("_k"))
+    if min_len is not None:
+        keyed = keyed.filter(F.length("_k") >= min_len)
+    if not collapse_exact or _clone_light(docs, key):
+        return raw(keyed)
+    canon, members = _collapse_by_key(
+        keyed, "_id", ["_k"], F.md5(F.col("_k")), block=block
+    )
+    return _expand_pairs(raw(canon), members, {"dist": F.lit(0)})
+
+
+def _band_join(block: list, k: int, cond: F.Column):
+    """``join(left, right)``: the rows of ``left`` × ``right`` (both
+    ``[_id, *block, _k]``) in one block that satisfy ``cond`` and whose
+    key lengths differ by at most ``k`` — a sound lower bound on edit
+    distance, so rows outside the band never reach a DP. Columns
+    ``[*block, a, _ka, *_r_<block>, b, _kb]``: left's id and key, then
+    right's. Builds its Columns once."""
+    left_cols = [*block, F.col("_id").alias("a"), F.col("_k").alias("_ka")]
+    right_cols = [
+        *[F.col(c).alias(f"_r_{c}") for c in block],
+        F.col("_id").alias("b"),
+        F.col("_k").alias("_kb"),
+    ]
+    on = functools.reduce(
+        operator.and_,
+        [F.col(c) == F.col(f"_r_{c}") for c in block],
+        cond & (F.abs(F.length("_ka") - F.length("_kb")) <= k),
+    )
+
+    def join(left: DataFrame, right: DataFrame) -> DataFrame:
+        return left.select(*left_cols).join(right.select(*right_cols), on)
+
+    return join
+
+
+def _verify(k: int):
+    """``verify(cand, keys)``: the candidate pairs ``[a, _ka, b]``
+    (``a``'s key ``_ka`` carried along) whose keys lie within ``k``
+    edits, as ``[a, b, dist]`` — ``b``'s key looked up in ``keys``
+    (``[_id, _k]``-keyed), scored by the banded JVM
+    ``levenshtein(_ka, _kb, k)`` (O(k·n) per pair, -1 past k). Builds
+    its Columns once."""
+    kb = [F.col("_id").alias("b"), F.col("_k").alias("_kb")]
+    scored = [
+        F.col("a"), F.col("b"), F.levenshtein("_ka", "_kb", k).alias("dist")
+    ]
+    within = F.col("dist") >= 0
+
+    def verify(cand: DataFrame, keys: DataFrame) -> DataFrame:
+        return cand.join(keys.select(*kb), "b").select(*scored).filter(within)
+
+    return verify
+
+
+def _grams(keyed: DataFrame, q: int, *keep: str) -> DataFrame:
+    """The positional q-grams of ``keyed``'s keys ``_k`` (each at
+    least q chars), one row per (key, position): ``[*keep, _len, _pos,
+    _gram]``."""
+    return keyed.select(
+        *keep,
+        F.length("_k").alias("_len"),
+        F.explode(
+            F.expr(
+                f"transform(sequence(1, length(_k) - {q} + 1), "
+                f"i -> struct(i AS pos, substring(_k, i, {q}) AS gram))"
+            )
+        ).alias("_g"),
+    ).select(
+        *keep,
+        "_len",
+        F.col("_g.pos").alias("_pos"),
+        F.col("_g.gram").alias("_gram"),
+    )
+
+
 def edit_distance_pairs(
     docs: DataFrame,
     key: F.Column,
@@ -1291,67 +1387,31 @@ def edit_distance_pairs(
     collapse_exact: bool = True,
 ) -> DataFrame:
     """Fuzzy (edit-distance) near-pairs — the entity-resolution
-    primitive: pairs within a blocking key whose ``key`` expressions
-    are within ``max_dist`` Levenshtein edits. Candidate bounding is
-    layered: (1) the block equi-join (never O(N²) across blocks);
-    (2) a length-band prune ``|len(a)−len(b)| ≤ max_dist`` — a sound
-    lower bound on edit distance — evaluated BEFORE the DP so joined
-    rows outside the band never run it; (3) the engine computes the
-    banded DP via ``levenshtein(l, r, threshold)`` (O(k·n) per pair,
-    -1 when exceeded) instead of the full O(n²) matrix. At production
-    scale the blocking key is an upstream LSH/MinHash bucket or qgram
-    signature (this module), with this operator as the verify stage.
-
-    ``collapse_exact`` (default, probe-gated like the family): rows
-    with identical ``key`` values collapse per (block, md5(key))
-    before the self-join and expand back output-identically —
-    cross-group pairs inherit their canonicals' distance (identical
-    keys ⇒ identical DP), intra-group pairs are exactly 0 ≤ any
-    budget. A clone group of k costs k² only in output rows, never
-    in DP evaluations — without it the 100×-replica corpus (99
-    verbatim clones per doc) runs 100² DPs per base pair.
+    primitive and the exhaustive DEFINITION the faster generators
+    (:func:`qgram_edit_pairs`, :func:`passjoin_edit_pairs`) are pinned
+    to by the property tests: pairs within a blocking key whose
+    ``key`` expressions are within ``max_dist`` Levenshtein edits.
+    Candidate bounding is layered: (1) the block equi-join (never
+    O(N²) across blocks); (2) the length-band prune
+    ``|len(a)−len(b)| ≤ max_dist`` (:func:`_band_join`); (3) the
+    engine's banded DP ``levenshtein(l, r, threshold)`` (O(k·n) per
+    pair, -1 when exceeded) instead of the full O(n²) matrix. At
+    production scale the blocking key is an upstream LSH/MinHash
+    bucket or qgram signature (this module), with this operator as the
+    verify stage. ``collapse_exact``: see :func:`_edit_pairs`.
 
     Returns ``[a, b, dist]``, a < b, dist ≤ max_dist.
     """
-    if collapse_exact and not _clone_light(docs, key):
-        with_key = docs.select(
-            F.col(id_col), *block, key.alias("_ckey")
-        )
-        canon_docs, members = _collapse_by_key(
-            with_key, id_col, ["_ckey"], F.md5(F.col("_ckey")),
-            block=list(block),
-        )
-        raw = edit_distance_pairs(
-            canon_docs,
-            F.col("_ckey"),
-            id_col=id_col,
-            block=list(block),
-            max_dist=max_dist,
-            collapse_exact=False,
-        )
-        return _expand_pairs(raw, members, {"dist": F.lit(0)})
-    keyed = docs.select(
-        F.col(id_col).alias("_id"), *block, key.alias("_k")
-    )
-    left = keyed.select(
-        *block, F.col("_id").alias("a"), F.col("_k").alias("_ka")
-    )
-    right = keyed.select(
-        *[F.col(c).alias(f"_r_{c}") for c in block],
-        F.col("_id").alias("b"),
-        F.col("_k").alias("_kb"),
-    )
-    cond = (F.col("a") < F.col("b")) & (
-        F.abs(F.length("_ka") - F.length("_kb")) <= max_dist
-    )
-    for c in block:
-        cond = cond & (F.col(c) == F.col(f"_r_{c}"))
-    dist = F.levenshtein("_ka", "_kb", max_dist)
-    return (
-        left.join(right, cond)
-        .select("a", "b", dist.alias("dist"))
-        .filter(F.col("dist") >= 0)  # threshold form returns -1 past k
-    )
+    block = list(block)
+    join = _band_join(block, max_dist, F.col("a") < F.col("b"))
+    dist = F.levenshtein("_ka", "_kb", max_dist).alias("dist")
+
+    def raw(keyed: DataFrame) -> DataFrame:
+        # the threshold form returns -1 past max_dist
+        pairs = join(keyed, keyed).select("a", "b", dist)
+        return pairs.filter(F.col("dist") >= 0)
+
+    return _edit_pairs(docs, key, id_col, block, collapse_exact, raw)
 
 
 def qgram_edit_pairs(
@@ -1394,385 +1454,260 @@ def qgram_edit_pairs(
     (shared prefixes) inflate candidates but the count threshold (e.g.
     21 of 30 grams for 32-char keys at q=3, k=3) prunes to near-dups
     before any DP runs, and AQE handles residual bucket skew. The
-    exact-collapse prepass (probe-gated, identity-tested like the
-    family) absorbs verbatim clone groups first.
+    exact-collapse prepass (:func:`_edit_pairs`) absorbs verbatim
+    clone groups first; keys shorter than q are dropped on both paths.
 
     ``hot_gram_cap`` — RECALL-SAFE skew guard for Zipfian gram
     frequencies (real text: a handful of grams cover a large key
     fraction and their (block, gram) buckets go occupancy²). When
     set, grams whose per-(block, gram) row occupancy exceeds the cap
     are dropped from the inverted index, and the keys CONTAINING an
-    over-cap gram ("hot keys") are additionally paired through the
-    same banded-levenshtein exhaustive self-join
-    :func:`edit_distance_pairs` uses, restricted to hot×hot within
-    the block. Soundness (unlike naive gram dropping, which lowers
-    match counts below the count-filter bound): a cold key by
-    definition contains only under-cap grams, so for any pair with at
-    least one cold member EVERY matching gram occurs in the cold key
-    and is therefore under-cap — the restricted index computes that
-    pair's match count EXACTLY, and the bound applies unchanged. The
-    only pairs whose count could be undercounted are hot×hot, and
-    those are produced (exclusively — the index path filters them
-    out, so the union is disjoint) by the exhaustive hot lane, which
-    needs no count bound at all. Cost: one extra map-side-combined
-    occupancy agg + |H|² banded DPs, with |H| controlled by the cap;
-    the index join's worst bucket drops from occ(hottest gram)² to
-    cap², and hot×hot pairing is a PassJoin-style segment equi-join
-    (:func:`_hot_pairs_segment`), not a nested loop. WHEN TO ENABLE
-    (measured, PERF.md round 8): with the segment hot lane the guard
-    wins BOTH measured skew regimes — 1.5× at H=25%/8 hot grams
-    (boilerplate) and 2.1–2.5× in the language-core Zipf regime
-    (×100–556 join-work reduction; at cluster scale the unguarded hot
-    bucket is additionally a single-straggler shuffle partition). It
-    stays opt-in because on flat-occupancy corpora (no over-cap
-    grams) the occupancy agg is pure overhead; probe first — one
-    occupancy agg gives work_all/work_capped
-    (scripts/qgram_skew_bench.py prints it) — and enable when over-cap
-    buckets exist. Use small k (probe fan-out is (2k+1)²·(k+1) per
-    hot key). Planted-skew identity test: tests/test_dedup.py;
-    measured numbers: PERF.md round 8.
+    over-cap gram ("hot keys") are additionally paired hot×hot within
+    the block by the PassJoin segment lane (:func:`_segment_pairs`),
+    which needs no count bound at all. Soundness (unlike naive gram
+    dropping, which lowers match counts below the count-filter
+    bound): a cold key by definition contains only under-cap grams,
+    so for any pair with at least one cold member EVERY matching gram
+    occurs in the cold key and is therefore under-cap — the restricted
+    index computes that pair's match count EXACTLY, and the bound
+    applies unchanged. The only pairs whose count could be
+    undercounted are hot×hot, and those are produced exclusively by
+    the segment lane (the index path filters them out, so the union
+    is disjoint). Cost: one extra map-side-combined occupancy agg plus
+    the segment lane over |H| hot keys, with |H| controlled by the
+    cap; the index join's worst bucket drops from occ(hottest gram)²
+    to cap². WHEN TO ENABLE (measured, PERF.md round 8): with the
+    segment hot lane the guard wins BOTH measured skew regimes — 1.5×
+    at H=25%/8 hot grams (boilerplate) and 2.1–2.5× in the
+    language-core Zipf regime (×100–556 join-work reduction; at
+    cluster scale the unguarded hot bucket is additionally a
+    single-straggler shuffle partition). It stays opt-in because on
+    flat-occupancy corpora (no over-cap grams) the occupancy agg is
+    pure overhead; probe first — one occupancy agg gives
+    work_all/work_capped (scripts/qgram_skew_bench.py prints it) — and
+    enable when over-cap buckets exist. Use small k (the segment probe
+    emits O(k²) substring rows per hot key). Planted-skew identity
+    test: tests/test_dedup.py; measured numbers: PERF.md round 8.
 
     Returns ``[a, b, dist]``, a < b, dist ≤ max_dist.
     """
-    if collapse_exact and not _clone_light(docs, key):
-        # Same domain as the raw path's length(_k) >= q filter below:
-        # without it, sub-q-length clone groups would emit intra-group
-        # dist-0 pairs via _expand_pairs that the raw path (which drops
-        # those docs entirely — they have no q-grams) never produces,
-        # making output depend on the _clone_light probe verdict.
-        with_key = docs.select(
-            F.col(id_col), *block, key.alias("_ckey")
-        ).filter(F.length("_ckey") >= q)
-        canon_docs, members = _collapse_by_key(
-            with_key, id_col, ["_ckey"], F.md5(F.col("_ckey")),
-            block=list(block),
-        )
-        raw = qgram_edit_pairs(
-            canon_docs,
-            F.col("_ckey"),
-            id_col=id_col,
-            block=list(block),
-            q=q,
-            max_dist=max_dist,
-            collapse_exact=False,
-            hot_gram_cap=hot_gram_cap,
-        )
-        return _expand_pairs(raw, members, {"dist": F.lit(0)})
     k = max_dist
-    keyed = docs.select(
-        F.col(id_col).alias("_id"), *block, key.alias("_k")
-    ).filter(F.length("_k") >= q)
-    grams = keyed.select(
-        "_id",
-        *block,
-        F.length("_k").alias("_len"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, length(_k) - {q} + 1), "
-                f"i -> struct(i AS pos, substring(_k, i, {q}) AS gram))"
+    block = list(block)
+    verify = _verify(k)
+    ka = [F.col("_id").alias("a"), F.col("_k").alias("_ka")]
+
+    def raw(keyed: DataFrame) -> DataFrame:
+        grams = _grams(keyed, q, "_id", *block)
+        if hot_gram_cap is not None:
+            occ = grams.groupBy(*block, "_gram").agg(
+                F.count(F.lit(1)).alias("_occ")
             )
-        ).alias("_g"),
-    ).select(
-        "_id",
-        *block,
-        "_len",
-        F.col("_g.pos").alias("_pos"),
-        F.col("_g.gram").alias("_gram"),
-    )
-    hot_ids = None
-    if hot_gram_cap is not None:
-        occ = grams.groupBy(*block, "_gram").agg(
-            F.count(F.lit(1)).alias("_occ")
+            marked = grams.join(occ, [*block, "_gram"])
+            hot_ids = (
+                marked.filter(F.col("_occ") > hot_gram_cap)
+                .select("_id")
+                .distinct()
+            )
+            grams = marked.filter(F.col("_occ") <= hot_gram_cap).drop("_occ")
+        left = grams.select(
+            *block,
+            F.col("_id").alias("a"),
+            F.col("_len").alias("_la"),
+            F.col("_pos").alias("_pa"),
+            "_gram",
         )
-        marked = grams.join(occ, [*block, "_gram"])
-        hot_ids = (
-            marked.filter(F.col("_occ") > hot_gram_cap)
-            .select("_id")
-            .distinct()
+        right = grams.select(
+            *[F.col(c).alias(f"_r_{c}") for c in block],
+            F.col("_id").alias("b"),
+            F.col("_len").alias("_lb"),
+            F.col("_pos").alias("_pb"),
+            F.col("_gram").alias("_gramr"),
         )
-        grams = marked.filter(F.col("_occ") <= hot_gram_cap).drop("_occ")
-    left = grams.select(
-        *block,
-        F.col("_id").alias("a"),
-        F.col("_len").alias("_la"),
-        F.col("_pos").alias("_pa"),
-        "_gram",
-    )
-    right = grams.select(
-        *[F.col(c).alias(f"_r_{c}") for c in block],
-        F.col("_id").alias("b"),
-        F.col("_len").alias("_lb"),
-        F.col("_pos").alias("_pb"),
-        F.col("_gram").alias("_gramr"),
-    )
-    cond = (
-        (F.col("_gram") == F.col("_gramr"))
-        & (F.col("a") < F.col("b"))
-        & (F.abs(F.col("_pa") - F.col("_pb")) <= k)
-        & (F.abs(F.col("_la") - F.col("_lb")) <= k)
-    )
-    for c in block:
-        cond = cond & (F.col(c) == F.col(f"_r_{c}"))
-    cand = (
-        left.join(right, cond)
-        .groupBy("a", "b")
-        .agg(
-            F.count(F.lit(1)).alias("_m"),
-            F.first("_la").alias("_la"),
-            F.first("_lb").alias("_lb"),
+        cond = functools.reduce(
+            operator.and_,
+            [F.col(c) == F.col(f"_r_{c}") for c in block],
+            (F.col("_gram") == F.col("_gramr"))
+            & (F.col("a") < F.col("b"))
+            & (F.abs(F.col("_pa") - F.col("_pb")) <= k)
+            & (F.abs(F.col("_la") - F.col("_lb")) <= k),
         )
-        .filter(
-            F.col("_m")
-            >= F.greatest("_la", "_lb") - F.lit(q - 1) - F.lit(k * q)
-        )
-    )
-    if hot_ids is not None:
-        # hot×hot pairs belong to the exhaustive lane exclusively —
-        # filter them from the index path so the union is disjoint
-        # (an undercounted hot×hot candidate may or may not survive
-        # the count filter; either way it must not double-emit)
         cand = (
-            cand.join(
-                hot_ids.select(
-                    F.col("_id").alias("a"), F.lit(True).alias("_hota")
-                ),
-                "a",
-                "left",
-            )
-            .join(
-                hot_ids.select(
-                    F.col("_id").alias("b"), F.lit(True).alias("_hotb")
-                ),
-                "b",
-                "left",
+            left.join(right, cond)
+            .groupBy("a", "b")
+            .agg(
+                F.count(F.lit(1)).alias("_m"),
+                F.first("_la").alias("_la"),
+                F.first("_lb").alias("_lb"),
             )
             .filter(
-                ~(
-                    F.coalesce("_hota", F.lit(False))
-                    & F.coalesce("_hotb", F.lit(False))
-                )
+                F.col("_m")
+                >= F.greatest("_la", "_lb") - F.lit(q - 1) - F.lit(k * q)
             )
-            .drop("_hota", "_hotb")
         )
-    ka = keyed.select(F.col("_id").alias("a"), F.col("_k").alias("_ka"))
-    kb = keyed.select(F.col("_id").alias("b"), F.col("_k").alias("_kb"))
-    dist = F.levenshtein("_ka", "_kb", k)
-    verified = (
-        cand.join(ka, "a")
-        .join(kb, "b")
-        .select("a", "b", dist.alias("dist"))
-        .filter(F.col("dist") >= 0)  # threshold form returns -1 past k
+        if hot_gram_cap is not None:
+            # hot×hot pairs belong to the segment lane exclusively:
+            # filter them from the index path so the union is disjoint
+            # (an undercounted hot×hot candidate may or may not survive
+            # the count filter; either way it must not double-emit)
+            for side in ("a", "b"):
+                flag = hot_ids.select(
+                    F.col("_id").alias(side), F.lit(True).alias(f"_hot_{side}")
+                )
+                cand = cand.join(flag, side, "left")
+            cand = cand.filter(
+                F.col("_hot_a").isNull() | F.col("_hot_b").isNull()
+            )
+        verified = verify(cand.join(keyed.select(*ka), "a"), keyed)
+        if hot_gram_cap is None:
+            return verified
+        hot_keyed = keyed.join(hot_ids, "_id")
+        index_rows, pairs = _segment_pairs(block, k)
+        return verified.unionByName(
+            pairs(hot_keyed, index_rows(hot_keyed), hot_keyed)
+        )
+
+    return _edit_pairs(
+        docs, key, id_col, block, collapse_exact, raw, min_len=q
     )
-    if hot_ids is None:
-        return verified
-    hot_keyed = keyed.join(hot_ids, "_id")
-    hot_pairs = _hot_pairs_segment(hot_keyed, list(block), k)
-    return verified.unionByName(hot_pairs)
 
 
-def _hot_pairs_segment(
-    hot_keyed: DataFrame, block: list, k: int
-) -> DataFrame:
-    """All pairs of ``hot_keyed`` rows (``[_id, *block, _k]``) within
-    Levenshtein distance ``k`` inside a block — the hot lane of
-    :func:`qgram_edit_pairs`'s guard, as a PassJoin-style SEGMENT
-    equi-join (Li, Deng, Feng, ICDE 2011) instead of the nested-loop
-    self-join a no-block theta join degenerates to.
+def _segment_pairs(block: list, k: int):
+    """PassJoin (Li, Deng, Feng, ICDE 2011) over keys ``[_id, *block,
+    _k]`` within ``k`` edits: returns ``(index_rows, pairs)``, with
+    every Column built here, once. The one place that knows how
+    PassJoin pairs are generated: batch :func:`passjoin_edit_pairs`,
+    :func:`qgram_edit_pairs`' hot lane and the incremental PassJoin leg
+    (streaming/incremental.py) all call it.
 
-    Pigeonhole lemma: partition a key r (length L ≥ k+1) evenly into
-    k+1 segments; ≤ k edits leave at least one segment untouched, and
-    the untouched segment appears verbatim in the partner s shifted by
-    the net insertions/deletions before it — at most ±k. So: index
-    every long-enough hot key's k+1 segments under
-    (block, L, segment#, content); probe every hot key with its
-    substrings of the matching segment length at start positions
-    within ±k of the segment's home position, for every candidate
-    partner length Lr in [|s|−k, |s|+k] with Lr ≥ k+1 — every
-    equi-key, so Catalyst plans a hash join. Candidates are a
-    superset of true pairs (both orientations arrive; normalized
-    a<b + distinct), then the banded ``levenshtein(a, b, k)``
-    verifies. Pairs where BOTH sides are shorter than k+1 (segments
-    would be empty — the lemma gives no pruning) go through a
-    residual banded self-join restricted to those keys; a short×long
-    pair is still found through the long side's segment index, so the
-    lanes partition exactly. Probe fan-out is ≤ (2k+1)²·(k+1)
-    substring rows per key — use the guard at small k (the measured
-    regimes run k ≤ 4); segments of length L/(k+1) are far more
-    selective index keys than q-grams, which is the point.
+    ``index_rows(keyed)``: the SEGMENT INDEX. Each key of length L ≥
+    k+1 contributes its k+1 even segments as ``[*_r_<block>, _rid,
+    _rlen, _ri, _seg]``. Pure column expressions, so the rows can be
+    persisted: write them once, probe them many times.
+
+    ``pairs(probe, index, keys)``: every pair of a ``probe`` key and a
+    ``keys`` key within ``k`` edits in one block, as ``[a, b, dist]``,
+    a < b, each pair once; ``index`` holds ``keys``' index rows. A
+    self-join passes one key set as all three. Three steps:
+
+    1. Candidates. Pigeonhole: ≤ k edits leave at least one of the k+1
+       segments of r untouched, and it appears verbatim in s shifted
+       by the net insertions/deletions before it. So each probe key s
+       is cut, for every partner length Lr in [|s|−k, |s|+k] with Lr ≥
+       k+1 and every segment#, into the substrings of the Lemma-3
+       window, and equi-joined to the index on (block, length,
+       segment#, content) — a hash join, not the nested loop a
+       no-block theta join degenerates to. A partner shorter than k+1
+       has no segments (the lemma gives no pruning there); by the
+       length band its probe key is at most 2k chars, so a residual
+       banded join of those probe keys against the short ``keys``
+       covers it. One-directional PassJoin is complete, so this finds
+       every qualifying partner of every probe key.
+    2. Verify once: the probe side's key rides along with its
+       candidates and the index side's is looked up in ``keys`` (the
+       one ``keys``-sized join), scored by the banded
+       ``levenshtein(a, b, k)``.
+    3. Orient each pair to least/greatest and drop duplicates: a pair
+       of two probe keys arrives from both sides.
+
+    Probe fan-out is O(k²) substring rows per key (the Lemma-3 window,
+    against (2k+1)²·(k+1) for a naive ±k one — use small k, the
+    measured regimes run k ≤ 4); segments of length L/(k+1) are far
+    more selective index keys than q-grams, which is the point.
     """
-    idx = _segment_index_rows(hot_keyed, block, k)
-    probe = _segment_probe_rows(hot_keyed, block, k)
-    jcond = (
-        (F.col("_Lr") == F.col("_rlen"))
-        & (probe._i == idx._i)
-        & (F.col("_sub") == F.col("_seg"))
-        & (F.col("_pid") != F.col("_rid"))
-    )
-    for c in block:
-        jcond = jcond & (F.col(c) == F.col(f"_r_{c}"))
-    cand = (
-        probe.join(idx, jcond)
-        .select(
-            F.least("_pid", "_rid").alias("a"),
-            F.greatest("_pid", "_rid").alias("b"),
-        )
-        .distinct()
-    )
-    ka = hot_keyed.select(F.col("_id").alias("a"), F.col("_k").alias("_ka"))
-    kb = hot_keyed.select(F.col("_id").alias("b"), F.col("_k").alias("_kb"))
-    dist = F.levenshtein("_ka", "_kb", k)
-    seg_pairs = (
-        cand.join(ka, "a")
-        .join(kb, "b")
-        .select("a", "b", dist.alias("dist"))
-        .filter(F.col("dist") >= 0)
-    )
-    # residual: both sides shorter than k+1 — the lemma is vacuous
-    # there (empty segments), and the segment lane never probes
-    # target lengths below k+1, so short×short pairs are exactly the
-    # uncovered set (short×long still routes through the long side's
-    # index). Banded self-join over this tiny slice only.
     seg_cnt = k + 1
-    short_h = hot_keyed.filter(F.length("_k") < seg_cnt)
-    left_s = short_h.select(
-        *block, F.col("_id").alias("a"), F.col("_k").alias("_ka")
-    )
-    right_s = short_h.select(
+    n, ri, i, lr = F.length("_k"), F.col("_ri"), F.col("_i"), F.col("_Lr")
+
+    def segment(j: F.Column, length: F.Column):
+        """1-based start and length of segment ``j`` of a key of
+        ``length`` chars."""
+        st = F.floor(j * length / seg_cnt)
+        end = F.floor((j + 1) * length / seg_cnt)
+        return (st + 1).cast("int"), (end - st).cast("int")
+
+    segment_nos = F.explode(F.sequence(F.lit(0), F.lit(k)))
+    index_ri = segment_nos.alias("_ri")
+    index_cols = [
         *[F.col(c).alias(f"_r_{c}") for c in block],
-        F.col("_id").alias("b"),
-        F.col("_k").alias("_kb"),
+        F.col("_id").alias("_rid"),
+        n.alias("_rlen"),
+        ri,
+        F.substring("_k", *segment(ri, n)).alias("_seg"),
+    ]
+    probe_lr = F.explode(
+        F.when(
+            n + k >= seg_cnt,
+            F.sequence(F.greatest(F.lit(seg_cnt), n - k), n + k),
+        )
+    ).alias("_Lr")
+    probe_i = segment_nos.alias("_i")
+    # multi-match-aware substring selection (Li/Deng/Feng ICDE 2011,
+    # Lemma 3 — VERDICT r8 #8): the start-position window for segment
+    # i against a probe of length |s| is
+    #   p − st ∈ [max(−i, Δ − (k−i)), min(i, Δ + (k−i))],
+    # Δ = |s| − Lr (0-indexed i), instead of the naive ±k. The
+    # left/right caps encode that if segment i is the FIRST (resp.
+    # LAST) untouched segment, at least i edits precede (resp. k−i
+    # follow) it; the paper proves the windows stay COLLECTIVELY
+    # complete — a pair missed at one (i, p) is guaranteed a match
+    # inside another segment's window. Measured 3.5× row reduction at
+    # k=3 on 16-char keys: 153 → 44 probe rows/key (PERF.md r9);
+    # completeness pinned by the exhaustive-identity fixture and the
+    # property tests.
+    st, sl = segment(i, lr)
+    shift = n - lr
+    lo = F.greatest(F.lit(1), st + F.greatest(-i, shift - (k - i)))
+    hi = F.least(n - sl + 1, st + F.least(i, shift + (k - i)))
+    probe_p = F.explode(F.when(hi >= lo, F.sequence(lo, hi))).alias("_p")
+    probe_cols = [
+        *block,
+        F.col("_id").alias("_pid"),
+        F.col("_k").alias("_ka"),
+        lr,
+        i,
+        F.substring("_k", F.col("_p"), sl).alias("_sub"),
+    ]
+    on = functools.reduce(
+        operator.and_,
+        [F.col(c) == F.col(f"_r_{c}") for c in block],
+        (lr == F.col("_rlen"))
+        & (i == ri)
+        & (F.col("_sub") == F.col("_seg"))
+        & (F.col("_pid") != F.col("_rid")),
     )
-    scond = (F.col("a") < F.col("b")) & (
-        F.abs(F.length("_ka") - F.length("_kb")) <= k
-    )
-    for c in block:
-        scond = scond & (F.col(c) == F.col(f"_r_{c}"))
-    short_pairs = (
-        left_s.join(right_s, scond)
-        .select("a", "b", dist.alias("dist"))
-        .filter(F.col("dist") >= 0)
-    )
-    return seg_pairs.unionByName(short_pairs)
+    seg_cand = [
+        F.col("_pid").alias("a"), F.col("_ka"), F.col("_rid").alias("b")
+    ]
+    short_cand = [F.col("a"), F.col("_ka"), F.col("b")]
+    residual = _band_join(block, k, F.col("a") != F.col("b"))
+    probe_short, index_short = n <= 2 * k, n < seg_cnt
+    verify = _verify(k)
+    oriented = [
+        F.least("a", "b").alias("a"),
+        F.greatest("a", "b").alias("b"),
+        F.col("dist"),
+    ]
 
+    def index_rows(keyed: DataFrame) -> DataFrame:
+        long_keys = keyed.filter(n >= seg_cnt)
+        return long_keys.select("*", index_ri).select(*index_cols)
 
-def _segment_index_rows(
-    keyed: DataFrame, block: list, k: int
-) -> DataFrame:
-    """PassJoin SEGMENT INDEX rows for keys ``[_id, *block, _k]``:
-    each long-enough key (length ≥ k+1) contributes its k+1 even
-    segments as ``[*_r_<block>, _rid, _rlen, _i, _seg]``. Pure column
-    expressions — reusable as a PERSISTED artifact (VERDICT r9 #8):
-    write these rows once, probe many (see
-    streaming/incremental.py:incremental_passjoin_dedup)."""
-    seg_cnt = k + 1
-    long_h = keyed.filter(F.length("_k") >= seg_cnt)
-    return (
-        long_h.withColumn("_i", F.explode(F.sequence(F.lit(0), F.lit(k))))
-        .select(
-            *[F.col(c).alias(f"_r_{c}") for c in block],
-            F.col("_id").alias("_rid"),
-            F.length("_k").alias("_rlen"),
-            "_i",
-            F.expr(
-                f"substr(_k, CAST(floor(_i * length(_k) / {seg_cnt}) AS INT)"
-                f" + 1, CAST(floor((_i + 1) * length(_k) / {seg_cnt}) AS INT)"
-                f" - CAST(floor(_i * length(_k) / {seg_cnt}) AS INT))"
-            ).alias("_seg"),
+    def pairs(probe: DataFrame, index: DataFrame, keys: DataFrame):
+        subs = (
+            probe.select("*", probe_lr)
+            .select("*", probe_i)
+            .select("*", probe_p)
+            .select(*probe_cols)
         )
-        .filter(F.length("_seg") >= 1)
-    )
+        short = residual(probe.filter(probe_short), keys.filter(index_short))
+        cand = (
+            subs.join(index, on)
+            .select(*seg_cand)
+            .unionByName(short.select(*short_cand))
+            .distinct()
+        )
+        return verify(cand, keys).select(*oriented).distinct()
 
-
-def _segment_probe_rows(
-    keyed: DataFrame, block: list, k: int
-) -> DataFrame:
-    """PassJoin PROBE rows for keys ``[_id, *block, _k]``: for every
-    candidate partner length Lr in [|s|−k, |s|+k] (Lr ≥ k+1) and
-    every segment#, the Lemma-3 multi-match window's substrings —
-    ``[*block, _pid, _Lr, _i, _sub]``. Joins
-    :func:`_segment_index_rows` output on the all-equi key
-    (block, _Lr=_rlen, _i, _sub=_seg)."""
-    seg_cnt = k + 1
-    return (
-        keyed.withColumn(
-            "_Lr",
-            F.explode(
-                F.when(
-                    F.length("_k") + k >= seg_cnt,
-                    F.sequence(
-                        F.greatest(
-                            F.lit(seg_cnt), F.length("_k") - F.lit(k)
-                        ),
-                        F.length("_k") + F.lit(k),
-                    ),
-                )
-            ),
-        )
-        .withColumn("_i", F.explode(F.sequence(F.lit(0), F.lit(k))))
-        .withColumn(
-            "_st",
-            (F.floor(F.col("_i") * F.col("_Lr") / seg_cnt) + 1).cast("int"),
-        )
-        .withColumn(
-            "_sl",
-            (
-                F.floor((F.col("_i") + 1) * F.col("_Lr") / seg_cnt)
-                - F.floor(F.col("_i") * F.col("_Lr") / seg_cnt)
-            ).cast("int"),
-        )
-        .filter(F.col("_sl") >= 1)
-        # multi-match-aware substring selection (Li/Deng/Feng ICDE
-        # 2011, Lemma 3 — VERDICT r8 #8): the start-position window
-        # for segment i against a probe of length |s| is
-        #   p − st ∈ [max(−i, Δ − (k−i)), min(i, Δ + (k−i))],
-        # Δ = |s| − Lr (0-indexed i), instead of the naive ±k. The
-        # left/right caps encode that if segment i is the FIRST
-        # (resp. LAST) untouched segment, at least i edits precede
-        # (resp. k−i follow) it; the paper proves the windows stay
-        # COLLECTIVELY complete — a pair missed at one (i, p) is
-        # guaranteed a match inside another segment's window. Shrinks
-        # probe fan-out from (2k+1)²·(k+1) to O(k²) substring rows
-        # per key (measured 3.5× row reduction at k=3 on 16-char
-        # keys: 153 → 44 probe rows/key, PERF.md r9); completeness
-        # pinned by the exhaustive-identity fixture + hypothesis
-        # property tests.
-        .withColumn("_dl", F.length("_k") - F.col("_Lr"))
-        .withColumn(
-            "_plo",
-            F.col("_st")
-            + F.greatest(-F.col("_i"), F.col("_dl") - (F.lit(k) - F.col("_i"))),
-        )
-        .withColumn(
-            "_phi",
-            F.col("_st")
-            + F.least(F.col("_i"), F.col("_dl") + (F.lit(k) - F.col("_i"))),
-        )
-        .withColumn(
-            "_p",
-            F.explode(
-                F.when(
-                    F.least(
-                        F.length("_k") - F.col("_sl") + 1, F.col("_phi")
-                    )
-                    >= F.greatest(F.lit(1), F.col("_plo")),
-                    F.sequence(
-                        F.greatest(F.lit(1), F.col("_plo")),
-                        F.least(
-                            F.length("_k") - F.col("_sl") + 1,
-                            F.col("_phi"),
-                        ),
-                    ),
-                )
-            ),
-        )
-        .select(
-            *block,
-            F.col("_id").alias("_pid"),
-            "_Lr",
-            "_i",
-            F.expr("substr(_k, _p, _sl)").alias("_sub"),
-        )
-    )
+    return index_rows, pairs
 
 
 def passjoin_edit_pairs(
@@ -1784,11 +1719,11 @@ def passjoin_edit_pairs(
     collapse_exact: bool = True,
 ) -> DataFrame:
     """Edit-distance near-pairs with PassJoin SEGMENT indexing (Li,
-    Deng, Feng, ICDE 2011) as the PRIMARY candidate generator — the
-    r8 hot lane (:func:`_hot_pairs_segment`) promoted to first class
-    (VERDICT r8 #5). Same output contract as
-    :func:`edit_distance_pairs` / :func:`qgram_edit_pairs`:
-    ``[a, b, dist]``, a < b, dist ≤ ``max_dist``.
+    Deng, Feng, ICDE 2011) as the PRIMARY candidate generator: the
+    segment self-join of :func:`_segment_pairs` (VERDICT r8 #5). Same
+    output contract as :func:`edit_distance_pairs` /
+    :func:`qgram_edit_pairs`: ``[a, b, dist]``, a < b, dist ≤
+    ``max_dist``.
 
     When to choose over the q-gram count filter: corpora where even
     COLD gram buckets are dense — small alphabets or heavily templated
@@ -1800,48 +1735,25 @@ def passjoin_edit_pairs(
     scripts/passjoin_bench.py): on a dense-gram fixture the segment
     generator beats the count filter on candidate volume and
     wall-clock; on ordinary text the count filter's cheaper index
-    (one row per gram vs (2k+1)·(k+1) probe rows per key) wins —
-    both stay registered, pick by corpus.
+    (one row per gram vs O(k²) probe rows per key) wins — both stay
+    registered, pick by corpus (:func:`fuzzy_pairs_auto` does).
 
     Recall is EXACT at every key length (the lemma needs no minimum:
-    short×short keys — both under k+1 chars, where segments would be
-    empty — route through a residual banded self-join restricted to
-    that slice), where the q-gram bound is vacuous below
+    keys under k+1 chars, where segments would be empty, pair through
+    the residual banded lane), where the q-gram bound is vacuous below
     ``q·(k+1)`` chars. Shuffle shape: every join key is an equi-key
     (block, length, segment#, content) hash join; candidates verify
-    with the banded ``levenshtein(a, b, k)``.
-
-    ``collapse_exact`` (default, probe-gated like the family):
-    verbatim-identical keys collapse per (block, md5(key)) before the
-    segment join and expand back output-identically (intra-group
-    pairs at dist 0 — the raw path emits them through whichever lane
-    the key length selects).
+    with the banded ``levenshtein(a, b, k)``. ``collapse_exact``: see
+    :func:`_edit_pairs` (intra-group pairs at dist 0 — the raw path
+    emits them through whichever lane the key length selects).
     """
-    key = F.col(key) if isinstance(key, str) else key
-    if collapse_exact and not _clone_light(docs, key):
-        # non-null keys only — both raw lanes drop null keys (every
-        # length predicate on NULL is false), so the collapse domain
-        # must match or output would depend on the probe verdict
-        with_key = docs.select(
-            F.col(id_col), *block, key.alias("_ckey")
-        ).filter(key.isNotNull())
-        canon_docs, members = _collapse_by_key(
-            with_key, id_col, ["_ckey"], F.md5(F.col("_ckey")),
-            block=list(block),
-        )
-        raw = passjoin_edit_pairs(
-            canon_docs,
-            F.col("_ckey"),
-            id_col=id_col,
-            block=list(block),
-            max_dist=max_dist,
-            collapse_exact=False,
-        )
-        return _expand_pairs(raw, members, {"dist": F.lit(0)})
-    keyed = docs.select(
-        F.col(id_col).alias("_id"), *block, key.alias("_k")
-    )
-    return _hot_pairs_segment(keyed, list(block), max_dist)
+    block = list(block)
+    index_rows, pairs = _segment_pairs(block, max_dist)
+
+    def raw(keyed: DataFrame) -> DataFrame:
+        return pairs(keyed, index_rows(keyed), keyed)
+
+    return _edit_pairs(docs, key, id_col, block, collapse_exact, raw)
 
 
 def gram_occupancy_probe(
@@ -1865,21 +1777,12 @@ def gram_occupancy_probe(
     global sum/sum-of-squares; the collect is ONE row. The same probe
     answers both decision rules: ``hot_gram_cap`` (enable when capped
     work drops ≳50×) and qgram-vs-PassJoin routing
-    (:func:`fuzzy_pairs_auto`).
+    (:func:`fuzzy_pairs_auto`). ``id_col`` is unused: every key counts.
     """
     key = F.col(key) if isinstance(key, str) else key
+    keyed = docs.select(*block, key.alias("_k")).filter(F.length("_k") >= q)
     occ = (
-        docs.select(*block, key.alias("_k"))
-        .filter(F.length("_k") >= q)
-        .select(
-            *block,
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, length(_k) - {q} + 1), "
-                    f"i -> substring(_k, i, {q}))"
-                )
-            ).alias("_gram"),
-        )
+        _grams(keyed, q, *block)
         .groupBy(*block, "_gram")
         .agg(F.count(F.lit(1)).alias("_occ"))
     )
@@ -1889,13 +1792,9 @@ def gram_occupancy_probe(
     )
     # bounded-collect: one row (global sums over gram buckets)
     row = sums.collect()[0]
-    rows = int(row["rows"] or 0)
-    work = int(row["work"] or 0)
-    return {
-        "rows": rows,
-        "work": work,
-        "mean_occ": (work / rows) if rows else 0.0,
-    }
+    rows, work = int(row["rows"] or 0), int(row["work"] or 0)
+    mean_occ = work / rows if rows else 0.0
+    return {"rows": rows, "work": work, "mean_occ": mean_occ}
 
 
 # qgram-vs-PassJoin routing cutoff on the probe's mean_occ. Round-9/10
@@ -1961,7 +1860,6 @@ def fuzzy_pairs_auto(
     must pin the domain themselves or call passjoin directly (exact
     at every length).
     """
-    key = F.col(key) if isinstance(key, str) else key
     probe = gram_occupancy_probe(docs, key, id_col, list(block), q)
     if probe["mean_occ"] >= dense_occ_cutoff:
         return passjoin_edit_pairs(

@@ -305,8 +305,8 @@ def persist_shared(
     eager: bool = False,
 ) -> DataFrame:
     """Persist a multiply-consumed relation with the storage level the
-    aged-JVM storage×state A/B chose (scripts/q21_persist_bench.py,
-    PERF.md round 8) — the shared policy VERDICT r8 asked for instead
+    aged-JVM storage×state A/B chose (PERF.md "Round 8: q21
+    persist↔GC pinned") — the shared policy VERDICT r8 asked for instead
     of per-site lore:
 
     - ``est_bytes >= floor_bytes`` (best-effort DECOMPRESSED size of
@@ -518,8 +518,8 @@ def write_zordered(
     dimensions), drop the key. Point/range predicates on x OR y then
     skip whole files and row groups via parquet statistics — the
     data-layout lever for 100 TB scans that partitioning by one
-    column can't give both query shapes. Measured in
-    scripts/zorder_bench.py."""
+    column can't give both query shapes. Measured in PERF.md
+    "Z-order layout: measured row-group pruning on both dimensions"."""
     keyed = df.withColumn("_zk", morton_key(x, y))
     part = (
         keyed.repartitionByRange(target_files, "_zk")

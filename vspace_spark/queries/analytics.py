@@ -786,8 +786,8 @@ def vocab_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-member twin per token (``token || '~'`` — may false-positive,
     and genuinely does at this fill ratio). Every bit position, hit,
     and false positive reproduces in ANSI SQL — the runtime-filter
-    cousin of the MEASURED bloom join pruning in
-    scripts/runtime_filter_bench.py (that one uses Spark's native
+    cousin of the MEASURED bloom join pruning in PERF.md "Runtime
+    bloom-filter join pruning" (that one uses Spark's native
     engine-internal filter; this one puts the structure itself under
     the correctness gate).
 
@@ -1450,7 +1450,7 @@ def events_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     by this key clusters rows that are close in BOTH dimensions, so
     parquet min/max statistics prune selective predicates on EITHER
     column (a single-column sort prunes only its leading column);
-    measured in scripts/zorder_bench.py. The key itself is exact
+    measured in PERF.md "Z-order layout". The key itself is exact
     integer shift/mask arithmetic, identical on both engines."""
     from vspace_spark.operators.scale import morton_key
 

@@ -638,9 +638,9 @@ def stream_dedup_docs_passjoin(
     """Incremental EDIT-DISTANCE dedup against a growing PassJoin
     segment index (VERDICT r9 #8 — the text analog of
     ``stream_dedup_docs_incremental``'s signature table): the corpus
-    replays as an 8-file stream; each micro-batch self-joins its own
-    segments, probes its Lemma-3 substrings against the PERSISTED
-    segments of all earlier batches (build once, probe many — the
+    replays as an 8-file stream; each micro-batch probes its Lemma-3
+    substrings against its own segments and the PERSISTED segments of
+    all earlier batches in one join (build once, probe many — the
     index rows are never re-derived), then appends its own segments
     and keys. Exactly oracle-checked because the pair set is
     batch-boundary independent and PassJoin is exact at every key

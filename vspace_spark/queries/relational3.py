@@ -385,8 +385,8 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the three orderkey shuffles dominate; with lineitem and
     orders BUCKETED by orderkey the same plan runs exchange-free
     (``_q21_plan`` takes the inputs directly;
-    scripts/q21_bucket_bench.py measures the layout's effect at the
-    100× replica scale — results in PERF.md)."""
+    PERF.md "Round 5: q21 bucketed layout" measures the layout's
+    effect at the 100× replica scale)."""
     return _q21_plan(
         load_table(spark, sf_dir, "lineitem"),
         load_table(spark, sf_dir, "orders"),
@@ -414,7 +414,7 @@ def _q21_plan(li: DataFrame, orders: DataFrame, supp: DataFrame) -> DataFrame:
     far above the floor.
 
     Storage level is DISK_ONLY, chosen by a storage×JVM-state A/B
-    (scripts/q21_persist_bench.py, PERF.md round 8): fresh-JVM all
+    (PERF.md "Round 8: q21 persist↔GC pinned"): fresh-JVM all
     cache levels tie (~12–21 s at 100×), but after a GC-aging
     preamble (pagerank at 100×) heap-resident levels stay inflated
     EVERY execution (MEMORY_AND_DISK, serialized bytes but still

@@ -118,7 +118,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Spark's default INT96 timestamps carry NO parquet min/max
         # statistics, so every time-range probe scans every row group
-        # regardless of layout (measured in scripts/zorder_bench.py).
+        # regardless of layout (measured: PERF.md "Z-order layout").
         # INT64 micros restores stats-based pruning and is what every
         # other engine (DuckDB included) reads natively.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

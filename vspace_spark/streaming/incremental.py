@@ -27,10 +27,14 @@ the identical dataflow.
 
 Correctness is batch-boundary-INDEPENDENT, which is what makes the
 operators exactly oracle-checkable: a qualifying pair (a < b) is
-found exactly once — in the later endpoint's batch via the index probe
-when the two arrive apart, or via the intra-batch self-join when they
-arrive together — so the union over batches equals the batch pair
-set regardless of how the file source slices the replay.
+found exactly once, in the later endpoint's batch — via the index
+probe when the two arrive apart, or via the intra-batch self-join
+when they arrive together — so the union over batches equals the
+batch pair set regardless of how the file source slices the replay.
+The PassJoin leg does both in one probe: the batch's keys probe the
+batch's own segments together with the stored ones, through the same
+pair function batch PassJoin runs
+(``operators/dedup.py:_segment_pairs``).
 
 Each micro-batch is planned without AQE, on the stream's own session
 only (the caller's session keeps its setting). A micro-batch is a few
@@ -524,116 +528,58 @@ def incremental_passjoin_dedup(
     contract (replay-idempotent like the signature index):
 
     - ``seg``:  the segment-index rows of every ingested key
-      (operators/dedup.py:_segment_index_rows — (length, segment#,
-      content) equi-keys), written ONCE per document at ingest;
+      (``index_rows`` of operators/dedup.py:_segment_pairs —
+      (length, segment#, content) equi-keys), written ONCE per
+      document at ingest;
     - ``keys``: (id, key) for verification and the short-key residual.
 
-    Per batch: intra-batch pairs via the plain segment self-join
-    (:func:`~vspace_spark.operators.dedup._hot_pairs_segment`), then
-    cross pairs by probing the NEW batch's Lemma-3 substrings
-    (``_segment_probe_rows``) against the STORED segments of all
-    earlier batches — the index side is never re-derived, which is
-    the whole point: per-batch candidate cost is probe-rows(batch) ×
-    matched buckets, not |history| re-hashing. Completeness across
-    the batch boundary: a pair (new, old) with |old| ≥ k+1 is found
-    through old's stored segments (one-directional PassJoin is
-    complete — Lemma 3); |old| < k+1 forces |new| ≤ 2k by the length
-    band, so the residual lane joins stored short keys against the
-    batch's ≤ 2k-char keys (length-banded equi-free slice, both sides
-    k-bounded tiny). Union over batches therefore equals the batch
-    :func:`~vspace_spark.operators.dedup.passjoin_edit_pairs` pair
-    set regardless of replay slicing — the oracle-checkable contract.
+    Per batch, ONE call of the batch PassJoin pair function
+    (:func:`~vspace_spark.operators.dedup._segment_pairs`): the batch's
+    keys probe the batch's own segments together with the STORED
+    segments of all earlier batches, and verify against the batch's
+    keys together with the stored ones. The index side is never
+    re-derived, which is the whole point: per-batch candidate cost is
+    probe-rows(batch) × matched buckets, not |history| re-hashing.
+    Completeness: one-directional PassJoin finds every partner of a
+    probe key among the indexed keys — through the partner's segments
+    when it has k+1 chars or more, else through the residual lane
+    (its partners are at most 2k chars by the length band). A pair
+    is therefore found in the batch of its later endpoint (once, after
+    orientation), so the union over batches equals the batch
+    :func:`~vspace_spark.operators.dedup.passjoin_edit_pairs` pair set
+    regardless of replay slicing — the oracle-checkable contract.
     """
-    from vspace_spark.operators.dedup import (
-        _hot_pairs_segment,
-        _segment_index_rows,
-        _segment_probe_rows,
-    )
-
-    k = max_dist
-    dist = F.levenshtein("_kn", "_ko", k)
+    from vspace_spark.operators.dedup import _segment_pairs
 
     def setup(in_dir: str, schema: T.StructType):
+        index_rows, pairs = _segment_pairs([], max_dist)
+        keyed_cols = [F.col("doc_id").alias("_id"), F.col("_k")]
         idt = schema["doc_id"].dataType
-        seg_schema = T.StructType(
-            [
-                T.StructField("_rid", idt),
-                T.StructField("_rlen", T.IntegerType()),
-                T.StructField("_i", T.IntegerType()),
-                T.StructField("_seg", T.StringType()),
-                T.StructField("batch", T.IntegerType()),
-            ]
-        )
-        keys_schema = T.StructType(
-            [
-                T.StructField("_id", idt),
-                T.StructField("_k", T.StringType()),
-                T.StructField("batch", T.IntegerType()),
-            ]
-        )
+        i32, text = T.IntegerType(), T.StringType()
+
+        def read_schema(*cols):
+            return T.StructType(
+                [T.StructField(c, t) for c, t in (*cols, ("batch", i32))]
+            )
 
         def step(batch: DataFrame, earlier: dict | None):
-            keyed = batch.select(
-                F.col("doc_id").alias("_id"), "_k"
-            ).persist()
-            keyed.count()  # bounded work: one micro-batch
-            pairs = _hot_pairs_segment(keyed, [], k)
+            # persisted, not counted: whichever of the pairs job and the
+            # appends touches a partition first computes it
+            keyed = batch.select(*keyed_cols).persist()
+            seg = index_rows(keyed)
+            index, keys = seg, keyed
             if earlier is not None:
-                seg_old, keys_old = earlier["seg"], earlier["keys"]
-                probe_new = _segment_probe_rows(keyed, [], k)
-                cand = (
-                    probe_new.join(
-                        seg_old,
-                        (F.col("_Lr") == F.col("_rlen"))
-                        & (probe_new._i == seg_old._i)
-                        & (F.col("_sub") == F.col("_seg")),
-                    )
-                    .select(
-                        F.col("_pid").alias("_nid"),
-                        F.col("_rid").alias("_oid"),
-                    )
-                    .distinct()
-                )
-                kn = keyed.select(
-                    F.col("_id").alias("_nid"), F.col("_k").alias("_kn")
-                )
-                ko = keys_old.select(
-                    F.col("_id").alias("_oid"), F.col("_k").alias("_ko")
-                )
-                oriented = [
-                    F.least("_nid", "_oid").alias("a"),
-                    F.greatest("_nid", "_oid").alias("b"),
-                    dist.alias("dist"),
-                ]
-                cross_long = (
-                    cand.join(kn, "_nid")
-                    .join(ko, "_oid")
-                    .select(*oriented)
-                    .filter(F.col("dist") >= 0)
-                )
-                # residual: stored key shorter than k+1 (no segments in
-                # the index) — its partners are <= 2k chars by the
-                # length band, so this slice is k-bounded on both sides
-                short_old = ko.filter(F.length("_ko") < k + 1)
-                shortish_new = kn.filter(F.length("_kn") <= 2 * k)
-                cross_short = (
-                    shortish_new.join(
-                        short_old,
-                        F.abs(F.length("_kn") - F.length("_ko")) <= k,
-                    )
-                    .select(*oriented)
-                    .filter(F.col("dist") >= 0)
-                )
-                pairs = pairs.unionByName(cross_long).unionByName(
-                    cross_short
-                )
-            flagged = pairs.groupBy("a", "b").agg(F.min("dist").alias("dist"))
-            return keyed, flagged, {
-                "keys": keyed,
-                "seg": _segment_index_rows(keyed, [], k),
-            }
+                index = seg.unionByName(earlier["seg"].drop("batch"))
+                keys = keyed.unionByName(earlier["keys"].drop("batch"))
+            flagged = pairs(keyed, index, keys)
+            return keyed, flagged, {"keys": keyed, "seg": seg}
 
-        return {"seg": seg_schema, "keys": keys_schema}, step
+        return {
+            "seg": read_schema(
+                ("_rid", idt), ("_rlen", i32), ("_ri", i32), ("_seg", text)
+            ),
+            "keys": read_schema(("_id", idt), ("_k", text)),
+        }, step
 
     replay = docs.select(
         F.col("doc_id"), F.substring(key_col, 1, key_len).alias("_k")
