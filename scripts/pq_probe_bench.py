@@ -30,14 +30,15 @@ sys.path.insert(0, "/root/repo")
 from vspace_spark.functions.vectors import cosine_similarity  # noqa: E402
 from vspace_spark.io.tables import load_table  # noqa: E402
 from vspace_spark.operators.similarity import (  # noqa: E402
-    _cell_dist_structs,
     brute_force_topk,
     brute_force_topk_arrow,
     ivf_pq_encode_arrow,
     ivf_pq_probe,
     ivf_pq_probe_arrow,
+    nearest_cells,
     portable_hyperplanes,
     pq_codebook,
+    pq_codebook_rows,
 )
 from vspace_spark.session import get_spark  # noqa: E402
 
@@ -54,16 +55,10 @@ def probe_cells(queries: DataFrame, centers, n_probe: int):
     return queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("_qv"),
-        F.explode(
-            F.slice(
-                F.array_sort(
-                    _cell_dist_structs(F.col("embedding"), centers)
-                ),
-                1,
-                n_probe,
-            )
-        ).alias("probe"),
-    ).select("query_id", "_qv", F.col("probe.cell").alias("cell"))
+        F.inline(
+            F.slice(nearest_cells(F.col("embedding"), centers), 1, n_probe)
+        ),
+    ).select("query_id", "_qv", "cell")
 
 
 def main() -> None:
@@ -100,9 +95,9 @@ def main() -> None:
         corpus.select(
             "vec_id",
             "embedding",
-            F.array_sort(
-                _cell_dist_structs(F.col("embedding"), centers)
-            )[0]["cell"].alias("cell"),
+            nearest_cells(F.col("embedding"), centers)[0]["cell"].alias(
+                "cell"
+            ),
         ).write.mode("overwrite").parquet(assigned_path)
     assigned = spark.read.parquet(assigned_path)
 
@@ -114,11 +109,7 @@ def main() -> None:
         # data (tests/test_similarity.py) at scan speed — the
         # relational encode's 4096x fan-out took >25 min at 200k
         # vectors in local mode
-        pc_rows = [
-            (r["sub"], r["cid"], list(r["pv"]))
-            for r in pc.collect()  # bounded-collect: m*ksub rows
-        ]
-        ivf_pq_encode_arrow(corpus, pc_rows=pc_rows).write.mode(
+        ivf_pq_encode_arrow(corpus, pc_rows=pq_codebook_rows(pc)).write.mode(
             "overwrite"
         ).parquet(codes_path)
     index = spark.read.parquet(codes_path)
@@ -127,10 +118,7 @@ def main() -> None:
 
     def pc_rows_cached():
         if not _pc_rows:
-            _pc_rows.extend(
-                (r["sub"], r["cid"], list(r["pv"]))
-                for r in pc.collect()  # bounded-collect: m*ksub rows
-            )
+            _pc_rows.extend(pq_codebook_rows(pc))
         return _pc_rows
 
     def raw_ivf_probe():

@@ -5,6 +5,8 @@ properties (identical text → identical signature)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1740,7 +1742,7 @@ def test_agree_semantic_gate_counts_planted_disagreement(
     # clear message instead.
     from vspace_spark.operators.scale import footer_row_count
     from vspace_spark.operators.similarity import (
-        _cell_dist_structs,
+        nearest_cells,
         portable_hyperplanes,
     )
     from vspace_spark.functions.vectors import cosine_similarity
@@ -1748,9 +1750,7 @@ def test_agree_semantic_gate_counts_planted_disagreement(
     emb = load_table(spark, sf_dir, "embeddings")
     n = footer_row_count(emb) or emb.count()
     centers = portable_hyperplanes(64, max(16, n // 512), salt="s")
-    ranked = F.array_sort(
-        _cell_dist_structs(F.col("embedding"), centers)
-    )
+    ranked = nearest_cells(F.col("embedding"), centers)
     assigned = emb.select(
         "vec_id",
         "embedding",
@@ -1833,22 +1833,17 @@ def test_semantic_trained_pinned_pairs_sf0001(spark, sf_dir):
     )
 
 
-@pytest.mark.slow
-def test_semantic_trained_recall_vs_flat_sf01(spark):
-    """The recall bound behind the coarse_nprobe=2 default (VERDICT
-    r13 #4, measured 0.937 vs 0.829 at nprobe=1 in
-    scripts/trained_router_recall_probe.py): the two-level router must
-    retain >= 0.93 of the flat argmin's duplicate edges over the SAME
-    trained codebook on the sf0.1 embeddings. Makes the router default
-    load-bearing instead of folklore — a routing change that quietly
-    drops recall fails here."""
+def _trained_router_recall(spark, sf_dir: str) -> None:
+    """The two-level router must retain >= 0.93 of the flat argmin's
+    duplicate edges over the SAME trained codebook on ``sf_dir``'s
+    embeddings (the bound behind the coarse_nprobe=2 default)."""
     from vspace_spark.operators.dedup import (
         hierarchical_codebook,
         semantic_dedup,
     )
     from vspace_spark.operators.scale import footer_row_count
 
-    emb = load_table(spark, "/root/testdata/sf0.1", "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     n = footer_row_count(emb) or emb.count()
     k = max(16, n // 512)
     fine, coarse_centers, owner = hierarchical_codebook(emb, k)
@@ -1877,3 +1872,23 @@ def test_semantic_trained_recall_vs_flat_sf01(spark):
         f"({len(router & flat)}/{len(flat)} edges) — below the 0.93 "
         "bound the coarse_nprobe=2 default was adopted for"
     )
+
+
+def test_semantic_trained_recall_vs_flat_sf001(spark, sf_dir):
+    """Default-suite twin of the sf0.1 recall test below: the same
+    bound on sf0.01 (27 flat edges and recall 1.0 when this twin was
+    added), so the flat and two-level paths through the one Arrow cell
+    assigner stay checked on every run."""
+    sibling = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    _trained_router_recall(spark, sibling)
+
+
+@pytest.mark.slow
+def test_semantic_trained_recall_vs_flat_sf01(spark, sf_dir):
+    """The recall bound behind the coarse_nprobe=2 default (VERDICT
+    r13 #4, measured 0.937 vs 0.829 at nprobe=1 in
+    scripts/trained_router_recall_probe.py) on the sf0.1 embeddings.
+    Makes the router default load-bearing instead of folklore — a
+    routing change that quietly drops recall fails here."""
+    sibling = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    _trained_router_recall(spark, sibling)

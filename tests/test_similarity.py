@@ -107,12 +107,13 @@ def test_pq_encode_arrow_matches_relational(spark, sf_dir):
         ivf_pq_encode,
         ivf_pq_encode_arrow,
         pq_codebook,
+        pq_codebook_rows,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     pc = pq_codebook(emb)
     exact = sorted(map(tuple, ivf_pq_encode(emb, pc).collect()))
-    pc_rows = [(r["sub"], r["cid"], list(r["pv"])) for r in pc.collect()]
+    pc_rows = pq_codebook_rows(pc)
     fast = sorted(
         map(tuple, ivf_pq_encode_arrow(emb, pc_rows=pc_rows).collect())
     )
@@ -127,13 +128,14 @@ def test_pq_probe_arrow_matches_relational(spark, sf_dir):
         ivf_pq_probe,
         ivf_pq_probe_arrow,
         pq_codebook,
+        pq_codebook_rows,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     pc = pq_codebook(emb)
     index = ivf_pq_encode(emb, pc)
-    pc_rows = [(r["sub"], r["cid"], list(r["pv"])) for r in pc.collect()]
+    pc_rows = pq_codebook_rows(pc)
     exact = sorted(map(tuple, ivf_pq_probe(q, index, pc, k=5).collect()))
     fast = sorted(
         map(tuple, ivf_pq_probe_arrow(q, index, pc_rows, k=5).collect())
@@ -269,15 +271,121 @@ def test_ivf_assign_engine_validation(spark, sf_dir):
     q = emb.filter(F.col("vec_id") < 3)
     with pytest.raises(ValueError, match="unknown assign_engine"):
         ivf_topk(q, emb, assign_engine="numpy").collect()
+
+
+def _jobs_run_by(spark, group: str, build) -> list:
+    """Spark job ids launched while ``build()`` runs (it may raise)."""
+    sc = spark.sparkContext
+    # setJobGroup sets all three; restore them for later tests
+    props = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    prior = {p: sc.getLocalProperty(p) for p in props}
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        for p, v in prior.items():
+            sc.setLocalProperty(p, v)
+    return jobs
+
+
+@pytest.mark.parametrize(
+    "lane",
+    [
+        "ivf_topk",
+        "semantic_dedup",
+        "brute_force_topk_arrow",
+        "ivf_pq_encode_arrow",
+        "ivf_pq_probe_arrow",
+    ],
+)
+def test_arrow_lanes_reject_string_ids(spark, sf_dir, lane):
+    """Every Arrow vector lane carries ids through an int64 pandas
+    column, which re-types digit strings silently; each raises
+    TypeError before any Spark job instead. The string ids sit on the
+    side each lane's own check would otherwise miss: queries for
+    ivf_topk, corpus for brute force, the index for the PQ probe."""
+    from vspace_spark.operators.dedup import semantic_dedup
+    from vspace_spark.operators.similarity import (
+        brute_force_topk_arrow,
+        ivf_pq_encode_arrow,
+        ivf_pq_probe_arrow,
+        ivf_topk,
+        portable_hyperplanes,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
     strid = emb.select(
         F.col("vec_id").cast("string").alias("vec_id"), "embedding"
     )
-    with pytest.raises(TypeError, match="integral"):
-        ivf_topk(
-            strid.filter(F.col("vec_id") < "3"),
-            strid,
-            assign_engine="arrow",
+    build = {
+        "ivf_topk": lambda: ivf_topk(strid, emb, assign_engine="arrow"),
+        "semantic_dedup": lambda: semantic_dedup(
+            strid, portable_hyperplanes(64, 16, salt="s"), engine="arrow"
+        ),
+        "brute_force_topk_arrow": lambda: brute_force_topk_arrow(emb, strid),
+        "ivf_pq_encode_arrow": lambda: ivf_pq_encode_arrow(strid),
+        "ivf_pq_probe_arrow": lambda: ivf_pq_probe_arrow(emb, strid, []),
+    }[lane]
+
+    def must_raise():
+        with pytest.raises(TypeError, match="integral"):
+            build()
+
+    assert _jobs_run_by(spark, f"string_ids_{lane}", must_raise) == []
+
+
+def test_nearest_cells_is_the_left_fold(spark, sf_dir):
+    """Each vector's ``(dist, cell)`` structs are exactly a pure-Python
+    left fold of (x − c)² in double, sorted by (dist, cell): the same
+    IEEE operations in the same order as the ``aggregate`` and the
+    oracle's ``list_sum``."""
+    from vspace_spark.operators.similarity import (
+        nearest_cells,
+        portable_hyperplanes,
+    )
+
+    centers = portable_hyperplanes(64, 16, salt="c")
+    rows = (
+        load_table(spark, sf_dir, "embeddings")
+        .select(
+            "embedding",
+            nearest_cells(F.col("embedding"), centers).alias("got"),
         )
+        .collect()
+    )
+    assert rows
+    for r in rows:
+        want = []
+        for cell, c in enumerate(centers):
+            acc = 0.0
+            for x, y in zip(r.embedding, c):
+                acc += (float(x) - y) * (float(x) - y)
+            want.append((acc, cell))
+        assert [(s.dist, s.cell) for s in r.got] == sorted(want)
+
+
+def test_nearest_cells_expression_size_is_flat_in_k(spark):
+    """The centers ride as one folded literal: the unresolved
+    expression (Spark 4's ``SparkSession.expression`` of the Column)
+    has as many nodes at K=1,024 as at K=16."""
+    from vspace_spark.operators.similarity import (
+        nearest_cells,
+        portable_hyperplanes,
+    )
+
+    def tree_lines(k: int) -> int:
+        col = nearest_cells(
+            F.col("embedding"), portable_hyperplanes(64, k, salt="c")
+        )
+        expr = spark._jsparkSession.expression(col._jc)
+        return len(expr.treeString().splitlines())
+
+    assert tree_lines(16) == tree_lines(1024)
 
 
 def test_refine_codebook_improves_centers_and_keeps_contract(spark):
@@ -395,21 +503,11 @@ def test_lsh_topk_builds_without_a_job(spark, sf_dir):
     """Building the query must launch no Spark job: the default planes
     are aggregated inside the plan, not collected to the driver."""
     emb = load_table(spark, sf_dir, "embeddings")
-    sc = spark.sparkContext
-    # setJobGroup sets all three; restore them for later tests
-    props = (
-        "spark.jobGroup.id",
-        "spark.job.description",
-        "spark.job.interruptOnCancel",
+    jobs = _jobs_run_by(
+        spark,
+        "lsh_topk_build",
+        lambda: lsh_topk(emb.filter(F.col("vec_id") < 10), emb, spark, k=5),
     )
-    prior = {p: sc.getLocalProperty(p) for p in props}
-    sc.setJobGroup("lsh_topk_build", "building lsh_topk")
-    try:
-        lsh_topk(emb.filter(F.col("vec_id") < 10), emb, spark, k=5)
-        jobs = sc.statusTracker().getJobIdsForGroup("lsh_topk_build")
-    finally:
-        for p, v in prior.items():
-            sc.setLocalProperty(p, v)
     assert jobs == []
 
 

@@ -30,13 +30,34 @@ def l2_norm(a: Column) -> Column:
     )
 
 
+def sq_dist(a: Column, b: Column) -> Column:
+    """Σ (aᵢ−bᵢ)² as double: a left-to-right ``aggregate`` from 0.0,
+    bit-identical to DuckDB's ``list_sum(list_transform(...))`` over
+    the same elements (NOTES.md float discipline). ``b`` is double."""
+    return F.aggregate(
+        F.zip_with(
+            a, b, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their L2 norms: computing each
+    norm once per row instead of once per pair is the same expression
+    in the same order, so every score is bit-identical to
+    :func:`cosine_similarity`. NULL (not an error) when either norm is
+    zero: under ANSI mode a bare ``/`` raises divideByZeroError the
+    first time a zero vector appears in data, and a threshold filter
+    on NULL is simply false — the behavior every caller wants for
+    degenerate vectors."""
+    return dot(a, b) / F.nullif(na * nb, F.lit(0.0))
+
+
 def cosine_similarity(a: Column, b: Column) -> Column:
-    """NULL (not an error) when either vector has zero norm: under
-    ANSI mode a bare ``/`` raises divideByZeroError the first time a
-    zero vector appears in data, and a threshold filter on NULL is
-    simply false — the behavior every caller wants for degenerate
-    vectors."""
-    return dot(a, b) / F.nullif(l2_norm(a) * l2_norm(b), F.lit(0.0))
+    """Cosine of ``a`` and ``b``; NULL when either has zero norm."""
+    return cosine_from_norms(a, b, l2_norm(a), l2_norm(b))
 
 
 def l2_normalize(a: Column) -> Column:

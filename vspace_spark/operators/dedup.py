@@ -24,9 +24,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vspace_spark.functions.kernels import as_matrix, nearest_center, router
+from vspace_spark.functions.kernels import as_matrix, nearest_center
 from vspace_spark.functions.text import ngrams_col, tokenize_col
-from vspace_spark.functions.vectors import cosine_similarity
+from vspace_spark.functions.vectors import cosine_from_norms, l2_norm
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -963,15 +963,9 @@ def embedding_near_pairs(
             collapse_exact=False,
         )
         return _expand_pairs(raw, members, {})
-    # Per-vector L2 norm hoisted out of the pair loop (r14, guide
-    # §1.2 — same move as semantic_dedup's fold path):
-    # cosine_similarity folded THREE aggregates per joined pair (dot +
-    # both norms); computing the norm once per SIDE ROW and dividing
-    # by nullif(na*nb, 0) is the identical expression tree in the
-    # identical order, so every threshold decision is bit-identical
+    # Per-vector L2 norm computed once per SIDE ROW, not per joined
+    # pair: cosine_from_norms is bit-identical to cosine_similarity
     # (oracle-pinned via dedup_embedding_cosine).
-    from vspace_spark.functions.vectors import dot, l2_norm
-
     left = embeddings.select(
         *block,
         F.col(id_col).alias("a"),
@@ -992,9 +986,8 @@ def embedding_near_pairs(
         .select(
             "a",
             "b",
-            (
-                dot(F.col("_va"), F.col("_vb"))
-                / F.nullif(F.col("_na") * F.col("_nb"), F.lit(0.0))
+            cosine_from_norms(
+                F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
@@ -1034,9 +1027,12 @@ def semantic_dedup(
     blocked self-join's quadratic term — stays bounded: cost is
     Σ|cell|², linear in N at fixed cell size. The join shuffles on
     the cell id; with the corpus written bucketed by cell the probe
-    side is exchange-free. Per-pair cosine is an interpreted fold —
-    at production scale swap in the Arrow matmul twin per cell
-    (operators/similarity.py:ann_bruteforce pattern).
+    side is exchange-free. The fold engine's per-row work is
+    interpreted: one ``sq_dist`` fold per center in
+    :func:`~vspace_spark.operators.similarity.nearest_cells`, which
+    grows with K, and one cosine fold per pair. ``engine="arrow"``
+    below is the production twin: numpy cell assignment and one Gram
+    matmul per cell.
 
     ``collapse_exact`` (default, probe-gated like the rest of the
     family): verbatim-identical NONZERO vectors collapse per
@@ -1083,7 +1079,10 @@ def semantic_dedup(
     ``spark.catalog.clearCache()`` between batches (the pattern
     streaming/incremental.py uses via localCheckpoint).
     """
-    from vspace_spark.operators.similarity import _cell_dist_structs
+    from vspace_spark.operators.similarity import (
+        _require_integral_ids,
+        nearest_cells,
+    )
 
     # ALL engine/coarse compatibility checks run BEFORE any Spark work
     # (ADVICE r8: an invalid engine='fold' + coarse combination used to
@@ -1092,17 +1091,9 @@ def semantic_dedup(
     if engine not in ("fold", "arrow"):
         raise ValueError(f"unknown engine: {engine}")
     if engine == "arrow":
-        # the arrow path round-trips ids through an int64 pandas column
-        # (mapInPandas schema "_id long") where the fold path works
-        # with any orderable id type — fail loudly up front instead of
-        # erroring inside a worker or silently re-typing digit strings
-        id_type = dict(embeddings.dtypes).get(id_col)
-        if id_type not in ("bigint", "int", "smallint", "tinyint"):
-            raise TypeError(
-                f"semantic_dedup(engine='arrow') requires an integral "
-                f"{id_col!r} (got {id_type}); use engine='fold' for "
-                f"non-integral ids"
-            )
+        _require_integral_ids(
+            "semantic_dedup(engine='arrow')", id_col, embeddings=embeddings
+        )
     if coarse is not None:
         if engine != "arrow":
             raise ValueError(
@@ -1208,27 +1199,18 @@ def semantic_dedup(
         persist_shared,
     )
 
-    from vspace_spark.functions.vectors import dot, l2_norm
-
     # carries the full vector column → the persisted relation is
     # embedding-corpus-sized; est = the source's decompressed bytes.
-    # The vector's L2 NORM is computed HERE, once per vector (r14,
-    # guide §1.2): the in-cell pair filter below used
-    # cosine_similarity(_va, _vb), which folds THREE aggregates per
-    # pair (dot + both norms) — Σ|cell|² pairs × 2 redundant
-    # 64-element norm folds was the dominant term of
-    # agree_dedup_semantic_fast's 17 s fold-lane materialization
-    # (scripts/semantic_gate_decompose.py). dot/(nullif(na*nb, 0)) on
-    # the hoisted norms is the SAME expression tree cosine_similarity
-    # builds — identical operations in identical order, so every
-    # boundary decision is bit-identical (oracle-pinned).
+    # The vector's L2 NORM is computed HERE, once per vector: per-pair
+    # norm folds (Σ|cell|² pairs × 2) were the dominant term of
+    # agree_dedup_semantic_fast's fold-lane materialization
+    # (scripts/semantic_gate_decompose.py), and cosine_from_norms is
+    # bit-identical to cosine_similarity (oracle-pinned).
     assigned = persist_shared(
         embeddings.select(
             F.col(id_col).alias("_id"),
             F.col(vec_col).alias("_v"),
-            F.array_sort(_cell_dist_structs(F.col(vec_col), centers))[0][
-                "cell"
-            ].alias("cell"),
+            nearest_cells(F.col(vec_col), centers)[0]["cell"].alias("cell"),
             l2_norm(F.col(vec_col)).alias("_n"),
         ),
         est_relation_bytes(embeddings),
@@ -1259,9 +1241,8 @@ def semantic_dedup(
         .select(
             "a",
             "b",
-            (
-                dot(F.col("_va"), F.col("_vb"))
-                / F.nullif(F.col("_na") * F.col("_nb"), F.lit(0.0))
+            cosine_from_norms(
+                F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")
             ).alias("_cos"),
         )
         .filter(F.col("_cos") >= threshold)
@@ -1759,7 +1740,6 @@ def passjoin_edit_pairs(
 def gram_occupancy_probe(
     docs: DataFrame,
     key,
-    id_col: str = "doc_id",
     block: list[str] | tuple = (),
     q: int = 3,
 ) -> dict:
@@ -1777,7 +1757,7 @@ def gram_occupancy_probe(
     global sum/sum-of-squares; the collect is ONE row. The same probe
     answers both decision rules: ``hot_gram_cap`` (enable when capped
     work drops ≳50×) and qgram-vs-PassJoin routing
-    (:func:`fuzzy_pairs_auto`). ``id_col`` is unused: every key counts.
+    (:func:`fuzzy_pairs_auto`). Every key counts.
     """
     key = F.col(key) if isinstance(key, str) else key
     keyed = docs.select(*block, key.alias("_k")).filter(F.length("_k") >= q)
@@ -1821,18 +1801,17 @@ def fuzzy_pairs_auto(
     q: int = 3,
     max_dist: int = 3,
     collapse_exact: bool = True,
-    dense_occ_cutoff: float = DENSE_OCC_CUTOFF,
 ) -> DataFrame:
     """Edit-distance near-pairs with the candidate GENERATOR CHOSEN BY
     MEASUREMENT, not lore (VERDICT r9 #4): run
     :func:`gram_occupancy_probe` once, then route —
 
-    - ``mean_occ < dense_occ_cutoff`` (gram buckets genuinely cold:
+    - ``mean_occ < DENSE_OCC_CUTOFF`` (gram buckets genuinely cold:
       natural text, high-entropy keys) → :func:`qgram_edit_pairs`,
       whose index is cheaper to build (one row per gram vs
       (2k+1)·(k+1) probe rows per key) and whose candidate volume
       Σ occ² stays near the true-pair set;
-    - ``mean_occ ≥ dense_occ_cutoff`` (dense grams: small alphabets,
+    - ``mean_occ ≥ DENSE_OCC_CUTOFF`` (dense grams: small alphabets,
       templated ids, tiny word pools — EVERY bucket a quadratic
       candidate source, no cold grams for a skew guard to keep) →
       :func:`passjoin_edit_pairs`, whose segment keys carry an order
@@ -1860,8 +1839,8 @@ def fuzzy_pairs_auto(
     must pin the domain themselves or call passjoin directly (exact
     at every length).
     """
-    probe = gram_occupancy_probe(docs, key, id_col, list(block), q)
-    if probe["mean_occ"] >= dense_occ_cutoff:
+    probe = gram_occupancy_probe(docs, key, list(block), q)
+    if probe["mean_occ"] >= DENSE_OCC_CUTOFF:
         return passjoin_edit_pairs(
             docs, key, id_col=id_col, block=list(block),
             max_dist=max_dist, collapse_exact=collapse_exact,
@@ -1906,31 +1885,11 @@ def _semantic_dedup_arrow_raw(
     measured that this routing is near-chance over a RANDOM fine
     codebook (no shared cluster structure), which is why the portable
     md5-codebook path stays flat and only the trained twin uses it."""
-    centers_rows = [list(map(float, c)) for c in centers]
+    from vspace_spark.operators.similarity import _assign_cells_arrow
+
     th = float(threshold)
-    coarse_rows = None if coarse is None else (
-        [list(map(float, c)) for c in coarse[0]],
-        [int(o) for o in coarse[1]],
-    )
-    nprobe = int(coarse_nprobe)
-    if nprobe < 1:
-        raise ValueError(f"coarse_nprobe must be >= 1, got {nprobe}")
-
-    def assign(batches):
-        import pandas as pd
-
-        route = router(centers_rows, coarse_rows, nprobe)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = as_matrix(pdf["_vin"])
-            yield pd.DataFrame(
-                {
-                    "_id": pdf["_idin"].astype("int64"),
-                    "cell": route(V).astype("int32"),
-                    "_v": list(V),
-                }
-            )
+    if int(coarse_nprobe) < 1:
+        raise ValueError(f"coarse_nprobe must be >= 1, got {coarse_nprobe}")
 
     def cell_pairs(pdf):
         import numpy as _np
@@ -1965,9 +1924,9 @@ def _semantic_dedup_arrow_raw(
             }
         )
 
-    assigned = embeddings.select(
-        F.col(id_col).alias("_idin"), F.col(vec_col).alias("_vin")
-    ).mapInPandas(assign, "_id long, cell int, _v array<double>")
+    assigned = _assign_cells_arrow(
+        embeddings, centers, id_col, vec_col, coarse, coarse_nprobe
+    )
     out = assigned.groupBy("cell").applyInPandas(
         cell_pairs, "_id long, cell int, kept boolean, duplicate_of long"
     )

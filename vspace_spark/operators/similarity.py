@@ -24,7 +24,12 @@ from vspace_spark.functions.kernels import (
     router,
     top_n,
 )
-from vspace_spark.functions.vectors import dot, l2_norm
+from vspace_spark.functions.vectors import (
+    cosine_from_norms,
+    dot,
+    l2_norm,
+    sq_dist,
+)
 
 
 def _top_k(
@@ -39,6 +44,64 @@ def _top_k(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", *keep)
     )
+
+
+_SIDES = {"q": ("query_id", "_qv", "_qn"), "c": ("neighbor_id", "_cv", "_cn")}
+
+
+def _normed(
+    frame: DataFrame, side: str, id_col: str, vec_col: str, *extra
+) -> DataFrame:
+    """One side of a cosine scan, ``[id, vec, norm, *extra]`` named
+    for the query (``"q"``) or corpus (``"c"``) side: the norm is
+    computed once per vector, not once per candidate pair."""
+    i, v, n = _SIDES[side]
+    return frame.select(
+        F.col(id_col).alias(i),
+        F.col(vec_col).alias(v),
+        l2_norm(F.col(vec_col)).alias(n),
+        *extra,
+    )
+
+
+def _cos_top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Rank joined :func:`_normed` sides by their stored-norm cosine."""
+    cos = cosine_from_norms(
+        F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")
+    )
+    return _top_k(
+        pairs.select("query_id", "neighbor_id", cos.alias("_cos")),
+        k,
+        F.desc("_cos"),
+    )
+
+
+def _require_integral_ids(lane: str, id_col: str, **frames) -> None:
+    """Raise before any Spark job unless every frame's ``id_col`` is
+    integral: the Arrow lanes carry ids through an int64 pandas column,
+    which silently re-types digit strings and fails in a worker on any
+    other string. The fold twins take any orderable id type."""
+    for side, frame in frames.items():
+        id_type = dict(frame.dtypes).get(id_col)
+        if id_type not in ("bigint", "int", "smallint", "tinyint"):
+            raise TypeError(
+                f"{lane} requires an integral {id_col!r} on {side} "
+                f"(got {id_type}); use its fold twin for other id types"
+            )
+
+
+def _query_matrix(
+    queries: DataFrame, id_col: str, vec_col: str
+) -> tuple[list[int], list[list[float]]]:
+    """The query batch as plain lists (ids ascending) that an Arrow
+    lane's closure can carry."""
+    rows = (
+        queries.select(F.col(id_col).alias("q"), F.col(vec_col).alias("v"))
+        .orderBy("q")
+        .collect()  # bounded-collect: the query batch (small by contract)
+    )
+    ids = [int(r["q"]) for r in rows]
+    return ids, [[float(x) for x in r["v"]] for r in rows]
 
 
 def brute_force_topk(
@@ -56,34 +119,11 @@ def brute_force_topk(
 
     Returns ``[query_id, neighbor_id, rank]``.
     """
-    # Per-vector norms hoisted out of the Q×N pair loop (r14, guide
-    # §1.2): cosine_similarity folds THREE aggregates per pair (dot +
-    # both norms); computing each side's norm once per ROW and
-    # dividing by nullif(nq*nc, 0) builds the identical expression
-    # tree in the identical order — every score and rank is
-    # bit-identical (oracle-pinned via ann_bruteforce_top5).
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        l2_norm(F.col(vec_col)).alias("_qn"),
+    q = _normed(queries, "q", id_col, vec_col)
+    c = _normed(corpus, "c", id_col, vec_col)
+    return _cos_top_k(
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        l2_norm(F.col(vec_col)).alias("_cn"),
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("_qv"), F.col("_cv"))
-                / F.nullif(F.col("_qn") * F.col("_cn"), F.lit(0.0))
-            ).alias("_cos"),
-        )
-    )
-    return _top_k(scored, k, F.desc("_cos"))
 
 
 def random_hyperplanes(dim: int, bits: int, spark) -> DataFrame:
@@ -170,27 +210,36 @@ def lsh_signature(vec: F.Column, planes: list[list[float]]) -> F.Column:
     return sig
 
 
+def _folded_rows(rows: list) -> F.Column:
+    """``rows`` (float lists) as one ``array<array<double>>`` column:
+    ONE json string that the optimizer folds into a literal array once
+    per query. Building one py4j literal per component instead costs
+    driver time and a plan that grow with ``len(rows) × dim`` (PERF.md
+    "Nearest-cell column"); the values are the same doubles — Python's
+    repr round-trips through the JSON parser exactly."""
+    import json
+
+    return F.from_json(
+        F.lit(json.dumps([[float(x) for x in r] for r in rows])),
+        "array<array<double>>",
+    )
+
+
 def lsh_buckets(
     vec: F.Column, planes: list, bits_per_table: int, n_tables: int
 ) -> F.Column:
     """``array<struct<tbl, bucket>>``, one constant-size expression for
-    any layout. The planes ride as ONE json string that the optimizer
-    folds into a literal once: no ``bits × dim``-node literal tree to
-    build, and no cross-joined planes row (copying it per vector nearly
-    doubled the per-row cost, PERF.md).
+    any layout. The planes ride as one folded literal
+    (:func:`_folded_rows`) — no cross-joined planes row either (copying
+    it per vector nearly doubled the per-row cost, PERF.md).
     Table ``t`` folds its own slice, highest bit first, with
     ``acc*2 + (dot(v, p) > 0)``: ``lsh_signature``'s Σ 2^j·bit_j with
     the same ``dot()``, bit-identical. (Slicing one shared bit array
     instead recomputes it per table: Catalyst does not share values
     across lambda bodies.) A vector whose size is not the planes' dim
     raises — padded null dots would put every vector in bucket 0."""
-    import json
-
     bpt, dim = bits_per_table, len(planes[0])
-    lit = F.from_json(
-        F.lit(json.dumps([[float(x) for x in p] for p in planes])),
-        "array<array<double>>",
-    )
+    lit = _folded_rows(planes)
     buckets = F.transform(
         F.sequence(F.lit(0), F.lit(n_tables - 1)),
         lambda t: F.struct(
@@ -208,32 +257,21 @@ def lsh_buckets(
     return F.when(n != dim, F.raise_error(bad)).otherwise(buckets)
 
 
-def _cell_dist_structs(
-    vec: F.Column, centers: list[list[float]], id_name: str = "cell"
-) -> F.Column:
-    """Squared-L2 distance to each fixed centroid, as an array of
-    (dist, id) structs — ``array_sort(...)[0]`` is then the
-    deterministic argmin (lowest id on exact-double ties), the same
-    order an oracle's ``ORDER BY dist, id`` produces. The fold is a
-    left-to-right ``aggregate`` from 0.0, bit-identical to DuckDB's
-    ``list_sum(list_transform(...))`` (NOTES.md float discipline)."""
-    return F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        F.array(*[F.lit(float(x)) for x in c]),
-                        lambda a, b: (a.cast("double") - b)
-                        * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("dist"),
-                F.lit(i).alias(id_name),
-            )
-            for i, c in enumerate(centers)
-        ]
+def nearest_cells(vec: F.Column, centers: list[list[float]]) -> F.Column:
+    """Every center as a ``(dist, cell)`` struct, nearest first:
+    ``dist`` is the :func:`~vspace_spark.functions.vectors.sq_dist`
+    fold and ``cell`` the center's index, so ``[0]["cell"]`` is the
+    deterministic argmin (lowest cell on exact-double ties) — the
+    order an oracle's ``ORDER BY dist, cell`` produces. The centers
+    ride as one folded literal, so the expression has the same size
+    for any codebook."""
+    return F.array_sort(
+        F.transform(
+            _folded_rows(centers),
+            lambda c, i: F.struct(
+                sq_dist(vec, c).alias("dist"), i.alias("cell")
+            ),
+        )
     )
 
 
@@ -243,47 +281,48 @@ def _assign_cells_arrow(
     id_col: str,
     vec_col: str,
     coarse: "tuple[list[list[float]], list[int]] | None" = None,
+    nprobe: int = 1,
 ) -> DataFrame:
-    """Matmul cell assignment for :func:`ivf_topk` — one numpy
-    ``||v−c||²`` argmin per Arrow batch instead of the interpreted
-    per-row struct fold, yielding ``[neighbor_id, _cv, cell]``.
+    """Matmul cell assignment — one numpy ``||v−c||²`` argmin per Arrow
+    batch instead of the interpreted per-row :func:`nearest_cells`
+    fold, yielding ``[_id, cell, _v]``.
 
     ``coarse`` = (coarse_centers, fine_owner) from
     ``hierarchical_codebook``: two-level routing through the shared
-    :func:`~vspace_spark.functions.kernels.router` — argmin over the Kc
-    coarse centers, then over only the fine centers the winning coarse
-    cell owns (N·(Kc + K/Kc)·D flops instead of N·K·D). IVF probes ONE
-    coarse cell; ``semantic_dedup``'s arrow lane probes
-    ``coarse_nprobe`` (default 2). Meaningful only for codebooks whose
-    two levels share trained cluster structure. Ties break to the
-    lowest cell id (np.argmin takes the first minimum) — the same
-    tie-break as the fold path's struct sort.
+    :func:`~vspace_spark.functions.kernels.router` over the ``nprobe``
+    nearest coarse cells (N·(Kc + nprobe·K/Kc)·D flops instead of
+    N·K·D). IVF probes one coarse cell; ``semantic_dedup``'s arrow lane
+    passes its ``coarse_nprobe`` (default 2). Meaningful only for
+    codebooks whose two levels share trained cluster structure. Ties
+    break to the lowest cell id (np.argmin takes the first minimum) —
+    the same tie-break as the fold path's struct sort.
     """
     centers_rows = [list(map(float, c)) for c in centers]
     coarse_rows = None if coarse is None else (
         [list(map(float, c)) for c in coarse[0]],
         [int(o) for o in coarse[1]],
     )
+    npb = int(nprobe)
 
     def assign(batches):
         import pandas as pd
 
-        route = router(centers_rows, coarse_rows)
+        route = router(centers_rows, coarse_rows, npb)
         for pdf in batches:
             if not len(pdf):
                 continue
             V = as_matrix(pdf["_vin"])
             yield pd.DataFrame(
                 {
-                    "neighbor_id": pdf["_idin"].astype("int64"),
+                    "_id": pdf["_idin"].astype("int64"),
                     "cell": route(V).astype("int32"),
-                    "_cv": list(V),
+                    "_v": list(V),
                 }
             )
 
     return corpus.select(
         F.col(id_col).alias("_idin"), F.col(vec_col).alias("_vin")
-    ).mapInPandas(assign, "neighbor_id long, cell int, _cv array<double>")
+    ).mapInPandas(assign, "_id long, cell int, _v array<double>")
 
 
 def _probe_cells_arrow(
@@ -294,13 +333,13 @@ def _probe_cells_arrow(
     n_probe: int,
 ) -> DataFrame:
     """Top-``n_probe`` nearest cells per query via one numpy matmul —
-    yields ``[query_id, _qv, cell]`` (one row per probed cell). The
-    fold twin (``slice(array_sort(cell_dists))``) builds a K×D literal
-    expression tree that Catalyst must analyze per plan — measured
-    minutes of pure PLAN COMPILE at K=2048 (PERF.md round 9), which is
-    why the arrow engine routes the query side through numpy too.
-    Ties break (dist, cell) ascending like the fold path's struct
-    sort."""
+    yields ``[query_id, cell, _qv]`` (one row per probed cell). The
+    fold twin (``slice(nearest_cells)``) runs one interpreted
+    ``sq_dist`` fold per (query, center): 22 s for 2,000 vectors at
+    K=1,024 on 4 cores, growing with K (PERF.md "Nearest-cell
+    column"), so a large query batch against a large codebook routes
+    through numpy too. Ties break (dist, cell) ascending like the fold
+    path's struct sort."""
     centers_rows = [list(map(float, c)) for c in centers]
     npb = int(n_probe)
 
@@ -487,6 +526,13 @@ def ivf_topk(
     corpus can be written out bucketed by cell so probes become
     partition-pruned scans.
     """
+    if assign_engine not in ("fold", "arrow"):
+        raise ValueError(f"unknown assign_engine: {assign_engine}")
+    if assign_engine == "arrow":
+        _require_integral_ids(
+            "ivf_topk(assign_engine='arrow')", id_col,
+            corpus=corpus, queries=queries,
+        )
     coarse = None
     if centers is None:
         from vspace_spark.operators.dedup import hierarchical_codebook
@@ -513,76 +559,30 @@ def ivf_topk(
                 vec_col=vec_col,
             )
 
-    def cell_dists(vec: F.Column) -> F.Column:
-        return _cell_dist_structs(vec, centers)
-
     if assign_engine == "arrow":
-        # BOTH sides: _assign_cells_arrow and _probe_cells_arrow each
-        # re-type ids with astype('int64') executor-side — a string-id
-        # QUERIES frame would be silently re-typed (digits) or crash
-        # in a worker (non-digits) if only the corpus were checked
-        # (ADVICE r9; the same guard semantic_dedup applies).
-        for side, frame in (("corpus", corpus), ("queries", queries)):
-            id_type = dict(frame.dtypes).get(id_col)
-            if id_type not in ("bigint", "int", "smallint", "tinyint"):
-                raise TypeError(
-                    f"ivf_topk(assign_engine='arrow') requires an "
-                    f"integral {id_col!r} on {side} (got {id_type}); "
-                    f"use assign_engine='fold'"
-                )
-        assigned = _assign_cells_arrow(
-            corpus, centers, id_col, vec_col, coarse
-        )
-    elif assign_engine == "fold":
-        # argmin over the (dist, cell) structs — array_sort's
+        # the query side goes through the same numpy matmul: the fold
+        # probe's per-(query, center) sq_dist folds grow with K
+        cells = _assign_cells_arrow(corpus, centers, id_col, vec_col, coarse)
+        probes = _probe_cells_arrow(queries, centers, id_col, vec_col, n_probe)
+        q = _normed(probes, "q", "query_id", "_qv", "cell")
+        c = _normed(cells, "c", "_id", "_v", "cell")
+    else:
         # (dist, cell) field order gives the deterministic lowest-cell
         # tie-break the fixed-codebook oracle's ORDER BY dist, cell
         # mirrors
-        assigned = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
-            F.array_sort(cell_dists(F.col(vec_col)))[0]["cell"].alias(
-                "cell"
-            ),
+        cells = nearest_cells(F.col(vec_col), centers)
+        q = _normed(
+            queries, "q", id_col, vec_col, F.inline(F.slice(cells, 1, n_probe))
         )
-    else:
-        raise ValueError(f"unknown assign_engine: {assign_engine}")
-
-    if assign_engine == "arrow":
-        # the fold probe below builds a K×D LITERAL expression tree —
-        # at K=2048/D=64 that is ~131k literal nodes and Catalyst
-        # analysis alone takes minutes (PERF.md round 9); the arrow
-        # engine routes the query side through the same numpy matmul
-        q = _probe_cells_arrow(queries, centers, id_col, vec_col, n_probe)
-    else:
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-            F.explode(
-                F.slice(F.array_sort(cell_dists(F.col(vec_col))), 1, n_probe)
-            ).alias("probe"),
-        ).select("query_id", "_qv", F.col("probe.cell").alias("cell"))
-
-    # norms hoisted out of the (query × probed-cell-member) pair loop
-    # (r14, same bit-identical move as brute_force_topk) — applied
-    # AFTER the engine-specific assignment so both the fold and arrow
-    # assignment schemas stay untouched; evaluated once per corpus row
-    # / once per probe row, not per candidate
-    assigned = assigned.withColumn("_cn", l2_norm(F.col("_cv")))
-    q = q.withColumn("_qn", l2_norm(F.col("_qv")))
-    scored = (
-        assigned.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("_qv"), F.col("_cv"))
-                / F.nullif(F.col("_qn") * F.col("_cn"), F.lit(0.0))
-            ).alias("_cos"),
+        c = _normed(
+            corpus, "c", id_col, vec_col, cells[0]["cell"].alias("cell")
         )
+    return _cos_top_k(
+        c.join(F.broadcast(q), "cell").filter(
+            F.col("query_id") != F.col("neighbor_id")
+        ),
+        k,
     )
-    return _top_k(scored, k, F.desc("_cos"))
 
 
 def lsh_topk(
@@ -622,38 +622,22 @@ def lsh_topk(
         lsh_buckets(F.col(vec_col), planes, bits, tables)
     ).alias("sig")
 
-    # norms hoisted out of the candidate loop (r14, same bit-identical
-    # move as brute_force_topk) — computed BEFORE the table explode,
-    # once per VECTOR, not per posting row (the first cut computed
-    # them per posting — `tables`× more folds than necessary, which on
-    # this OR-amplified layout is more folds than the candidates save)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        l2_norm(F.col(vec_col)).alias("_cn"),
-        buckets,
-    ).select("neighbor_id", "_cv", "_cn", "sig.tbl", "sig.bucket")
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        l2_norm(F.col(vec_col)).alias("_qn"),
-        buckets,
-    ).select("query_id", "_qv", "_qn", "sig.tbl", "sig.bucket")
+    # norms computed BEFORE the table explode, once per VECTOR, not
+    # per posting row (`tables`× more folds, which on this OR-amplified
+    # layout is more folds than the candidates save)
+    c = _normed(corpus, "c", id_col, vec_col, buckets).select(
+        "neighbor_id", "_cv", "_cn", "sig.tbl", "sig.bucket"
+    )
+    q = _normed(queries, "q", id_col, vec_col, buckets).select(
+        "query_id", "_qv", "_qn", "sig.tbl", "sig.bucket"
+    )
     candidates = (
         c.join(F.broadcast(q), ["tbl", "bucket"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "_qv", "_cv", "_qn", "_cn")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = candidates.select(
-        "query_id",
-        "neighbor_id",
-        (
-            dot(F.col("_qv"), F.col("_cv"))
-            / F.nullif(F.col("_qn") * F.col("_cn"), F.lit(0.0))
-        ).alias("_cos"),
-    )
-    return _top_k(scored, k, F.desc("_cos"))
+    return _cos_top_k(candidates, k)
 
 
 def pq_codebook(
@@ -724,19 +708,21 @@ def pq_codebook(
     )
 
 
-def _pq_sub_d2(vec: F.Column, sub: int) -> F.Column:
-    # ||vec[sub slice] - pv||^2, left fold — slice start is the pc
-    # row's sub column (relational shape: one row per (vector,
-    # subspace, centroid), no ksub-wide projections)
-    return F.aggregate(
-        F.zip_with(
-            F.slice(vec, F.col("sub") * sub + 1, sub),
-            F.col("pv"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def pq_codebook_rows(pc: DataFrame) -> list[tuple[int, int, list[float]]]:
+    """A :func:`pq_codebook` table as driver-side ``(sub, cid, pv)``
+    rows, the form the Arrow IVF-PQ lanes take."""
+    return [
+        (r["sub"], r["cid"], list(r["pv"]))
+        for r in pc.collect()  # bounded-collect: m*ksub codebook rows
+    ]
+
+
+def _nested_codebook(pc_rows, m: int, ksub: int) -> list:
+    """``pc_rows`` as the m × ksub × (dim/m) nested list of floats."""
+    codebook = [[None] * ksub for _ in range(m)]
+    for s, c, pv in pc_rows:
+        codebook[s][c] = [float(x) for x in pv]
+    return codebook
 
 
 def ivf_pq_encode(
@@ -761,9 +747,7 @@ def ivf_pq_encode(
     with_cell = corpus.select(
         F.col(id_col),
         F.col(vec_col).alias("_v"),
-        F.array_sort(
-            _cell_dist_structs(F.col(vec_col), centers)
-        )[0]["cell"].alias("cell"),
+        nearest_cells(F.col(vec_col), centers)[0]["cell"].alias("cell"),
     )
     # Explode BY SUBSPACE before the ksub-wide codebook join (guide
     # §2.3 — r14): the old shape cross-joined every vector row with
@@ -791,18 +775,15 @@ def ivf_pq_encode(
             )
         ).alias("_s"),
     ).select(id_col, "cell", F.col("_s.sub"), F.col("_s._vs"))
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("_vs"),
-            F.col("pv"),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     enc_long = (
         by_sub.join(F.broadcast(pc), "sub")
-        .select(id_col, "cell", "sub", "cid", d2.alias("_d2"))
+        .select(
+            id_col,
+            "cell",
+            "sub",
+            "cid",
+            sq_dist(F.col("_vs"), F.col("pv")).alias("_d2"),
+        )
         .groupBy(id_col, "cell", "sub")
         .agg(F.min(F.struct("_d2", "cid"))["cid"].alias("cid"))
     )
@@ -863,20 +844,19 @@ def ivf_pq_probe(
     probes = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_v"),
-        F.explode(
-            F.slice(
-                F.array_sort(_cell_dist_structs(F.col(vec_col), centers)),
-                1,
-                n_probe,
-            )
-        ).alias("probe"),
-    ).select("query_id", "_v", F.col("probe.cell").alias("cell"))
+        F.inline(
+            F.slice(nearest_cells(F.col(vec_col), centers), 1, n_probe)
+        ),
+    )
+    # one row per (query, probed cell, subspace, centroid): the slice
+    # start is the pc row's sub column, no ksub-wide projections
+    sub_vec = F.slice(F.col("_v"), F.col("sub") * sub + 1, sub)
     adc = probes.join(F.broadcast(pc)).select(
         "query_id",
         "cell",
         "sub",
         "cid",
-        _pq_sub_d2(F.col("_v"), sub).alias("_qd2"),
+        sq_dist(sub_vec, F.col("pv")).alias("_qd2"),
     )
 
     dist = F.sum(F.when(F.col("sub") == 0, F.col("_qd2")))
@@ -982,13 +962,10 @@ def brute_force_topk_arrow(
 
     Returns ``[query_id, neighbor_id, rank]``.
     """
-    q_rows = (
-        queries.select(F.col(id_col).alias("q"), F.col(vec_col).alias("v"))
-        .orderBy("q")
-        .collect()  # bounded-collect: the query batch (small by contract)
+    _require_integral_ids(
+        "brute_force_topk_arrow", id_col, queries=queries, corpus=corpus
     )
-    q_ids = [int(r["q"]) for r in q_rows]
-    q_mat = [[float(x) for x in r["v"]] for r in q_rows]
+    q_ids, q_mat = _query_matrix(queries, id_col, vec_col)
     kk = int(k)
 
     def score(batches):
@@ -1053,22 +1030,18 @@ def ivf_pq_encode_arrow(
     (tie-free). ``codebook`` takes the m × ksub × sub nested list
     (derive from :func:`pq_codebook` output or pass directly).
     """
-    centers = portable_hyperplanes(dim, n_cells, salt="c")
+    _require_integral_ids("ivf_pq_encode_arrow", id_col, corpus=corpus)
     if codebook is None:
         if pc_rows is None:
-            pc_df = pq_codebook(
-                corpus, id_col=id_col, vec_col=vec_col, m=m, ksub=ksub,
-                dim=dim,
+            pc_rows = pq_codebook_rows(
+                pq_codebook(
+                    corpus, id_col=id_col, vec_col=vec_col, m=m, ksub=ksub,
+                    dim=dim,
+                )
             )
-            pc_rows = [
-                (r["sub"], r["cid"], list(r["pv"]))
-                for r in pc_df.collect()  # bounded-collect: m*ksub rows
-            ]
-        codebook = [[None] * ksub for _ in range(m)]
-        for s, c, pv in pc_rows:
-            codebook[s][c] = [float(x) for x in pv]
+        codebook = _nested_codebook(pc_rows, m, ksub)
     cb = [[list(map(float, v)) for v in sub_cb] for sub_cb in codebook]
-    ctr = [[float(x) for x in c] for c in centers]
+    ctr = portable_hyperplanes(dim, n_cells, salt="c")
     mm, sub = m, dim // m
 
     def encode(batches):
@@ -1136,20 +1109,12 @@ def ivf_pq_probe_arrow(
     vs fold summation on exact ties); agreement with the relational
     probe is asserted in tests/test_similarity.py.
     """
-    sub = dim // m
-    centers = portable_hyperplanes(dim, n_cells, salt="c")
-    q_rows = (
-        queries.select(F.col(id_col).alias("q"), F.col(vec_col).alias("v"))
-        .orderBy("q")
-        .collect()  # bounded-collect: the query batch (small by contract)
+    _require_integral_ids(
+        "ivf_pq_probe_arrow", id_col, queries=queries, index=index
     )
-    codebook = [[None] * ksub for _ in range(m)]
-    for s, c, pv in pc_rows:
-        codebook[s][c] = [float(x) for x in pv]
-    q_ids = [int(r["q"]) for r in q_rows]
-    q_mat = [[float(x) for x in r["v"]] for r in q_rows]
-    ctr = [[float(x) for x in c] for c in centers]
-    cb = [[list(map(float, v)) for v in sub_cb] for sub_cb in codebook]
+    q_ids, q_mat = _query_matrix(queries, id_col, vec_col)
+    ctr = portable_hyperplanes(dim, n_cells, salt="c")
+    cb = _nested_codebook(pc_rows, m, ksub)
     kk, mm, npb = int(k), int(m), int(n_probe)
 
     def probe(batches):

@@ -164,16 +164,13 @@ def agree_ann_ivf_pq_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_pq_probe,
         ivf_pq_probe_arrow,
         pq_codebook,
+        pq_codebook_rows,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     pc = pq_codebook(emb)
-    pc_rows = [
-        (r["sub"], r["cid"], list(r["pv"]))
-        for r in pc.collect()
-        # bounded-collect: m*ksub codebook rows
-    ]
+    pc_rows = pq_codebook_rows(pc)
     # the canonical lane, scored end-to-end: every probed candidate
     # with its ADC distance; rank ≤ 5 of this IS ivf_pq_topk's output.
     # Persisted (guide §5 — r13): scored feeds rel (both exceptAll
@@ -231,7 +228,7 @@ def agree_dedup_semantic_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vspace_spark.operators.dedup import semantic_dedup
     from vspace_spark.operators.scale import footer_row_count
     from vspace_spark.operators.similarity import (
-        _cell_dist_structs,
+        nearest_cells,
         portable_hyperplanes,
     )
 
@@ -285,18 +282,17 @@ def agree_dedup_semantic_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thrown away): the gate's answer is count(diff ANTI-JOIN amb) —
     # when diff is EMPTY (the lanes agree, the designed steady state)
     # that count is 0 for ANY ambiguity set, so the ε-scans below —
-    # TWO further full-corpus K-center assignment passes whose
-    # K×dim-literal codebook trees also cost seconds of driver-side
-    # Catalyst analysis — are dead work. They run only when a real
-    # disagreement exists and the gate must decide whether it is an
-    # ε-tie. Result identical by construction: count(∅ ⟕̸ X) = 0 =
-    # count(∅). (Measured in OPTIMIZATION_r13.md.)
+    # TWO further full-corpus K-center assignment passes — are dead
+    # work. They run only when a real disagreement exists and the gate
+    # must decide whether it is an ε-tie. Result identical by
+    # construction: count(∅ ⟕̸ X) = 0 = count(∅). (Measured in
+    # OPTIMIZATION_r13.md.)
     if diff.isEmpty():
         return diff.agg(F.count(F.lit(1)).alias("disagreements"))
 
     # (a) centroid ε-ties: both candidate cells of any vector whose
     # top-2 exact fold distances tie within ε
-    ranked = F.array_sort(_cell_dist_structs(F.col("embedding"), centers))
+    ranked = nearest_cells(F.col("embedding"), centers)
     center_ties = emb.select(
         ranked[0]["cell"].alias("_c0"),
         ranked[1]["cell"].alias("_c1"),
@@ -311,12 +307,7 @@ def agree_dedup_semantic_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     dcells = diff.select("cell").distinct()
     members = (
         emb.select(F.col("vec_id"), F.col("embedding"))
-        .withColumn(
-            "cell",
-            F.array_sort(_cell_dist_structs(F.col("embedding"), centers))[
-                0
-            ]["cell"],
-        )
+        .withColumn("cell", ranked[0]["cell"])
         .join(F.broadcast(dcells), "cell")
     )
     la = members.select(
@@ -429,7 +420,10 @@ def agree_incr_embedding_arrow(
     from vspace_spark.streaming.incremental import (
         incremental_embedding_dedup,
     )
-    from vspace_spark.operators.similarity import portable_hyperplanes
+    from vspace_spark.operators.similarity import (
+        _folded_rows,
+        portable_hyperplanes,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     # The two replays are INDEPENDENT eager jobs (separate work_dirs,
@@ -470,8 +464,7 @@ def agree_incr_embedding_arrow(
     # endpoints) — with an EMPTY diff (the designed steady state; both
     # lanes are eager localCheckpoints, so this probe is two cheap
     # cached exceptAlls) the anti-joins are empty for ANY exclusion
-    # set, making the 32-plane min-|dot| full-corpus scan (a
-    # 32×dim-literal tree: seconds of Catalyst analysis + an
+    # set, making the 32-plane min-|dot| full-corpus scan (an
     # interpreted 32-dot fold per row) dead work. It runs only when a
     # real pair-set difference needs ε-adjudication. Identical result
     # by construction: count(∅ ⟕̸ X) = 0 = count(∅).
@@ -481,17 +474,11 @@ def agree_incr_embedding_arrow(
     # corpora; derive it from one row to stay corpus-agnostic
     dim = emb.select(F.size("embedding")).first()[0]
     # bounded-collect above: one scalar
-    planes = portable_hyperplanes(dim, 32)
-    min_absdot = F.least(
-        *[
-            F.abs(
-                dot(
-                    F.col("embedding"),
-                    F.array(*[F.lit(float(x)) for x in p]),
-                )
-            )
-            for p in planes
-        ]
+    min_absdot = F.array_min(
+        F.transform(
+            _folded_rows(portable_hyperplanes(dim, 32)),
+            lambda p: F.abs(dot(F.col("embedding"), p)),
+        )
     )
     amb = emb.filter(min_absdot <= F.lit(_EPS))
     material = diff.join(

@@ -217,11 +217,9 @@ def stream_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic-row dropDuplicates — partitioning-invariant.
     stream = stream.repartition(spark.sparkContext.defaultParallelism)
     arriving = with_sigs(stream, "a", "_va")
-    # norms hoisted out of the candidate loop (r14, guide §1.2 — the
-    # same bit-identical rewrite as operators/dedup.py's pair paths):
-    # once per posting row on each side instead of three aggregate
-    # folds per matched candidate
-    from vspace_spark.functions.vectors import dot, l2_norm
+    # norms once per posting row on each side, not three aggregate
+    # folds per matched candidate (bit-identical, oracle-pinned)
+    from vspace_spark.functions.vectors import cosine_from_norms, l2_norm
 
     matched = (
         arriving.withColumn("_na", l2_norm(F.col("_va")))
@@ -231,9 +229,8 @@ def stream_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "a",
             "b",
-            (
-                dot(F.col("_va"), F.col("_vb"))
-                / F.nullif(F.col("_na") * F.col("_nb"), F.lit(0.0))
+            cosine_from_norms(
+                F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")
             ).alias("_c"),
         )
         .filter(F.col("_c") >= 0.4)  # RAW threshold, mirroring the
@@ -808,14 +805,11 @@ def ann_ivf_pq_top5_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_pq_encode_arrow,
         ivf_pq_probe_arrow,
         pq_codebook,
+        pq_codebook_rows,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pc = pq_codebook(emb)
-    pc_rows = [
-        (r["sub"], r["cid"], list(r["pv"]))
-        for r in pc.collect()  # bounded-collect: m*ksub codebook rows
-    ]
+    pc_rows = pq_codebook_rows(pq_codebook(emb))
     index = ivf_pq_encode_arrow(emb, pc_rows=pc_rows)
     return ivf_pq_probe_arrow(
         emb.filter(F.col("vec_id") < 10), index, pc_rows, k=5
