@@ -214,8 +214,8 @@ def _warm_page_cache(path: str) -> int:
 def baseline_gb_per_hour(spark, sf_dir: str, target_gb: float) -> dict:
     """BASELINE.md-comparable throughput: the reference's 6-gram
     vocabulary-gated corpus-statistics pipeline on a corpus replicated
-    to ``target_gb`` of text (see scripts/baseline_bench.py for the
-    full-size variant). The corpus is cached in /tmp across runs; its
+    to ``target_gb`` of text (scripts/baseline_bench.py runs it alone,
+    at a chosen size). The corpus is cached in /tmp across runs; its
     materialization is untimed (the reference's clock also starts from
     on-disk input)."""
     import os as _os

@@ -3,155 +3,36 @@
 The reference's published numbers are end-to-end hours for: vocabulary
 build → corpus n-gram counting (max n = 6, vocabulary-gated) → metadata
 joins → global + per-source term statistics, on an N-GB text corpus
-(4 executors × 8 cores). This script builds a corpus of the requested
-uncompressed-text size by replicating the sf0.1 documents table with
-distinct doc ids, then times the SAME pipeline shape on local[32] and
-prints GB/h.
+(4 executors × 8 cores). This script runs ``bench.py``'s
+``baseline_gb_per_hour`` — the same pipeline shape over the sf0.1
+documents table replicated to the requested uncompressed-text size —
+and prints its record as one JSON line.
 
 Setup (corpus materialization) is untimed — the reference's clock also
 starts from on-disk input. Usage:
 
-    python scripts/baseline_bench.py [target_gb] [max_n]
+    python scripts/baseline_bench.py [target_gb]
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from pyspark.sql import functions as F
-
-from vspace_spark.io.tables import load_table
-from vspace_spark.operators.stats import term_stats
-from vspace_spark.pipelines.corpus_job import combine_corpus_with_sources
+from bench import baseline_gb_per_hour
 from vspace_spark.session import get_spark
 
 
 def main() -> None:
     target_gb = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
-    max_n = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    work = os.environ.get("BASELINE_WORKDIR", "/tmp/baseline_corpus")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     spark = get_spark("baseline-bench")
-
-    base = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source"
-    )
-    stats = base.agg(
-        F.count("*").alias("n"), F.sum(F.length("text")).alias("bytes")
-    ).first()
-    replicas = max(1, int(target_gb * 1e9 / stats.bytes))
-
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    corpus_path = os.path.join(
-        work, f"corpus_{sf_tag}_{stats.n}_{target_gb}gb.parquet"
-    )
-    if not os.path.exists(corpus_path):
-        shutil.rmtree(work, ignore_errors=True)
-        # Repartition the TINY base (MBs) before the broadcast
-        # crossJoin so the fan-out runs as 64 parallel map tasks that
-        # write directly — repartitioning AFTER replication would
-        # funnel the full target_gb through a shuffle (observed: a
-        # single-task 52 GB shuffle write at 50 GB).
-        replicated = (
-            base.repartition(64)
-            .crossJoin(
-                F.broadcast(
-                    spark.range(replicas).select(
-                        F.col("id").alias("replica")
-                    )
-                )
-            )
-            .select(
-                (F.col("doc_id") * replicas + F.col("replica")).alias(
-                    "document_index"
-                ),
-                "text",
-                "source",
-            )
-        )
-        replicated.write.parquet(corpus_path)
-
-    corpus = spark.read.parquet(corpus_path)
-    n_docs = corpus.count()
-    text_gb = n_docs / stats.n * stats.bytes / 1e9
-
-    # vocabulary: base-corpus 1..2-grams with df >= 5 (the gate the
-    # reference applies via its broadcast DAWG)
-    t0 = time.perf_counter()
-    vocab = (
-        term_stats(base, min_n=1, max_n=2)
-        .filter(F.col("document_frequency") >= 5)
-        .select("token")
-        .persist()
-    )
-    n_vocab = vocab.count()
-
-    # Fastest path (term_stats_pandas): tokenize + hash + per-doc
-    # histogram fully vectorized inside the Python worker from raw
-    # text; equivalence with the string path is proven in
-    # tests/test_stats_hashed.py. Both stats groupings come from one
-    # corpus pass — the reference likewise persisted the processed
-    # corpus across its two compute_stats shuffles (base.py:391,
-    # 422-423).
-    from pyspark import StorageLevel
-
-    from vspace_spark.operators.stats import (
-        term_stats_pandas,
-        unigram_dictionary,
-    )
-
-    dictionary = unigram_dictionary(base, extra_vocab=vocab).persist()
-    dictionary.count()
-
-    stats_by_source = term_stats_pandas(
-        corpus,
-        dictionary,
-        id_col="document_index",
-        group_cols=["source"],
-        min_n=1,
-        max_n=max_n,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_source = stats_by_source.count()
-
-    # each doc carries one source → global stats = per-source stats
-    # summed over sources (no second pass over the corpus)
-    n_global = (
-        stats_by_source.groupBy("token")
-        .agg(
-            F.sum("document_frequency").alias("document_frequency"),
-            F.sum("term_frequency").alias("term_frequency"),
-            F.sum("tdsum").alias("tdsum"),
-        )
-        .count()
-    )
-    elapsed = time.perf_counter() - t0
-    stats_by_source.unpersist()
-
-    gb_per_hour = text_gb / (elapsed / 3600)
-    print(
-        json.dumps(
-            {
-                "metric": "baseline_pipeline_gb_per_hour",
-                "value": round(gb_per_hour, 2),
-                "unit": "GB/h",
-                "corpus_gb": round(text_gb, 3),
-                "n_docs": n_docs,
-                "max_n": max_n,
-                "vocab_size": n_vocab,
-                "global_stats_rows": n_global,
-                "source_stats_rows": n_source,
-                "elapsed_sec": round(elapsed, 1),
-                "reference_6gram_1gb": "6.7 GB/h (BASELINE.md)",
-            }
-        )
-    )
+    record = baseline_gb_per_hour(spark, sf_dir, target_gb)
+    print(json.dumps({"metric": "baseline_pipeline_gb_per_hour", **record}))
     spark.stop()
 
 

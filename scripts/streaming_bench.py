@@ -3,7 +3,8 @@
 The batch reference recomputes term statistics per run; this repo
 maintains them incrementally (streaming/corpus.py). This script
 measures that path at corpus scale: the replicated baseline corpus
-(built by scripts/baseline_bench.py, 64 parquet files) replayed as a
+(written by bench.py's baseline phase, which scripts/baseline_bench.py
+runs; 64 parquet files) replayed as a
 rate-limited file stream (``maxFilesPerTrigger`` files per
 micro-batch), through the SAME single stateful aggregation the
 registered ``stream_term_stats`` query uses, into a memory sink in
@@ -12,7 +13,8 @@ count, and — the point — exact parity of the final incremental state
 with a from-scratch batch computation over the same corpus.
 
 Usage: python scripts/streaming_bench.py [target_gb] [files_per_trigger]
-(requires the corpus for target_gb to exist in the baseline cache).
+[hof|pandas] (requires the sf0.1 corpus for target_gb to exist in the
+baseline cache).
 """
 
 from __future__ import annotations
@@ -25,12 +27,13 @@ import uuid
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vspace_spark.functions.text import histogram, tokenize_col
 from vspace_spark.session import get_spark
-from vspace_spark.streaming.corpus import streaming_term_stats_pandas
+from vspace_spark.streaming.corpus import (
+    streaming_term_stats,
+    streaming_term_stats_pandas,
+)
 
 CORPUS_SCHEMA = T.StructType(
     [
@@ -41,27 +44,14 @@ CORPUS_SCHEMA = T.StructType(
 )
 
 
-def term_stats_agg(docs):
-    tokens = tokenize_col("text")
-    ex = docs.select(
-        F.size(tokens).alias("wc"),
-        F.explode(histogram(tokens)).alias("h"),
-    )
-    return ex.groupBy(F.col("h.token").alias("token")).agg(
-        F.count("*").alias("document_frequency"),
-        F.sum("h.tf").alias("term_frequency"),
-        F.sum("wc").alias("tdsum"),
-    )
-
-
 def main() -> None:
     target_gb = float(sys.argv[1]) if len(sys.argv) > 1 else 1.0
     per_trigger = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     mode = sys.argv[3] if len(sys.argv) > 3 else "hof"
-    agg = term_stats_agg if mode == "hof" else streaming_term_stats_pandas
-    work = os.environ.get("BASELINE_WORKDIR", "/tmp/baseline_corpus")
+    agg = streaming_term_stats if mode == "hof" else streaming_term_stats_pandas
+    # the replicated corpus bench.py:baseline_gb_per_hour caches
     corpus_path = os.path.join(
-        work, f"corpus_sf0.1_5000_{target_gb}gb.parquet"
+        "/tmp/bench_baseline_corpus", f"corpus_sf0.1_5000_{target_gb}gb.parquet"
     )
     if not os.path.exists(corpus_path):
         raise SystemExit(
@@ -103,7 +93,7 @@ def main() -> None:
     # established at 1 GB — larger runs verify stream-vs-batch with
     # the same aggregation implementation.
     batch_agg = (
-        term_stats_agg
+        streaming_term_stats
         if (mode == "hof" or target_gb <= 1)
         else streaming_term_stats_pandas
     )

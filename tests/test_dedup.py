@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import arrow_frame
 from pyspark.sql import functions as F
 
 from vspace_spark.io.tables import load_table
@@ -241,7 +242,7 @@ def _degenerate_corpus(spark, n_clones: int = 120):
         (10_000 + j, f"unique{j} solo{j} words{j} here{j} now{j}")
         for j in range(5)
     ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    return arrow_frame(spark, rows, "doc_id long, text string")
 
 
 def test_minhash_hot_bucket_cutoff_bounds_candidate_volume(spark):
@@ -392,7 +393,7 @@ def _assert_minhash_twins_find(spark, case):
     )
 
     rows, planted = case
-    corpus = spark.createDataFrame(rows, "doc_id long, text string")
+    corpus = arrow_frame(spark, rows, "doc_id long, text string")
     for fn in (minhash_lsh_pairs, minhash_lsh_pairs_portable):
         got = {
             (r.a, r.b): r.est_jaccard
@@ -410,7 +411,7 @@ def _assert_simhash_twins_find(spark, case):
     )
 
     rows, planted = case
-    corpus = spark.createDataFrame(rows, "doc_id long, text string")
+    corpus = arrow_frame(spark, rows, "doc_id long, text string")
     for fn in (simhash_near_pairs, simhash_near_pairs_portable):
         got = {(r.a, r.b): r.hamming for r in fn(corpus).collect()}
         for pair in planted:
@@ -922,7 +923,7 @@ def _clone_heavy_corpus(spark):
         + [(16, t2_near)]
         + [(20, "solo alpha beta gamma delta unique text here")]
     )
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    return arrow_frame(spark, rows, "doc_id long, text string")
 
 
 def test_minhash_collapse_matches_raw_uncapped(spark):
@@ -1892,3 +1893,15 @@ def test_semantic_trained_recall_vs_flat_sf01(spark, sf_dir):
     routing change that quietly drops recall fails here."""
     sibling = os.path.join(os.path.dirname(sf_dir), "sf0.1")
     _trained_router_recall(spark, sibling)
+
+
+def test_arrow_planted_frames_keep_the_row_list_schema(spark):
+    """The planted-dup and clone fixtures, built through Arrow, have the
+    schema their tuple-list forms had."""
+    schema = "doc_id long, text string"
+    rows = _FIXED_CASE[0]
+    assert arrow_frame(spark, rows, schema).schema == spark.createDataFrame(
+        rows, schema
+    ).schema
+    for frame in (_degenerate_corpus(spark), _clone_heavy_corpus(spark)):
+        assert frame.schema == spark.createDataFrame([], schema).schema

@@ -37,23 +37,21 @@ PHRASES = ["machine_learning extra ignored", "quick_brown x"]
 COLLECTIONS = ["machine_learning", "brown_fox"]
 
 
-@pytest.fixture(scope="module")
-def job_outputs(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("vspace_job")
-    corpus = root / "corpus.txt"
+def _write_job(root, docs, index_rows, src2sub, phrases, collections, maxngrams):
+    """The reference's five input files plus the INI under ``root``."""
     # documents separated by the sentinel on its own line — the layout
     # the reference's Hadoop record-delimiter reader handles and the
     # line-split fast path cannot (fragments doc 3 at its newline)
-    corpus.write_text(f"\n{RECORD_DELIMITER}\n".join(DOCS))
+    (root / "corpus.txt").write_text(f"\n{RECORD_DELIMITER}\n".join(docs))
     (root / "index.tsv").write_text(
         "\n".join(
             "\t".join(map(str, r + ("m1", "t", "a", "m2", "m3", "m4")))
-            for r in INDEX_ROWS
+            for r in index_rows
         )
     )
-    (root / "src2sub.txt").write_text("\n".join(SRC2SUB))
-    (root / "phrases.txt").write_text("\n".join(PHRASES))
-    (root / "collections.txt").write_text("\n".join(COLLECTIONS))
+    (root / "src2sub.txt").write_text("\n".join(src2sub))
+    (root / "phrases.txt").write_text("\n".join(phrases))
+    (root / "collections.txt").write_text("\n".join(collections))
     (root / "job.conf").write_text(
         textwrap.dedent(
             f"""\
@@ -65,11 +63,19 @@ def job_outputs(spark, tmp_path_factory):
             phrases = phrases.txt
             collections = collections.txt
             outputFolder = {root}/out
-            maxngrams = 2
+            maxngrams = {maxngrams}
             """
         )
     )
-    config = JobConfig.from_ini(str(root / "job.conf"))
+    return JobConfig.from_ini(str(root / "job.conf"))
+
+
+@pytest.fixture(scope="module")
+def job_outputs(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("vspace_job")
+    config = _write_job(
+        root, DOCS, INDEX_ROWS, SRC2SUB, PHRASES, COLLECTIONS, maxngrams=2
+    )
     metrics: dict[str, float] = {}
     outputs = run_job(spark, config, metrics_out=metrics)
     outputs["_metrics"] = metrics
@@ -168,3 +174,111 @@ def test_job_config_splits_honored(spark, tmp_path):
     )
     jc = JobConfig.from_ini(str(conf))
     assert jc.splits == 7
+
+
+# The reference counts every (document, source) row of index ⋈ src2sub
+# (SURVEY.md:173), so a row that repeats multiplies all three measures.
+MULTIPLICITY_DOCS = [
+    "a b a",  # doc 0 — indexed twice under subA
+    "c d",    # doc 1 — subB, whose source line repeats in src2sub
+    "e f",    # doc 2 — no index row
+    "g",      # doc 3 — subZ, absent from src2sub
+]
+MULTIPLICITY_INDEX = [(0, "u0", "subA", 2020), (0, "u0", "subA", 2020),
+                      (1, "u1", "subB", 2020), (3, "u3", "subZ", 2020)]
+MULTIPLICITY_SRC2SUB = ["src0 subA", "src1 subB", "src1 subB"]
+
+
+@pytest.fixture(scope="module")
+def multiplicity_outputs(spark, tmp_path_factory):
+    """The second job, run with a counter on ``tokenized_documents``."""
+    from vspace_spark.operators import stats as stats_mod
+
+    calls = []
+    real = stats_mod.tokenized_documents
+    root = tmp_path_factory.mktemp("vspace_job_multiplicity")
+    config = _write_job(
+        root, MULTIPLICITY_DOCS, MULTIPLICITY_INDEX, MULTIPLICITY_SRC2SUB,
+        ["zz_top"], [], maxngrams=1,
+    )
+    spark.catalog.clearCache()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(
+            stats_mod,
+            "tokenized_documents",
+            lambda *a, **kw: calls.append(1) or real(*a, **kw),
+        )
+        outputs = run_job(spark, config)
+    cached_left = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    read = lambda name, *keys: {  # noqa: E731
+        tuple(r[k] for k in keys): (
+            r.document_frequency, r.term_frequency, r.tdsum
+        )
+        for r in _read(spark, outputs, name).collect()
+    }
+    return {
+        "global": read("global_stats", "token"),
+        "source": read("source_stats", "token", "source"),
+        "tokenize_calls": len(calls),
+        "cached_left": cached_left,
+    }
+
+
+def test_duplicate_index_rows_multiply_every_measure(multiplicity_outputs):
+    source = multiplicity_outputs["source"]
+    # "a b a" twice under subA → src0: df 2, tf 2·2, tdsum 2·3
+    assert source[("a", "src0")] == (2, 4, 6)
+    assert source[("b", "src0")] == (2, 2, 6)
+    # global_stats counts each document once, whatever its index rows
+    assert multiplicity_outputs["global"][("a",)] == (1, 2, 3)
+
+
+def test_repeated_source_line_multiplies_every_measure(multiplicity_outputs):
+    assert multiplicity_outputs["source"][("c", "src1")] == (2, 2, 4)
+
+
+def test_unindexed_and_unmapped_documents(multiplicity_outputs):
+    glob, source = multiplicity_outputs["global"], multiplicity_outputs["source"]
+    # no index row: global only
+    assert glob[("e",)] == (1, 1, 2)
+    # subsource absent from src2sub: global only, no source row
+    assert glob[("g",)] == (1, 1, 1)
+    assert {t for t, _ in source} == {"a", "b", "c", "d"}
+    assert {s for _, s in source} == {"src0", "src1"}
+
+
+def test_job_tokenizes_once_and_releases_its_caches(multiplicity_outputs):
+    assert multiplicity_outputs["tokenize_calls"] == 1
+    assert not multiplicity_outputs["cached_left"]
+
+
+def test_term_statistics_pieces_are_defined_once():
+    """Structural guard, same shape as the MinHash/SimHash one: the
+    three-measure aggregate and the vocabulary LEFT SEMI gate occur
+    ONCE under vspace_spark (operators/stats.py), no module under
+    vspace_spark/ or scripts/ sums a measure outside merge_term_stats,
+    and the old per-source fan-out helper is gone. Every term-statistics
+    lane produces the reference's numbers only while it shares these
+    definitions."""
+    import re
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    once = {
+        "measure aggregate": r'alias\("document_frequency"\)',
+        "vocabulary gate": r'"token","left_semi"',
+    }
+    never = {
+        # (run_job's observed term_frequency total is a metric, not a rollup)
+        "measure rollup": r'sum\("(document_frequency|tdsum)"\)',
+        "fan-out helper": r"combine_corpus_with_sources",
+    }
+    counts = dict.fromkeys([*once, *never], 0)
+    for top in ("vspace_spark", "scripts"):
+        for path in (repo / top).rglob("*.py"):
+            src = re.sub(r"\s+", "", path.read_text())
+            for name, pat in {**once, **never}.items():
+                if top == "scripts" and name in once:
+                    continue
+                counts[name] += len(re.findall(pat, src))
+    assert counts == {**dict.fromkeys(once, 1), **dict.fromkeys(never, 0)}, counts

@@ -146,6 +146,22 @@ def test_training_order_has_no_single_partition_window(spark, sf_dir):
     assert not offenders, offenders
 
 
+_BANNED_OPERATORS = {
+    "CartesianProduct": "all-pairs shuffle join",
+    "BatchEvalPython": "row-at-a-time Python UDF",
+}
+
+
+def _banned_operator_failures(spark, sf_dir, names) -> list[str]:
+    failures: list[str] = []
+    for name in names:
+        plan = formatted_plan(QUERIES[name](spark, sf_dir))
+        for op, why in _BANNED_OPERATORS.items():
+            if op in plan:
+                failures.append(f"{name}: {op} ({why})")
+    return failures
+
+
 @pytest.mark.slow  # >20 s (measured r14): driver verify-window budget
 def test_repo_wide_plan_invariants(spark, sf_dir):
     """Engine-wide physical-plan audit over EVERY registered batch
@@ -158,19 +174,34 @@ def test_repo_wide_plan_invariants(spark, sf_dir):
     batch read); a handful of queries run jobs at build time
     (corpus_job_ini) and are audited via their result plans like the
     rest."""
-    banned = {
-        "CartesianProduct": "all-pairs shuffle join",
-        "BatchEvalPython": "row-at-a-time Python UDF",
-    }
-    failures: list[str] = []
-    for name, fn in QUERIES.items():
-        if name.startswith("stream_"):
-            continue
-        plan = formatted_plan(fn(spark, sf_dir))
-        for op, why in banned.items():
-            if op in plan:
-                failures.append(f"{name}: {op} ({why})")
+    names = [n for n in QUERIES if not n.startswith("stream_")]
+    failures = _banned_operator_failures(spark, sf_dir, names)
     assert not failures, failures
+
+
+def test_term_statistics_plan_invariants(spark, sf_dir):
+    """Default-suite twin of ``test_repo_wide_plan_invariants`` over the
+    term-statistics queries: the same banned operators, at the default
+    sf0.001 (plan shape does not depend on scale)."""
+    names = sorted(
+        n for n in QUERIES if n.startswith("term_stats_")
+    ) + ["vocab_gated_stats", "doc_term_frequencies"]
+    assert "term_stats_incremental_merge" in names
+    failures = _banned_operator_failures(spark, sf_dir, names)
+    assert not failures, failures
+
+
+def test_ivf_fold_lane_evaluates_nearest_cells_once(spark, sf_dir):
+    """The corpus side of ``ann_ivf_fixed_top5`` (the nodes from its
+    scan up to the query side's scan) sorts the per-center distances
+    once per row: no inferred ``isnotnull(cell)`` filter re-evaluates
+    the fold below the projection that computes the cell."""
+    plan = formatted_plan(QUERIES["ann_ivf_fixed_top5"](spark, sf_dir))
+    details = plan.split("\n\n\n", 1)[1]
+    scans = [i for i, part in enumerate(details.split("\n\n"))
+             if part.startswith("(") and ") Scan parquet" in part]
+    corpus_side = "\n\n".join(details.split("\n\n")[scans[0]:scans[1]])
+    assert corpus_side.count("array_sort(") == 1, corpus_side[:3000]
 
 
 def test_no_unbounded_driver_collect_in_engine_source():

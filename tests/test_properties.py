@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import arrow_frame
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
@@ -20,9 +21,8 @@ CORPUS = st.lists(DOC, min_size=1, max_size=8)
 
 
 def _docs_df(spark, texts):
-    return spark.createDataFrame(
-        [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
-    )
+    """``[doc_id, text]``, the position as id."""
+    return arrow_frame(spark, enumerate(texts), "doc_id long, text string")
 
 
 @settings(
@@ -149,9 +149,7 @@ def test_pack_plan_invariants(spark, wcs, budget):
     stream's total length is preserved."""
     from vspace_spark.operators.packing import pack_plan
 
-    df = spark.createDataFrame(
-        [Row(doc_id=i, wc=w) for i, w in enumerate(wcs)]
-    )
+    df = arrow_frame(spark, enumerate(wcs), "doc_id long, wc long")
     rows = {
         r.doc_id: r
         for r in pack_plan(df, budget=budget).collect()
@@ -232,18 +230,6 @@ _FUZZY_KEY = st.text(alphabet="abc", min_size=0, max_size=24)
 _FUZZY_CORPUS = st.lists(_FUZZY_KEY, min_size=2, max_size=12)
 
 
-def _fuzzy_docs(spark, corpus):
-    """``[doc_id, text]``, the position as id. Built from pandas over
-    Arrow, not from a list of Rows: every query stage that reads a
-    Row-list frame re-reads it through a Python worker, several times
-    the cost of the pair query itself at this size."""
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(len(corpus)), "text": corpus})
-    )
-
-
 @settings(
     max_examples=12,
     deadline=None,
@@ -276,7 +262,7 @@ def _assert_qgram_matches_exhaustive(spark, corpus):
     )
 
     q, k = 2, 2
-    docs = _fuzzy_docs(spark, corpus)
+    docs = _docs_df(spark, corpus)
     key = F.col("text")
     got = {
         (r.a, r.b, r.dist)
@@ -387,7 +373,7 @@ def _assert_passjoin_matches_exhaustive(spark, corpus):
     )
 
     k = 3
-    docs = _fuzzy_docs(spark, corpus)
+    docs = _docs_df(spark, corpus)
     key = F.col("text")
     got = {
         (r.a, r.b, r.dist)
@@ -403,3 +389,15 @@ def _assert_passjoin_matches_exhaustive(spark, corpus):
     }
     assert got == want, f"diff: {got ^ want}"
     return want
+
+
+def test_arrow_frames_keep_the_row_list_schemas(spark):
+    """The Arrow-built test frames have the schemas their Row-list
+    forms had."""
+    texts, wcs = ["a b", "", "c"], [3, 1]
+    assert _docs_df(spark, texts).schema == spark.createDataFrame(
+        [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
+    ).schema
+    assert arrow_frame(spark, enumerate(wcs), "doc_id long, wc long").schema == (
+        spark.createDataFrame([Row(doc_id=i, wc=w) for i, w in enumerate(wcs)]).schema
+    )

@@ -574,8 +574,13 @@ def ivf_topk(
         q = _normed(
             queries, "q", id_col, vec_col, F.inline(F.slice(cells, 1, n_probe))
         )
+        # the coalesce makes the cell non-nullable (the folded centers
+        # are never empty), so the join infers no isnotnull(cell)
+        # filter: pushed below this projection, that filter evaluated
+        # the K-center fold a second time per corpus row
         c = _normed(
-            corpus, "c", id_col, vec_col, cells[0]["cell"].alias("cell")
+            corpus, "c", id_col, vec_col,
+            F.coalesce(cells[0]["cell"], F.lit(-1)).alias("cell"),
         )
     return _cos_top_k(
         c.join(F.broadcast(q), "cell").filter(

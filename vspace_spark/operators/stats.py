@@ -24,6 +24,7 @@ Semantics (reference: vspace/pipelines/base.py:192-208):
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -106,32 +107,51 @@ def tokenized_documents(
     # P5 — drop synthetic doc-counter tokens (reference: base.py:378,386).
     ex = ex.filter(~F.col("token").rlike(DOCID_PATTERN))
     if vocabulary is not None:
-        # J3 — gate BEFORE the aggregation, exactly where the reference
+        # gate BEFORE the aggregation, exactly where the reference
         # probed its broadcast DAWG during generation (base.py:385-389):
         # dropped multi-grams must never reach the shuffle. Gating after
         # the per-doc agg measured 4× slower end-to-end at 6-gram scale.
-        unigrams = ex.filter(~F.col("token").contains(" "))
-        multigrams = ex.filter(F.col("token").contains(" ")).join(
-            F.broadcast(vocabulary.select("token")), "token", "left_semi"
-        )
-        ex = unigrams.unionByName(multigrams)
+        ex = vocab_gate(ex, vocabulary)
     return ex.groupBy(id_col, *extra_cols, "wc", "token").agg(
         F.count("*").alias("tf")
     )
 
 
+def vocab_gate(tokens: DataFrame, vocabulary: DataFrame) -> DataFrame:
+    """J3 — the reference's DAWG gate (vspace/pipelines/base.py:385-389)
+    as a broadcast LEFT SEMI join: unigrams always pass, multi-grams
+    pass only if ``vocabulary`` holds them."""
+    multi = F.col("token").contains(" ")
+    return tokens.filter(~multi).unionByName(
+        tokens.filter(multi).join(
+            F.broadcast(vocabulary.select("token")), "token", "left_semi"
+        )
+    )
+
+
+MEASURES = ("document_frequency", "term_frequency", "tdsum")
+
+
+def _measure_aggs() -> list[Column]:
+    """The three A1 measures over per-document ``tf``/``wc`` rows."""
+    return [
+        F.count("*").alias("document_frequency"),
+        F.sum("tf").alias("term_frequency"),
+        F.sum("wc").alias("tdsum"),
+    ]
+
+
 def compute_stats(doc_tokens: DataFrame, group_cols: Sequence[str] = ()) -> DataFrame:
     """A1 — hash aggregation over (token[, *group_cols])
-    (reference: vspace/pipelines/base.py:192-208).
+    (reference: vspace/pipelines/base.py:192-208) of one row per
+    (document, token) with its ``tf`` and the document's ``wc``. Every
+    term-statistics lane ends here, except ``term_stats_pandas``, which
+    applies the same ``_measure_aggs`` to hashed token ids.
 
     Input is ``tokenized_documents`` output (or anything with
     token/tf/wc). One shuffle; partial aggregation map-side.
     """
-    return doc_tokens.groupBy("token", *group_cols).agg(
-        F.count("*").alias("document_frequency"),
-        F.sum("tf").alias("term_frequency"),
-        F.sum("wc").alias("tdsum"),
-    )
+    return doc_tokens.groupBy("token", *group_cols).agg(*_measure_aggs())
 
 
 def term_stats(
@@ -185,12 +205,11 @@ def process_corpus(
     """EP2 composition entry point — the reference's de-facto library
     API ``process_corpus(corpus, normalizer=, tokenizer=, ngram_counter=)``
     (vspace/pipelines/base.py:155-189), re-expressed over DataFrames:
-    ``load_raw_corpus → process_corpus → combine_corpus_with_sources →
-    compute_stats``. The n-gram counting stage is the exploded
-    (doc, token, tf, wc) form rather than an injectable Counter — the
-    part whose physical shape Catalyst must own (SURVEY.md §7); custom
-    normalization/tokenization inject as Column functions, defaulting
-    to the reference's semantics.
+    ``load_raw_corpus → process_corpus → compute_stats``. The n-gram
+    counting stage is the exploded (doc, token, tf, wc) form rather
+    than an injectable Counter — the part whose physical shape Catalyst
+    must own (SURVEY.md §7); custom normalization/tokenization inject
+    as Column functions, defaulting to the reference's semantics.
     """
     return tokenized_documents(
         corpus,
@@ -338,17 +357,10 @@ def term_stats_pandas(
 
     enc = docs.select(id_col, *group_cols, text_col)
     perdoc = enc.mapInPandas(stats_from_text, out_schema)
-    stats = perdoc.groupBy("tid", *group_cols).agg(
-        F.count("*").alias("document_frequency"),
-        F.sum("tf").alias("term_frequency"),
-        F.sum("wc").alias("tdsum"),
-    )
+    # keyed by the hashed id until the dictionary join names the token
+    stats = perdoc.groupBy("tid", *group_cols).agg(*_measure_aggs())
     return stats.join(F.broadcast(dict_df), "tid").select(
-        "token",
-        *group_cols,
-        "document_frequency",
-        "term_frequency",
-        "tdsum",
+        "token", *group_cols, *MEASURES
     )
 
 
@@ -402,19 +414,19 @@ def merge_term_stats(*stats: DataFrame) -> DataFrame:
     (the streaming twin maintains the same invariant incrementally,
     streaming/corpus.py). Group keys are inferred as every non-measure
     column, so the merge works for the global, by-source, and any other
-    parametric grouping unchanged. Map-side partial combine applies;
-    the shuffle is keyed by token like the flagship itself."""
-    measures = ("document_frequency", "term_frequency", "tdsum")
-    df = stats[0]
-    for other in stats[1:]:
-        df = df.unionByName(other)
-    keys = [c for c in df.columns if c not in measures]
-    return df.groupBy(*keys).agg(
-        *[
-            F.sum(m).cast("long").alias(m)
-            for m in measures
-        ]
-    )
+    parametric grouping unchanged, and each measure keeps its input's
+    nullability. Map-side partial combine applies; the shuffle is keyed
+    by token like the flagship itself."""
+    df = reduce(DataFrame.unionByName, stats)
+    keys = [c for c in df.columns if c not in MEASURES]
+    # a sum is nullable even over non-null inputs; the coalesce keeps a
+    # non-null measure (document_frequency, a count) non-null
+    nullable = {f.name: f.nullable for f in df.schema.fields}
+    sums = {
+        m: F.sum(m) if nullable[m] else F.coalesce(F.sum(m), F.lit(0))
+        for m in MEASURES
+    }
+    return df.groupBy(*keys).agg(*[sums[m].cast("long").alias(m) for m in MEASURES])
 
 
 def build_vocabulary(*token_dfs: DataFrame) -> DataFrame:
@@ -441,7 +453,8 @@ def build_vocabulary(*token_dfs: DataFrame) -> DataFrame:
     by token. The per-partition counts pass materializes the
     range-partitioned form, so it is persisted and reused for the
     final join (also guarantees partition ids stay stable between the
-    two phases).
+    two phases). The result comes back persisted and materialized; the
+    caller unpersists it.
     """
     from pyspark.sql import Window
 
@@ -476,7 +489,16 @@ def build_vocabulary(*token_dfs: DataFrame) -> DataFrame:
     off_df = local.sparkSession.createDataFrame(
         offsets, schema="_pid int, _off long"
     )
-    return local.join(F.broadcast(off_df), "_pid").select(
-        "token",
-        (F.col("_rn") - 1 + F.col("_off")).cast("int").alias("tokenid"),
+    # the numbered vocabulary is materialized before the partition-local
+    # relation is released, so the caller owns the only cached relation
+    # this builds (and unpersists it when done)
+    vocabulary = persist_shared(
+        local.join(F.broadcast(off_df), "_pid").select(
+            "token",
+            (F.col("_rn") - 1 + F.col("_off")).cast("int").alias("tokenid"),
+        ),
+        KNOWN_SMALL,
+        eager=True,
     )
+    local.unpersist()
+    return vocabulary

@@ -25,11 +25,18 @@ import configparser
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from vspace_spark.functions.text import normalize_col
 from vspace_spark.io import sinks, sources
-from vspace_spark.operators.stats import build_vocabulary, term_stats
+from vspace_spark.operators.scale import TOKEN_STREAM_EXPANSION, persist_shared
+from vspace_spark.operators.stats import (
+    MEASURES,
+    build_vocabulary,
+    merge_term_stats,
+    term_stats,
+)
 
 
 @dataclass
@@ -71,22 +78,6 @@ class JobConfig:
         )
 
 
-def combine_corpus_with_sources(
-    corpus_stats_input: DataFrame, index: DataFrame, src2sub: DataFrame
-) -> DataFrame:
-    """J1 + J2 + L3 (reference: vspace/pipelines/base.py:211-231):
-    broadcast-join index to the subsource→sources map, explode sources,
-    equi-join onto the corpus by document_index. The sources side is
-    dimension-sized → broadcast; the corpus join shuffles on
-    document_index only."""
-    doc_source = (
-        index.select("document_index", "subsource")
-        .join(F.broadcast(src2sub), "subsource")
-        .select("document_index", F.explode("sources").alias("source"))
-    )
-    return corpus_stats_input.join(doc_source, "document_index")
-
-
 def run_job(
     spark: SparkSession,
     config: JobConfig,
@@ -120,16 +111,12 @@ def run_job(
     sc.setJobGroup("vocabulary", "phrases ∪ collections → distinct → id")
     phrases = sources.load_phrases(spark, config.phrases)
     collections = sources.load_collections(spark, config.collections)
-    vocabulary = build_vocabulary(phrases, collections).persist()
+    vocabulary = build_vocabulary(phrases, collections)
     sink(vocabulary, "vocabulary")
 
     # --- corpus phase (reference: base.py:373-397) ---
     sc.setJobGroup("corpus", "sentinel-split corpus → normalize")
     corpus = sources.load_raw_corpus(spark, config.corpus)
-    from pyspark.sql import Observation
-
-    from vspace_spark.functions.text import normalize_col
-
     corpus_obs = Observation("corpus")
     normalized = (
         corpus.select(
@@ -155,34 +142,47 @@ def run_job(
     src2sub = sources.load_sources(spark, config.src2sub)
 
     # --- stats phase (reference: base.py:418-437) ---
+    # The reference counts each (document, source) row of index ⋈
+    # src2sub. Every measure is additive over documents, so the corpus
+    # is tokenized once, aggregated per (token, subsource list), and both
+    # tables roll up from that: the list keeps the index's multiplicity
+    # (a subsource listed twice counts its document twice, as the join
+    # does) and is null for a document without an index row, which then
+    # counts in global_stats only.
     sc.setJobGroup("stats", "global + per-source term statistics")
+    subsources = index.groupBy("document_index").agg(
+        # bounded-list: one entry per index row of ONE document
+        F.sort_array(F.collect_list("subsource")).alias("subsources")
+    )
+    per_key = persist_shared(
+        term_stats(
+            normalized.join(subsources, "document_index", "left"),
+            id_col="document_index",
+            group_cols=["subsources"],
+            max_n=config.maxngrams,
+            vocabulary=vocabulary,
+        ),
+        # the aggregate is at most the gated token stream of the
+        # normalized text, which the corpus sink has just measured
+        int(TOKEN_STREAM_EXPANSION * (corpus_obs.get["normalized_chars"] or 0)),
+    )
     stats_obs = Observation("global_stats")
-    global_stats = term_stats(
-        normalized,
-        text_col="text",
-        id_col="document_index",
-        min_n=1,
-        max_n=config.maxngrams,
-        vocabulary=vocabulary,
-    ).observe(
+    global_stats = merge_term_stats(per_key.drop("subsources")).observe(
         stats_obs,
         F.count(F.lit(1)).alias("n_terms"),
         F.sum("term_frequency").alias("total_term_occurrences"),
     )
     sink(global_stats, "global_stats")
-
-    with_source = combine_corpus_with_sources(normalized, index, src2sub)
-    source_stats = term_stats(
-        with_source,
-        text_col="text",
-        id_col="document_index",
-        group_cols=["source"],
-        min_n=1,
-        max_n=config.maxngrams,
-        vocabulary=vocabulary,
+    source_stats = merge_term_stats(
+        per_key.select(
+            "token", F.explode("subsources").alias("subsource"), *MEASURES
+        )
+        .join(F.broadcast(src2sub), "subsource")
+        .select("token", F.explode("sources").alias("source"), *MEASURES)
     )
     sink(source_stats, "source_stats", partition_by=["source"])
 
+    per_key.unpersist()
     vocabulary.unpersist()
     normalized.unpersist()
     if metrics_out is not None:

@@ -19,6 +19,7 @@ from vspace_spark.operators.stats import (
     doc_term_frequencies,
     term_stats,
     tokenized_documents,
+    vocab_gate,
 )
 from vspace_spark.queries import query
 
@@ -207,12 +208,7 @@ def vocab_gated_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") >= 20)
         .select("token")
     )
-    gated = toks.filter(~F.col("token").contains(" ")).unionByName(
-        toks.filter(F.col("token").contains(" ")).join(
-            F.broadcast(vocab), "token", "left_semi"
-        )
-    )
-    return compute_stats(gated)
+    return compute_stats(vocab_gate(toks, vocab))
 
 
 @query(

@@ -27,6 +27,7 @@ from vspace_spark.functions.text import (
     histogram,
     tokenize_col,
 )
+from vspace_spark.operators.stats import compute_stats
 
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -81,11 +82,7 @@ def streaming_term_stats(
         F.size(tokens).alias("wc"),
         F.explode(histogram(grams)).alias("h"),
     )
-    return ex.groupBy(F.col("h.token").alias("token")).agg(
-        F.count("*").alias("document_frequency"),
-        F.sum("h.tf").alias("term_frequency"),
-        F.sum("wc").alias("tdsum"),
-    )
+    return compute_stats(ex.select("wc", "h.token", "h.tf"))
 
 
 def streaming_term_stats_pandas(docs: DataFrame) -> DataFrame:
@@ -139,11 +136,6 @@ def streaming_term_stats_pandas(docs: DataFrame) -> DataFrame:
     docs = docs.repartition(
         docs.sparkSession.sparkContext.defaultParallelism
     )
-    perdoc = docs.mapInPandas(
-        histogram_batches, "token string, tf long, wc long"
-    )
-    return perdoc.groupBy("token").agg(
-        F.count("*").alias("document_frequency"),
-        F.sum("tf").alias("term_frequency"),
-        F.sum("wc").alias("tdsum"),
+    return compute_stats(
+        docs.mapInPandas(histogram_batches, "token string, tf long, wc long")
     )
